@@ -55,7 +55,7 @@ from trial_submission_studio_spark.operators.sequence import (
     duplicate_sequence_counts,
 )
 from trial_submission_studio_spark.operators.similarity import brute_force_topk
-from trial_submission_studio_spark.sources.local import values_df
+from trial_submission_studio_spark.sources.local import sql_literal, values_df
 from trial_submission_studio_spark.operators.textstats import (
     quality_score,
     stopword_ratio,
@@ -139,7 +139,7 @@ def _literal_df(spark: SparkSession, rows: list, schema: str) -> DataFrame:
     is pure waste. Values stay bit-identical: ints/longs are SQL
     integer literals, doubles route through ``CAST('<repr>' AS
     DOUBLE)`` (Python repr round-trips doubles exactly; the cast is
-    correctly rounded), strings are backslash-then-quote escaped.
+    correctly rounded), strings go through ``sources.local.sql_literal``.
 
     ``schema`` is the same "name type, ..." string createDataFrame
     took; supported types: int, long/bigint, double, float, string,
@@ -160,8 +160,7 @@ def _literal_df(spark: SparkSession, rows: list, schema: str) -> DataFrame:
         if typ == "BOOLEAN":
             return "TRUE" if v else "FALSE"
         if typ == "STRING":
-            s = str(v).replace("\\", "\\\\").replace("'", "\\'")
-            return f"'{s}'"
+            return sql_literal(str(v))
         return f"CAST({int(v)} AS {typ})"
 
     structs = ", ".join(

@@ -414,6 +414,30 @@ def test_xpt_golden_bytes(spark, tmp_path):
     assert digest == GOLDEN_XPT_SHA256, f"XPT bytes changed: {digest}"
 
 
+def test_xpt_fast_fetch_failure_falls_back_byte_identical(spark, tmp_path, monkeypatch):
+    """The partition fetch rides a pyspark-internal helper; when its
+    first fetch fails for any reason, write_xpt refetches through the
+    public runJob path and writes the same bytes."""
+    import pyspark.rdd
+
+    df = values_df(spark, [("A", 1.0), ("B", None), ("C", -2.5)], "C string, N double")
+    vars_ = [XptVariable("C", "Char var", False, 1), XptVariable("N", "Num var", True)]
+    fast = tmp_path / "fast.xpt"
+    assert write_xpt(df.orderBy("C"), str(fast), vars_, "G", "Golden") == 3
+
+    calls = []
+
+    def moved(*args, **kwargs):
+        calls.append(args)
+        raise RuntimeError("pyspark internal helper changed")
+
+    monkeypatch.setattr(pyspark.rdd, "_load_from_socket", moved)
+    slow = tmp_path / "slow.xpt"
+    assert write_xpt(df.orderBy("C"), str(slow), vars_, "G", "Golden") == 3
+    assert calls, "the fast path was not taken"
+    assert slow.read_bytes() == fast.read_bytes()
+
+
 def test_xpt_read_roundtrip(spark, tmp_path):
     """read_xpt inverts write_xpt: names, labels-as-types, trimmed
     chars (blank -> NULL), IBM-float numerics incl. missing, negative

@@ -165,78 +165,6 @@ def test_corrupt_and_truncated_streams_never_decode_garbage():
     assert pcm.size % 1152 == 0
 
 
-def test_audio_features_decode_mp3_natively(spark):
-    """Spark-side integration: audio_features rows for MP3 payloads
-    carry the real sample rate/duration (not fakes, not NULLs), and
-    an unregistered-table stream quarantines under on_error='null'."""
-    from trial_submission_studio_spark.operators.multimodal import (
-        audio_features,
-    )
-
-    good = encode_mp3_tones(44100, lines=((40, 0.6),), n_frames=8)
-    bad = encode_mp3_tones(44100, lines=((40, 0.6),), n_frames=2, _table_select=24)
-    df = spark.createDataFrame(
-        [(1, bytearray(good)), (2, bytearray(bad))],
-        "media_id long, payload binary",
-    )
-    rows = {
-        r["media_id"]: r
-        for r in audio_features(df, on_error="null").collect()
-    }
-    assert rows[1]["sample_rate"] == 44100
-    assert rows[1]["n_channels"] == 1
-    assert rows[1]["duration_ms"] == int(round(1000 * 8 * 1152 / 44100))
-    assert rows[1]["rms"] is not None and rows[1]["rms"] > 0.1
-    assert rows[2]["sample_rate"] is None  # quarantined, job alive
-
-
-def test_audio_fingerprint_survives_transcode(spark):
-    """Near-dup detection across a re-encode: the same tone stack
-    encoded at different gains and bitrates (the transcode proxy
-    available without a psychoacoustic encoder) fingerprints within
-    the Hamming band, while different content stays far."""
-    from trial_submission_studio_spark.operators.multimodal import (
-        audio_fingerprint,
-    )
-
-    tones = ((30, 1.0), (75, 0.7), (140, 0.5))
-    a = encode_mp3_tones(44100, lines=tones, n_frames=10, bitrate_kbps=128)
-    b = encode_mp3_tones(44100, lines=tones, n_frames=10, bitrate_kbps=192)
-    c = encode_mp3_tones(
-        44100, lines=tuple((l, a_ * 0.5) for l, a_ in tones), n_frames=10
-    )
-    other = encode_mp3_tones(44100, lines=((300, 1.0),), n_frames=10)
-    df = spark.createDataFrame(
-        [(1, bytearray(a)), (2, bytearray(b)), (3, bytearray(c)), (4, bytearray(other))],
-        "media_id long, payload binary",
-    )
-    fps = {
-        r["media_id"]: r["afp"]
-        for r in audio_fingerprint(df).collect()
-    }
-
-    def ham(x, y):
-        return bin(x ^ y).count("1")
-
-    assert ham(fps[1], fps[2]) <= 8   # bitrate change: near-dup
-    assert ham(fps[1], fps[3]) <= 8   # gain change: near-dup
-    assert ham(fps[1], fps[4]) > 10   # different content: far
-
-
-def test_probe_media_reports_mp3_duration(spark):
-    from trial_submission_studio_spark.operators.multimodal import probe_media
-
-    blob = encode_mp3_tones(44100, lines=((40, 0.5),), n_frames=10)
-    df = spark.createDataFrame(
-        [(1, "tone.mp3", "audio", bytearray(blob))],
-        "media_id long, path string, kind string, payload binary",
-    )
-    row = probe_media(df).collect()[0]
-    assert row["mime"] == "audio/mpeg"
-    # exact per-frame header walk (not the CBR filesize estimate)
-    assert row["duration_ms"] == int(round(1000 * 10 * 1152 / 44100))
-
-
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -266,58 +194,6 @@ def test_decode_survives_arbitrary_bit_corruption(flips, data):
     except NotImplementedError:
         return
     assert got is None or (len(got) == 3 and got[2].ndim == 1)
-
-
-def _adts_stream(n_frames=5, sr_idx=4, payload_len=20):
-    """Minimal valid AAC-ADTS framing (headers + zero payloads)."""
-    out = bytearray()
-    flen = 7 + payload_len
-    for _ in range(n_frames):
-        b = bytearray(7)
-        b[0] = 0xFF
-        b[1] = 0xF1  # MPEG-4, layer 00, no CRC
-        b[2] = (1 << 6) | (sr_idx << 2)  # AAC-LC, sample-rate index
-        b[3] = (2 << 6) | ((flen >> 11) & 0x03)  # stereo config
-        b[4] = (flen >> 3) & 0xFF
-        b[5] = ((flen & 0x07) << 5) | 0x1F
-        b[6] = 0xFC
-        out += b + bytes(payload_len)
-    return bytes(out)
-
-
-def test_probe_media_aac_adts_header_walk(spark):
-    """AAC-ADTS classification + exact header-walk duration (1024
-    samples per frame) without touching payload bytes. This stream's
-    zero-byte payloads are NOT a valid raw_data_block (no END
-    element), so the r12 AAC decoder (operators/aac.py) rejects it
-    and audio_features quarantines under on_error='null' — decodable
-    conformant streams are covered by tests/test_aac.py."""
-    from trial_submission_studio_spark.operators.multimodal import (
-        audio_features,
-        probe_media,
-    )
-
-    blob = _adts_stream(n_frames=10, sr_idx=4)  # 44100
-    df = spark.createDataFrame(
-        [(1, "clip.aac", "audio", bytearray(blob))],
-        "media_id long, path string, kind string, payload binary",
-    )
-    row = probe_media(df).collect()[0]
-    assert row["mime"] == "audio/aac"
-    assert row["duration_ms"] == int(round(1000 * 10 * 1024 / 44100))
-
-    feats = audio_features(
-        df.select("media_id", "payload"), on_error="null"
-    ).collect()[0]
-    assert feats["sample_rate"] is None  # honest quarantine
-
-    # an MP3 frame (layer bits 01) must NOT classify as ADTS
-    mp3_blob = encode_mp3_tones(44100, lines=((40, 0.5),), n_frames=2)
-    df2 = spark.createDataFrame(
-        [(2, "t.mp3", "audio", bytearray(mp3_blob))],
-        "media_id long, path string, kind string, payload binary",
-    )
-    assert probe_media(df2).collect()[0]["mime"] == "audio/mpeg"
 
 
 def test_short_block_roundtrip_and_subblock_gain():
@@ -525,38 +401,6 @@ def test_count1_region_decodes_with_both_tables():
     with pytest.raises(ValueError, match="above the big-value region"):
         encode_mp3_tones(44100, lines=((10, 0.4),), n_frames=1,
                          count1_lines=(4,))
-
-
-def test_large_table_stream_through_audio_fingerprint(spark):
-    """The r11 verdict's 'table-13-style stream' criterion: a
-    multi-magnitude spectrum coded through the 16x16 big-value table
-    (the same decode path shape tables 13/16/24 drive) survives the
-    Spark audio_fingerprint operator and near-dup-matches its
-    table-1-codable unit-magnitude re-encode at a different bitrate."""
-    from trial_submission_studio_spark.operators.multimodal import (
-        audio_fingerprint,
-    )
-
-    tones = ((30, 0.02), (75, 0.014), (140, 0.01))
-    rich = encode_mp3_tones(
-        44100, lines=tones, n_frames=10, _table_select=15,
-        line_magnitudes={30: 9, 75: 5, 140: 3},
-        count1_lines=(300, 304),
-    )
-    other = encode_mp3_tones(44100, lines=((400, 1.0),), n_frames=10)
-    rich2 = encode_mp3_tones(
-        44100, lines=tones, n_frames=10, bitrate_kbps=192,
-        _table_select=15, line_magnitudes={30: 9, 75: 5, 140: 3},
-        count1_lines=(300, 304),
-    )
-    df = spark.createDataFrame(
-        [(1, bytearray(rich)), (2, bytearray(rich2)), (3, bytearray(other))],
-        "media_id long, payload binary",
-    )
-    fps = {r["media_id"]: r["afp"] for r in audio_fingerprint(df).collect()}
-    ham = lambda x, y: bin(x ^ y).count("1")  # noqa: E731
-    assert ham(fps[1], fps[2]) <= 8
-    assert ham(fps[1], fps[3]) > 10
 
 
 def test_per_region_table_selection_decodes_identically():

@@ -1,5 +1,5 @@
-"""CSV ingest, items-metadata role detection, multimodal plumbing,
-streaming parity, and hypothesis property tests."""
+"""CSV ingest, items-metadata role detection, streaming parity, and
+hypothesis property tests."""
 
 import codecs
 import os
@@ -11,11 +11,6 @@ from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from trial_submission_studio_spark.functions.duration import normalize_duration_str
-from trial_submission_studio_spark.operators.multimodal import (
-    image_features,
-    media_stats,
-    sample_frames,
-)
 from trial_submission_studio_spark.sources import read_source_csv
 from trial_submission_studio_spark.sources.csv_reader import detect_encoding, list_csv_files
 from trial_submission_studio_spark.sources.items_metadata import detect_roles, load_items_metadata
@@ -112,178 +107,6 @@ def test_items_role_detection(spark, tmp_path):
     assert meta.items["SUBJID"].content_length == 8
 
 
-def test_multimodal_plumbing(spark):
-    media = values_df(
-        spark,
-        [
-            (1, "image", b"\xff\xd8fakejpeg", "image/jpeg", 640, 480, None),
-            (2, "video", b"\x00fakemp4", "video/mp4", 1280, 720, 3500),
-        ],
-        "media_id bigint, kind string, payload binary, mime string, "
-        "width int, height int, duration_ms bigint",
-    )
-    feats = image_features(media.filter("kind = 'image'"), dim=8, deterministic_fake=True)
-    row = feats.first()
-    assert row["feat_dim"] == 8 and len(row["feat"]) == 8
-    # deterministic: same payload -> same features on re-run
-    again = image_features(media.filter("kind = 'image'"), dim=8, deterministic_fake=True)
-    assert again.first()["feat"] == row["feat"]
-
-    frames = sample_frames(media.filter("kind = 'video'"), every_ms=1000, deterministic_fake=True)
-    assert frames.count() == 3  # 3500ms / 1000ms
-    stats = {r["kind"]: r for r in media_stats(media).collect()}
-    assert stats["image"]["n"] == 1 and stats["video"]["avg_duration_ms"] == 3500.0
-
-
-def test_multimodal_real_image_codecs(spark):
-    """REAL PPM/BMP decode: features reflect actual pixel content,
-    and nearest-neighbor resize round-trips through the PPM codec."""
-    import numpy as np
-
-    from trial_submission_studio_spark.operators.multimodal import (
-        encode_ppm,
-        image_resize,
-    )
-
-    red = np.zeros((4, 6, 3), dtype=np.uint8)
-    red[:, :, 0] = 255  # solid red 6x4
-    ppm = encode_ppm(red)
-    # same image as a bottom-up 24-bit BMP (BGR, rows padded to 4B)
-    import struct
-
-    w, h = 6, 4
-    stride = (w * 3 + 3) & ~3
-    px = bytearray()
-    for _ in range(h):
-        row = bytes([0, 0, 255]) * w  # BGR red
-        px += row + b"\x00" * (stride - len(row))
-    bmp = (
-        b"BM" + struct.pack("<IHHI", 54 + len(px), 0, 0, 54)
-        + struct.pack("<IiiHHIIiiII", 40, w, h, 1, 24, 0, len(px), 0, 0, 0, 0)
-        + bytes(px)
-    )
-    media = values_df(
-        spark,
-        [(1, ppm), (2, bmp)],
-        "media_id bigint, payload binary",
-    )
-    feats = {r["media_id"]: r["feat"] for r in image_features(media, dim=16).collect()}
-    for mid in (1, 2):
-        f = feats[mid]
-        assert abs(f[2] - 1.0) < 1e-9  # mean R = 255/255
-        assert f[3] == 0.0 and f[4] == 0.0  # no G/B
-        assert abs(f[0] - 6 / 4096) < 1e-9 and abs(f[1] - 4 / 4096) < 1e-9
-    assert feats[1] == feats[2]  # same pixels, either container
-
-    small = image_resize(media, 3, 2).collect()
-    for r in small:
-        assert (r["width"], r["height"]) == (3, 2)
-        assert r["payload"].startswith(b"P6\n3 2\n255\n")
-        body = r["payload"].split(b"255\n", 1)[1]
-        assert body == bytes([255, 0, 0]) * 6  # still solid red
-
-
-def test_multimodal_png_roundtrip(spark):
-    """Stdlib PNG codec: mixed-filter encode (a row per filter type
-    None/Sub/Up/Average/Paeth) → executor-side decode reproduces the
-    exact pixels through image_resize's PPM re-encode, and
-    image_features sees the real channel means."""
-    import numpy as np
-
-    from trial_submission_studio_spark.operators.multimodal import (
-        encode_png,
-        image_resize,
-        probe_media,
-    )
-
-    rng = np.random.default_rng(42)
-    img = rng.integers(0, 256, (10, 5, 3), dtype=np.uint8)
-    png = encode_png(img, mixed_filters=True)
-    media = values_df(
-        spark, [(1, png)], "media_id bigint, payload binary"
-    )
-
-    # identity-size resize re-encodes the decoded pixels as PPM:
-    # byte-exact pixel recovery through the executor-side kernel
-    out = image_resize(media, 5, 10).collect()[0]
-    assert out["payload"] == b"P6\n5 10\n255\n" + img.tobytes()
-
-    f = image_features(media, dim=16).collect()[0]["feat"]
-    for ch in range(3):
-        assert abs(f[2 + ch] - img[:, :, ch].mean() / 255.0) < 1e-6
-
-    probed = probe_media(
-        media.withColumn("path", F.lit("mem://x.png"))
-    ).collect()[0]
-    assert (probed["kind"], probed["mime"]) == ("image", "image/png")
-    assert (probed["width"], probed["height"]) == (5, 10)
-
-
-def test_near_duplicate_images(spark):
-    """Image near-dup composition: two nearly-identical PNGs pair up,
-    a different image and a corrupt payload do not; corrupt records
-    are quarantined, not fatal."""
-    import numpy as np
-
-    from trial_submission_studio_spark.operators.multimodal import (
-        encode_png,
-        near_duplicate_images,
-    )
-
-    rng = np.random.default_rng(9)
-    base = rng.integers(0, 256, (16, 16, 3), dtype=np.uint8)
-    tweaked = base.copy()
-    tweaked[0, 0] = (tweaked[0, 0].astype(int) + 3).clip(0, 255).astype(np.uint8)
-    other = rng.integers(0, 256, (16, 16, 3), dtype=np.uint8)
-    media = values_df(
-        spark,
-        [
-            (1, encode_png(base)),
-            (2, encode_png(tweaked)),
-            (3, encode_png(other)),
-            (4, b"\x89PNG-corrupt"),
-        ],
-        "media_id bigint, payload binary",
-    )
-    pairs = {
-        (r["id_a"], r["id_b"])
-        for r in near_duplicate_images(media, threshold=0.999).collect()
-    }
-    assert pairs == {(1, 2)}
-
-
-def test_multimodal_truncated_payloads_never_raise(spark):
-    """Corrupt/truncated containers must degrade, not abort the job:
-    probe_media classifies by magic with NULL metadata, image_resize
-    passes NULL through — one bad record in a 100 TB scan cannot fail
-    the task (code-review regression: the PNG/GIF/JPEG branches used
-    to raise struct errors on truncation)."""
-    from trial_submission_studio_spark.operators.multimodal import (
-        image_resize,
-        probe_media,
-    )
-
-    bad = [
-        (1, b"GIF89a\x00\x00"),                      # truncated LSD
-        (2, b"\x89PNG\r\n\x1a\n\x00\x00\x00\x0d"),   # truncated IHDR
-        (3, b"\xff\xd8\xff\xda\x00\x04\x01\x00"),    # SOS before SOF
-        (4, b"fLaC\x00"),                            # truncated STREAMINFO
-        (5, b"BM\x00"),                              # truncated BMP
-    ]
-    media = values_df(spark, bad, "media_id bigint, payload binary")
-    probed = {
-        r["media_id"]: (r["kind"], r["width"], r["duration_ms"])
-        for r in probe_media(media.withColumn("path", F.lit("m"))).collect()
-    }
-    assert probed[1] == ("image", None, None)   # GIF magic, no dims
-    assert probed[2] == ("image", None, None)
-    assert probed[3] == ("image", None, None)
-    assert probed[4][0] == "audio" and probed[4][2] is None
-    assert probed[5][0] == "binary"             # invalid BMP header
-    resized = {r["media_id"]: r["payload"] for r in image_resize(media, 2, 2).collect()}
-    assert all(v is None for v in resized.values())
-
-
 def test_top_ngram_short_docs_omitted(spark):
     """Docs with fewer than n tokens yield no gram rows instead of a
     slice crash (code-review regression: sequence(0, size-n) counted
@@ -297,400 +120,6 @@ def test_top_ngram_short_docs_omitted(spark):
     )
     got = {r["doc_id"]: r["top_gram"] for r in top_ngram_stats(df).collect()}
     assert got == {4: "a b"}
-
-
-def test_multimodal_container_metadata_probe(spark):
-    """probe_media extracts REAL container metadata without frame
-    decode: MP4 duration + track dims from the moov box walk, MP3
-    duration from the frame header (CBR estimate), ID3 tags skipped."""
-    import struct
-
-    from trial_submission_studio_spark.operators.multimodal import probe_media
-
-    def box(t, body):
-        return struct.pack(">I", 8 + len(body)) + t + body
-
-    mvhd = box(
-        b"mvhd",
-        bytes(4) + struct.pack(">II", 0, 0)
-        + struct.pack(">II", 1000, 5500) + b"\x00" * 80,
-    )
-    tkhd = box(
-        b"tkhd",
-        bytes(4) + struct.pack(">IIII", 0, 0, 1, 0) + struct.pack(">I", 5500)
-        + b"\x00" * 52 + struct.pack(">II", 640 << 16, 360 << 16),
-    )
-    mp4 = (
-        box(b"ftyp", b"isom\x00\x00\x02\x00isomiso2")
-        + box(b"moov", mvhd + box(b"trak", tkhd))
-    )
-    frame = bytes([0xFF, 0xFB, (9 << 4), 0]) + b"\x00" * 413  # 128k/44.1k
-    mp3 = b"ID3\x04\x00\x00\x00\x00\x00\x0a" + b"\x00" * 10 + frame * 10
-
-    media = values_df(
-        spark, [(1, mp4), (2, mp3)], "media_id bigint, payload binary"
-    ).withColumn("path", F.lit("mem://m"))
-    got = {
-        r["media_id"]: (r["kind"], r["mime"], r["width"], r["height"], r["duration_ms"])
-        for r in probe_media(media).collect()
-    }
-    assert got[1] == ("video", "video/mp4", 640, 360, 5500)
-    kind, mime, w, h, dur = got[2]
-    assert (kind, mime, w, h) == ("audio", "audio/mpeg", None, None)
-    assert dur == 261  # 10 frames * 417B * 8 / 128kbit
-
-    # VBR: a Xing tag with frame count beats the CBR estimate
-    xing = bytes([0xFF, 0xFB, (9 << 4), 0]) + b"\x00" * 32 + (
-        b"Xing" + (1).to_bytes(4, "big") + (100).to_bytes(4, "big")
-    ) + b"\x00" * 300
-    vbr = probe_media(
-        values_df(spark, [(9, xing)], "media_id bigint, payload binary")
-        .withColumn("path", F.lit("m"))
-    ).collect()[0]
-    assert vbr["duration_ms"] == round(1000 * 100 * 1152 / 44100)
-
-
-def test_multimodal_flac_decode(spark):
-    """Stdlib FLAC codec: lossless roundtrip through audio_features
-    matches the WAV-decoded features of the same PCM, and probe_media
-    reports audio/flac with real duration."""
-    import numpy as np
-
-    from trial_submission_studio_spark.operators.flac import encode_flac
-    from trial_submission_studio_spark.operators.multimodal import (
-        audio_features,
-        probe_media,
-    )
-
-    rate = 8000
-    t = np.arange(4000) / rate
-    pcm = (np.sin(2 * np.pi * 440 * t) * 12000).astype(np.int16)
-
-    import io
-    import wave
-
-    buf = io.BytesIO()
-    with wave.open(buf, "wb") as wf:
-        wf.setnchannels(1)
-        wf.setsampwidth(2)
-        wf.setframerate(rate)
-        wf.writeframes(pcm.tobytes())
-
-    media = values_df(
-        spark,
-        [(1, buf.getvalue()), (2, encode_flac(pcm, sample_rate=rate))],
-        "media_id bigint, payload binary",
-    )
-    got = {r["media_id"]: r.asDict() for r in audio_features(media).collect()}
-    for k in ("sample_rate", "duration_ms", "rms", "peak", "zcr"):
-        assert got[1][k] == got[2][k], (k, got[1][k], got[2][k])
-    assert got[2]["sample_rate"] == rate and got[2]["duration_ms"] == 500
-
-    probed = {
-        r["media_id"]: (r["mime"], r["duration_ms"])
-        for r in probe_media(
-            media.withColumn("path", F.lit("mem://a"))
-        ).collect()
-    }
-    assert probed[1] == ("audio/wav", 500)
-    assert probed[2] == ("audio/flac", 500)
-
-
-def test_multimodal_on_error_null_quarantine(spark):
-    """on_error='null': undecodable/corrupt payloads become NULL rows
-    instead of failing the job — the corpus-scale posture (one corrupt
-    image must not kill a 1000-executor pass). Good records still get
-    real features."""
-    import numpy as np
-
-    from trial_submission_studio_spark.operators.multimodal import (
-        audio_features,
-        encode_ppm,
-    )
-
-    red = np.zeros((4, 4, 3), dtype=np.uint8)
-    red[:, :, 0] = 255
-    media = values_df(
-        spark,
-        [
-            (1, encode_ppm(red)),
-            (2, b"\x89PNG\r\n\x1a\ntruncated-garbage"),
-            (3, b"RIFFnot-really-wave"),
-        ],
-        "media_id bigint, payload binary",
-    )
-    feats = {
-        r["media_id"]: r["feat"]
-        for r in image_features(media, dim=8, on_error="null").collect()
-    }
-    assert feats[1] is not None and abs(feats[1][2] - 1.0) < 1e-9
-    assert feats[2] is None and feats[3] is None
-
-    audio = {
-        r["media_id"]: r["sample_rate"]
-        for r in audio_features(media, on_error="null").collect()
-    }
-    assert audio == {1: None, 2: None, 3: None}
-
-
-def test_multimodal_gif_roundtrip(spark):
-    """Stdlib GIF codec: LZW decode recovers exact pixels (lossless)
-    through the executor-side kernels, both sequential and interlaced;
-    probe_media reports image/gif with real dims."""
-    import numpy as np
-
-    from trial_submission_studio_spark.operators.multimodal import (
-        encode_gif,
-        image_resize,
-        probe_media,
-    )
-
-    rng = np.random.default_rng(11)
-    pal = rng.integers(0, 256, (7, 3), dtype=np.uint8)
-    img = pal[rng.integers(0, 7, (10, 6))]
-    media = values_df(
-        spark,
-        [(1, encode_gif(img)), (2, encode_gif(img, interlaced=True))],
-        "media_id bigint, payload binary",
-    )
-    for r in image_resize(media, 6, 10).collect():
-        dec = np.frombuffer(
-            r["payload"].split(b"255\n", 1)[1], np.uint8
-        ).reshape(10, 6, 3)
-        assert np.array_equal(dec, img)  # lossless either layout
-    probed = probe_media(
-        media.withColumn("path", F.lit("mem://x.gif"))
-    ).collect()
-    for r in probed:
-        assert (r["kind"], r["mime"]) == ("image", "image/gif")
-        assert (r["width"], r["height"]) == (6, 10)
-
-
-def test_multimodal_jpeg_roundtrip(spark):
-    """Stdlib baseline JPEG codec: encode (4:2:0 and 4:4:4, with and
-    without restart markers) → executor-side decode recovers the
-    pixels within JPEG loss tolerance; probe_media reports image/jpeg
-    with real dimensions; progressive streams stay on the stub path."""
-    import numpy as np
-
-    from trial_submission_studio_spark.operators.jpeg import decode_jpeg, encode_jpeg
-    from trial_submission_studio_spark.operators.multimodal import (
-        image_resize,
-        probe_media,
-    )
-
-    h, w = 24, 17
-    yy, xx = np.mgrid[0:h, 0:w]
-    img = np.stack(
-        [xx * 255 / (w - 1), yy * 255 / (h - 1), (xx + yy) * 255 / (w + h - 2)],
-        axis=2,
-    ).astype(np.uint8)
-
-    cases = [
-        (1, encode_jpeg(img, quality=95, subsampling="4:4:4")),
-        (2, encode_jpeg(img, quality=95, subsampling="4:2:0")),
-        (3, encode_jpeg(img, quality=95, subsampling="4:2:0", restart_interval=2)),
-    ]
-    media = values_df(spark, cases, "media_id bigint, payload binary")
-
-    # identity-size resize re-encodes decoded pixels as PPM — compare
-    # against the driver-side decode (deterministic) and the original
-    # within lossy tolerance
-    for r in image_resize(media, w, h).collect():
-        dec = np.frombuffer(
-            r["payload"].split(b"255\n", 1)[1], np.uint8
-        ).reshape(h, w, 3)
-        ref = decode_jpeg(dict(cases)[r["media_id"]])
-        assert np.array_equal(dec, ref)  # executor == driver decode
-        assert np.abs(dec.astype(int) - img.astype(int)).max() <= 15
-
-    feats = image_features(media, dim=16).collect()
-    for r in feats:
-        f = r["feat"]
-        for ch in range(3):
-            assert abs(f[2 + ch] - img[:, :, ch].mean() / 255.0) < 0.02
-
-    probed = probe_media(
-        media.withColumn("path", F.concat(F.lit("mem://"), "media_id"))
-    ).collect()
-    for r in probed:
-        assert (r["kind"], r["mime"]) == ("image", "image/jpeg")
-        assert (r["width"], r["height"]) == (w, h)
-
-    # malformed SOF2 (zero precision/dims) → None → classified by
-    # magic only, no dims (well-formed progressive now decodes for
-    # real — see test_multimodal_progressive_jpeg_roundtrip)
-    prog = b"\xff\xd8\xff\xc2\x00\x0b" + b"\x00" * 9 + b"\xff\xd9"
-    pm = probe_media(
-        values_df(spark, [(9, prog)], "media_id bigint, payload binary")
-        .withColumn("path", F.lit("mem://p"))
-    ).collect()[0]
-    assert (pm["kind"], pm["mime"]) == ("image", "image/jpeg")
-    assert pm["width"] is None
-
-
-def test_multimodal_progressive_jpeg_roundtrip(spark):
-    """Progressive (SOF2) decodes for REAL: the progressive encoder
-    emits the same quantized coefficients as the baseline encoder, so
-    progressive and baseline streams must decode to BIT-IDENTICAL
-    pixels — across both subsamplings, both scan scripts
-    (spectral-selection-only and successive approximation), and odd
-    dimensions that force the non-interleaved AC block grids to
-    differ from the MCU grid. Executor-side decode (image_resize)
-    must match the driver-side decode exactly."""
-    import numpy as np
-
-    from trial_submission_studio_spark.operators.jpeg import (
-        decode_jpeg,
-        encode_jpeg,
-        encode_jpeg_progressive,
-    )
-    from trial_submission_studio_spark.operators.multimodal import image_resize
-
-    rng = np.random.default_rng(7)
-    h, w = 45, 37  # odd: Y non-interleaved grid < interleaved grid
-    x = np.linspace(0, 255, w)[None, :] * np.ones((h, 1))
-    y = np.linspace(0, 255, h)[:, None] * np.ones((1, w))
-    img = np.stack([x, y, (x + y) / 2], axis=2)
-    img[10:20, 5:15] = [255, 0, 0]
-    img = np.clip(img + rng.normal(0, 12, img.shape), 0, 255).astype(np.uint8)
-
-    cases = []
-    mid = 0
-    for sub in ("4:4:4", "4:2:0"):
-        base = decode_jpeg(encode_jpeg(img, quality=85, subsampling=sub))
-        for succ in (False, True):
-            payload = encode_jpeg_progressive(
-                img, quality=85, subsampling=sub, successive=succ
-            )
-            prog = decode_jpeg(payload)
-            assert prog is not None, (sub, succ)
-            # same coefficients -> same pixels, bit for bit
-            assert np.array_equal(prog, base), (sub, succ)
-            # (no vs-source tolerance here: 4:2:0 chroma averaging on
-            # the sharp red block deviates legitimately; baseline
-            # fidelity is pinned by test_multimodal_jpeg_roundtrip and
-            # the bit-identity above ties progressive to it)
-            mid += 1
-            cases.append((mid, payload, base))
-
-    media = values_df(
-        spark, [(m, p) for m, p, _ in cases], "media_id bigint, payload binary"
-    )
-    by_id = {m: b for m, _, b in cases}
-    for r in image_resize(media, w, h).collect():
-        dec = np.frombuffer(
-            r["payload"].split(b"255\n", 1)[1], np.uint8
-        ).reshape(h, w, 3)
-        assert np.array_equal(dec, by_id[r["media_id"]])
-
-
-def test_jpeg_decode_never_raises_on_corrupt_streams():
-    """Decode robustness pin (both entropy paths): seeded byte
-    mutations and truncations of valid baseline and progressive
-    streams must return an array or None, never raise — one bad
-    record in a 100 TB scan cannot fail the task. (Fuzzing originally
-    caught an OverflowError leak: a corrupt DHT can declare
-    bit-lengths whose decoded values overflow the int32 coefficient
-    store.)"""
-    import random
-
-    import numpy as np
-
-    from trial_submission_studio_spark.operators.jpeg import (
-        decode_jpeg,
-        encode_jpeg,
-        encode_jpeg_progressive,
-    )
-
-    img = (np.indices((24, 17)).sum(0) % 256).astype(np.uint8)
-    img = np.stack([img] * 3, axis=2)
-    for payload in (
-        encode_jpeg(img, quality=80),
-        encode_jpeg_progressive(img, quality=80),
-    ):
-        rng = random.Random(0)
-        for _ in range(400):
-            b = bytearray(payload)
-            for _ in range(rng.randint(1, 6)):
-                b[rng.randrange(len(b))] = rng.randrange(256)
-            decode_jpeg(bytes(b))  # must not raise
-        for cut in range(0, len(payload), 17):
-            decode_jpeg(bytes(payload[:cut]))  # must not raise
-    # hostile-header cap: a 65535x65535 SOF must not allocate
-    huge = bytearray(encode_jpeg(img, quality=80))
-    i = huge.index(b"\xff\xc0")
-    huge[i + 5 : i + 9] = b"\xff\xff\xff\xff"
-    assert decode_jpeg(bytes(huge)) is None
-
-
-def test_multimodal_real_wav_decode(spark):
-    """REAL RIFF/WAVE PCM decode via stdlib wave: rate, duration, RMS,
-    peak and zero-crossing rate of a generated 440 Hz square wave."""
-    import io
-    import struct
-    import wave
-
-    import numpy as np
-
-    from trial_submission_studio_spark.operators.multimodal import audio_features
-
-    rate, secs, freq = 8000, 1, 440
-    t = np.arange(rate * secs)
-    square = np.where((t * freq * 2 // rate) % 2 == 0, 16384, -16384).astype("<i2")
-    buf = io.BytesIO()
-    with wave.open(buf, "wb") as wf:
-        wf.setnchannels(1)
-        wf.setsampwidth(2)
-        wf.setframerate(rate)
-        wf.writeframes(square.tobytes())
-    media = values_df(
-        spark, [(7, buf.getvalue())], "media_id bigint, payload binary"
-    )
-    row = audio_features(media).first()
-    assert row["sample_rate"] == 8000 and row["n_channels"] == 1
-    assert row["duration_ms"] == 1000
-    assert abs(row["rms"] - 0.5) < 0.01  # square wave at half scale
-    assert abs(row["peak"] - 0.5) < 0.01
-    # 440 Hz square crosses zero ~880 times/s -> zcr ~ 880/8000
-    assert abs(row["zcr"] - 880 / 8000) < 0.02
-
-
-def test_read_media_dir_probe(spark, tmp_path):
-    """binaryFile media source + header probe: real dims for PPM,
-    real duration for WAV, magic classification for JPEG, stable
-    path-hash ids."""
-    import io
-    import wave
-
-    import numpy as np
-
-    from trial_submission_studio_spark.operators.multimodal import (
-        encode_ppm,
-        read_media_dir,
-    )
-
-    img = np.zeros((3, 5, 3), dtype=np.uint8)
-    (tmp_path / "a.ppm").write_bytes(encode_ppm(img))
-    buf = io.BytesIO()
-    with wave.open(buf, "wb") as wf:
-        wf.setnchannels(1)
-        wf.setsampwidth(2)
-        wf.setframerate(4000)
-        wf.writeframes(b"\x00\x00" * 2000)  # 500 ms
-    (tmp_path / "b.wav").write_bytes(buf.getvalue())
-    (tmp_path / "c.jpg").write_bytes(b"\xff\xd8\xff\xe0fakejpeg")
-
-    got = {
-        r["path"].rsplit("/", 1)[-1]: r.asDict()
-        for r in read_media_dir(spark, str(tmp_path)).collect()
-    }
-    assert got["a.ppm"]["kind"] == "image"
-    assert (got["a.ppm"]["width"], got["a.ppm"]["height"]) == (5, 3)
-    assert got["b.wav"]["kind"] == "audio"
-    assert got["b.wav"]["duration_ms"] == 500
-    assert got["c.jpg"]["mime"] == "image/jpeg" and got["c.jpg"]["width"] is None
-    assert len({r["media_id"] for r in got.values()}) == 3
 
 
 def test_streaming_matches_batch(spark, tmp_path):
@@ -1051,83 +480,6 @@ def test_streaming_watermark_drops_late_data(spark, tmp_path):
     assert got[("2024-01-01 00:00:00", "click")] == (1, 1.0)
     # the late event's value never appears anywhere
     assert all(v[1] != 5.0 and v[1] != 6.0 for v in got.values()), got
-
-
-def test_multimodal_avi_mjpeg_video(spark):
-    """REAL video path: MJPEG-in-AVI container roundtrip — probe_media
-    reads dims/fps/duration from the avih header, sample_frames
-    decodes selected frames to PNG (and passes raw JPEG through in
-    transcode='jpeg' mode) with zero external codec libraries."""
-    import numpy as np
-
-    from trial_submission_studio_spark.operators.avi import (
-        encode_avi_mjpeg,
-        iter_mjpeg_frames,
-        parse_avi,
-    )
-    from trial_submission_studio_spark.operators.multimodal import (
-        probe_media,
-        sample_frames,
-    )
-
-    frames = []
-    for k in range(10):
-        img = np.zeros((32, 48, 3), np.uint8)
-        img[:, :, 0] = 40 + 20 * k  # frame index encoded in red level
-        img[8:24, 16:32, 1] = 200
-        frames.append(img)
-    payload = encode_avi_mjpeg(frames, fps=5)  # 2 s of video
-
-    assert parse_avi(payload) == {
-        "width": 48, "height": 32, "fps": 5.0,
-        "n_frames": 10, "duration_ms": 2000,
-    }
-    assert len(list(iter_mjpeg_frames(payload))) == 10
-
-    media = values_df(
-        spark, [(1, payload)], "media_id bigint, payload binary"
-    ).withColumn("path", F.lit("mem://v.avi"))
-    probed = probe_media(media).collect()[0]
-    assert (probed["kind"], probed["mime"]) == ("video", "video/x-msvideo")
-    assert (probed["width"], probed["height"], probed["duration_ms"]) == (
-        48, 32, 2000,
-    )
-
-    # every_ms=1000 at 5 fps -> every 5th source frame: idx 0 and 5
-    vid = probe_media(media)
-    out = sample_frames(vid, every_ms=1000).collect()
-    assert [r["frame_idx"] for r in sorted(out, key=lambda r: r["frame_idx"])] == [0, 5]
-    for r in out:
-        assert r["frame_png"][:8] == b"\x89PNG\r\n\x1a\n"
-        # decoded content tracks the source frame (lossy JPEG: wide tol)
-        from trial_submission_studio_spark.operators.multimodal import (
-            _decode_image,
-        )
-
-        img = _decode_image(bytes(r["frame_png"]))
-        expect = 40 + 20 * r["frame_idx"]
-        assert abs(float(img[:, :8, 0].mean()) - expect) < 6
-
-    # zero-transcode passthrough: raw baseline JPEG bytes, same frames
-    raw = sample_frames(vid, every_ms=1000, transcode="jpeg").collect()
-    assert sorted(r["frame_idx"] for r in raw) == [0, 5]
-    assert all(bytes(r["frame_jpeg"])[:2] == b"\xff\xd8" for r in raw)
-
-    # non-AVI payloads: on_error='skip' drops, default raises
-    junk = values_df(
-        spark, [(2, b"not a container", 1000)],
-        "media_id bigint, payload binary, duration_ms bigint",
-    )
-    assert sample_frames(junk, every_ms=500, on_error="skip").count() == 0
-    try:
-        sample_frames(junk, every_ms=500).count()
-        raise AssertionError("expected NotImplementedError for non-AVI")
-    except Exception as exc:  # Spark wraps the kernel error
-        assert "MJPEG" in str(exc) or "NotImplementedError" in str(exc)
-
-    # fake mode still exercises plumbing for ffmpeg-only formats
-    fake = sample_frames(junk, every_ms=500, deterministic_fake=True)
-    assert fake.count() == 2
 
 
 def test_streaming_stateless_corpus_filters_match_batch(spark, tmp_path):
@@ -1515,275 +867,6 @@ def test_streaming_near_dup_ingest_across_restarts(spark, tmp_path):
     assert {"band", "bucket", "doc_id"} <= bcols and "text" not in bcols
     scols = set(spark.read.parquet(state + "/sigs").columns)
     assert {"doc_id", "sig"} <= scols and "text" not in scols
-
-
-def test_prepare_media_governance_chain(spark):
-    """Composed media pipeline (media.py): probe → decode gate →
-    exact perceptual dup → Hamming near-dup; on_undecodable='keep'
-    admits undecodable payloads AFTER an exact-byte md5 dedup (the
-    only dedup possible without a decode), 'null' quarantines them."""
-    import numpy as np
-
-    from trial_submission_studio_spark.media import MediaConfig, prepare_media
-    from trial_submission_studio_spark.operators.multimodal import (
-        _make_png_encoder,
-        encode_ppm,
-    )
-
-    rng = np.random.default_rng(11)
-    base = rng.integers(0, 256, size=(16, 24, 3), dtype=np.uint8)
-    other = rng.integers(0, 256, size=(16, 24, 3), dtype=np.uint8)
-    encode_png = _make_png_encoder()
-    # PNG magic so the header probe classifies them image, but the
-    # body is garbage — the decode gate yields NULL fp
-    junk = b"\x89PNG\r\n\x1a\n" + b"corrupt" * 6
-    junk2 = b"\x89PNG\r\n\x1a\n" + b"other-garbage" * 3
-
-    media = values_df(
-        spark,
-        [
-            (1, bytes(encode_ppm(base))),
-            (2, bytes(encode_png(base))),  # exact perceptual dup of 1
-            (3, bytes(encode_ppm(other))),
-            (4, bytes(junk)),              # undecodable
-            (5, bytes(junk)),              # exact BYTE dup of 4
-            (6, bytes(junk2)),
-        ],
-        "media_id bigint, payload binary",
-    ).withColumn("path", F.concat(F.lit("mem://"), F.col("media_id")))
-
-    cfg = MediaConfig(max_hamming=2, on_undecodable="null")
-    kept = {r.media_id for r in prepare_media(media, cfg, collect_stats=True).collect()}
-    assert kept == {1, 3}  # 2 collapses into 1; junk quarantined
-    assert cfg.stats["input"] == 6 and cfg.stats["decodable"] == 3
-
-    # keep mode: junk admitted, but byte-identical junk collapses
-    cfg2 = MediaConfig(max_hamming=2, on_undecodable="keep")
-    kept2 = {r.media_id for r in prepare_media(media, cfg2).collect()}
-    assert kept2 == {1, 3, 4, 6}  # 5 byte-dups into 4
-
-
-def test_image_dhash_near_dup_detection(spark):
-    """Perceptual image dedup: dHash is stable under light noise and
-    re-encoding (PPM vs PNG of the same pixels hash identically;
-    noisy copy within a few bits) and far for a different image —
-    candidate pairs come from the SAME Hamming-banded join that
-    serves text SimHash."""
-    import numpy as np
-
-    from trial_submission_studio_spark.operators.dedup import simhash_hamming_pairs
-    from trial_submission_studio_spark.operators.multimodal import (
-        _make_png_encoder,
-        encode_ppm,
-        image_dhash,
-    )
-
-    rng = np.random.default_rng(7)
-    base = rng.integers(0, 256, size=(32, 48, 3), dtype=np.uint8)
-    noisy = np.clip(
-        base.astype(np.int16) + rng.integers(-2, 3, size=base.shape), 0, 255
-    ).astype(np.uint8)
-    other = rng.integers(0, 256, size=(32, 48, 3), dtype=np.uint8)
-    encode_png = _make_png_encoder()
-
-    df = spark.createDataFrame(
-        [
-            (1, bytearray(encode_ppm(base))),
-            (2, bytearray(encode_png(base))),   # same pixels, other codec
-            (3, bytearray(encode_ppm(noisy))),  # near-duplicate
-            (4, bytearray(encode_ppm(other))),  # different image
-            (5, None),                          # quarantined
-        ],
-        "media_id long, payload binary",
-    )
-    fps = image_dhash(df, on_error="null")
-    got = {r.media_id: r.dhash for r in fps.collect()}
-    assert got[5] is None
-    assert got[1] == got[2]  # codec-independent
-    ham = lambda a, b: bin((a ^ b) & ((1 << 64) - 1)).count("1")  # noqa: E731
-    assert ham(got[1], got[3]) <= 3
-    assert ham(got[1], got[4]) > 10
-
-    pairs = simhash_hamming_pairs(
-        fps.filter("dhash IS NOT NULL"), "media_id", "dhash", max_hamming=3
-    )
-    got_pairs = {(r.id_a, r.id_b) for r in pairs.collect()}
-    assert (1, 2) in got_pairs and (1, 3) in got_pairs and (2, 3) in got_pairs
-    assert not any(4 in p for p in got_pairs)
-
-
-def test_audio_fingerprint_near_dup_detection(spark):
-    """Spectral audio fingerprint: WAV and FLAC of the same PCM hash
-    identically; gain change and light noise stay within a few bits;
-    a different signal is far; Hamming-banded pairs compose."""
-    import io
-    import wave
-
-    import numpy as np
-
-    from trial_submission_studio_spark.operators.dedup import simhash_hamming_pairs
-    from trial_submission_studio_spark.operators.flac import encode_flac
-    from trial_submission_studio_spark.operators.multimodal import audio_fingerprint
-
-    rate = 8000
-    t = np.arange(rate * 1) / rate
-    rng = np.random.default_rng(11)
-    tone = (
-        0.4 * np.sin(2 * np.pi * 330 * t)
-        + 0.2 * np.sin(2 * np.pi * 990 * t)
-        + 0.1 * np.sin(2 * np.pi * 47 * t)
-    )
-    base = (tone * 32767 * 0.6).astype("<i2")
-    noisy = np.clip(
-        base.astype(np.int64) + rng.integers(-80, 81, base.size), -32768, 32767
-    ).astype("<i2")
-    gained = np.clip(base.astype(np.int64) * 7 // 10, -32768, 32767).astype("<i2")
-    other = (np.sign(np.sin(2 * np.pi * 123 * t + np.pi / 3)) * 9000).astype("<i2")
-
-    def wav_bytes(samples):
-        buf = io.BytesIO()
-        with wave.open(buf, "wb") as wf:
-            wf.setnchannels(1)
-            wf.setsampwidth(2)
-            wf.setframerate(rate)
-            wf.writeframes(samples.tobytes())
-        return buf.getvalue()
-
-    df = spark.createDataFrame(
-        [
-            (1, bytearray(wav_bytes(base))),
-            (2, bytearray(encode_flac(base.astype(np.int64), sample_rate=rate))),
-            (3, bytearray(wav_bytes(noisy))),
-            (4, bytearray(wav_bytes(gained))),
-            (5, bytearray(wav_bytes(other))),
-            (6, None),
-        ],
-        "media_id long, payload binary",
-    )
-    got = {r.media_id: r.afp for r in audio_fingerprint(df, on_error="null").collect()}
-    ham = lambda a, b: bin((a ^ b) & ((1 << 64) - 1)).count("1")  # noqa: E731
-    assert got[6] is None
-    assert got[1] == got[2]  # codec-independent (same PCM)
-    assert ham(got[1], got[3]) <= 3  # noise-robust
-    assert ham(got[1], got[4]) <= 1  # gain-invariant (energy ratios)
-    assert ham(got[1], got[5]) > 10  # different content is far
-
-    pairs = simhash_hamming_pairs(
-        spark.createDataFrame(
-            [(k, v) for k, v in got.items() if v is not None],
-            "media_id long, afp long",
-        ),
-        "media_id",
-        "afp",
-        max_hamming=3,
-    )
-    got_pairs = {(r.id_a, r.id_b) for r in pairs.collect()}
-    assert {(1, 2), (1, 3), (1, 4)} <= got_pairs
-    assert not any(5 in p for p in got_pairs)
-
-
-def test_video_frame_dhash_near_dup(spark):
-    """Video near-dup composes from existing parts: MJPEG frame
-    sampling (raw-JPEG passthrough, zero decode for selection) →
-    per-frame image dHash → frame-level Hamming match fraction. A
-    JPEG re-encode of the same footage matches on every sampled
-    frame; different footage matches none."""
-    import numpy as np
-
-    from pyspark.sql import functions as F
-
-    from trial_submission_studio_spark.operators.avi import encode_avi_mjpeg
-    from trial_submission_studio_spark.operators.dedup import simhash_hamming_pairs
-    from trial_submission_studio_spark.operators.multimodal import (
-        image_dhash,
-        sample_frames,
-    )
-
-    rng = np.random.default_rng(3)
-    # smooth gradient frames: JPEG-quality-robust content
-    def footage(seed):
-        g = np.linspace(0, 255, 48, dtype=np.float64)
-        frames = []
-        for i in range(10):
-            base = (g[None, :] + g[:, None] * 0.5 + seed * 37 + i * 5) % 256
-            frames.append(
-                np.repeat(base[:, :, None], 3, axis=2).astype(np.uint8)
-            )
-        return frames
-
-    a = footage(0)
-    df = spark.createDataFrame(
-        [
-            (1, bytearray(encode_avi_mjpeg(a, fps=5, quality=90))),
-            (2, bytearray(encode_avi_mjpeg(a, fps=5, quality=70))),  # re-encode
-            (3, bytearray(encode_avi_mjpeg(footage(3), fps=5))),     # different
-        ],
-        "media_id long, payload binary",
-    )
-    frames = sample_frames(
-        df.withColumn("duration_ms", F.lit(2000)),  # 10 frames @ 5 fps
-        every_ms=400,
-        transcode="jpeg",
-    )
-    fids = frames.select(
-        (F.col("media_id") * 1000 + F.col("frame_idx")).alias("fid"),
-        F.col("frame_jpeg").alias("payload"),
-    )
-    fps_df = image_dhash(fids, id_col="fid")
-    pairs = simhash_hamming_pairs(fps_df, "fid", "dhash", max_hamming=6)
-    cross = (
-        pairs.select(
-            (F.col("id_a") / 1000).cast("long").alias("va"),
-            (F.col("id_b") / 1000).cast("long").alias("vb"),
-        )
-        .filter("va < vb")
-        .groupBy("va", "vb")
-        .count()
-    )
-    got = {(r.va, r.vb): r["count"] for r in cross.collect()}
-    assert got.get((1, 2), 0) >= 4  # re-encoded footage: most frames match
-    assert (1, 3) not in got and (2, 3) not in got
-
-
-def test_near_duplicate_images_webp_cross_codec(spark):
-    """The perceptual dHash is codec-independent: the SAME image
-    stored once as PNG and once as WebP-lossless (VP8L) pairs up;
-    a lossy-VP8 payload is quarantined (NotImplementedError -> NULL
-    fingerprint), not fatal."""
-    import struct
-
-    import numpy as np
-
-    from trial_submission_studio_spark.operators.multimodal import (
-        encode_png,
-        near_duplicate_images,
-    )
-    from trial_submission_studio_spark.operators.vp8l import (
-        encode_webp_lossless,
-    )
-
-    rng = np.random.default_rng(31)
-    base = rng.integers(0, 256, (16, 16, 3), dtype=np.uint8)
-    other = rng.integers(0, 256, (16, 16, 3), dtype=np.uint8)
-    vp8_body = b"\x00" * 16  # lossy VP8 chunk: undecodable here
-    lossy = b"RIFF" + struct.pack("<I", 4 + 8 + len(vp8_body)) + b"WEBP" + (
-        b"VP8 " + struct.pack("<I", len(vp8_body)) + vp8_body
-    )
-    media = values_df(
-        spark,
-        [
-            (1, encode_png(base)),
-            (2, encode_webp_lossless(base, subtract_green=True, cache_bits=6)),
-            (3, encode_webp_lossless(other, palette=False)),
-            (4, lossy),
-        ],
-        "media_id bigint, payload binary",
-    )
-    pairs = {
-        (r["id_a"], r["id_b"])
-        for r in near_duplicate_images(media, threshold=0.999).collect()
-    }
-    assert pairs == {(1, 2)}
 
 
 def test_streaming_dedup_ingest_bloom_pruned(spark, tmp_path):

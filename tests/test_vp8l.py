@@ -193,16 +193,3 @@ def test_lossy_vp8_raises_notimplemented():
     payload = b"RIFF" + struct.pack("<I", len(riff)) + riff
     with pytest.raises(NotImplementedError):
         decode_webp(payload)
-
-
-def test_integrates_with_image_decoder():
-    """The multimodal image decoder recognizes WebP payloads and the
-    resize path reproduces exact pixels."""
-    from trial_submission_studio_spark.operators.multimodal import (
-        _make_image_decoder,
-    )
-
-    img = _img(6, 7, seed=21)
-    decode = _make_image_decoder()
-    out = decode(encode_webp_lossless(img, subtract_green=True))
-    np.testing.assert_array_equal(out, img)

@@ -96,56 +96,3 @@ def test_still_webp_rejected_and_corrupt():
         decode_webp_frames(encode_webp_lossless(_stack(1)[0]))
     with pytest.raises(ValueError):
         decode_webp_frames(b"RIFF\x04\x00\x00\x00WAVE")
-
-
-def test_sample_frames_animated_webp(spark):
-    from trial_submission_studio_spark.operators.multimodal import sample_frames
-
-    frames = _stack(6)
-    payload = encode_webp_anim(frames, durations_ms=[100] * 6)
-    media = spark.createDataFrame(
-        [(7, payload, 600)], "media_id long, payload binary, duration_ms long"
-    )
-    rows = sample_frames(media, every_ms=200).collect()
-    picked = sorted(r["frame_idx"] for r in rows)
-    assert picked == [0, 2, 4]
-    assert all(r["frame_png"][:8] == b"\x89PNG\r\n\x1a\n" for r in rows)
-
-
-def test_probe_media_animated_durations(spark):
-    """probe_media surfaces animation duration for GIF/WebP from
-    header-scale walks; still images keep NULL duration; WebP dims
-    come from VP8X/VP8L headers."""
-    from trial_submission_studio_spark.operators.gifanim import encode_gif_anim
-    from trial_submission_studio_spark.operators.multimodal import probe_media
-    from trial_submission_studio_spark.operators.vp8l import encode_webp_lossless
-
-    frames = _stack(4, h=6, w=8)
-    media = spark.createDataFrame(
-        [
-            (1, encode_gif_anim(frames, delays_ms=[50] * 4), "a.gif"),
-            (2, encode_webp_anim(frames, durations_ms=[70] * 4), "b.webp"),
-            (3, encode_webp_lossless(frames[0]), "c.webp"),
-        ],
-        "media_id long, payload binary, path string",
-    )
-    rows = {r["media_id"]: r for r in probe_media(media).collect()}
-    assert rows[1]["mime"] == "image/gif" and rows[1]["duration_ms"] == 200
-    assert rows[2]["mime"] == "image/webp" and rows[2]["duration_ms"] == 280
-    assert (rows[2]["width"], rows[2]["height"]) == (8, 6)
-    assert rows[3]["mime"] == "image/webp" and rows[3]["duration_ms"] is None
-    assert (rows[3]["width"], rows[3]["height"]) == (8, 6)
-
-
-def test_image_features_first_frame_of_animation(spark):
-    """image_features/image decode treat an animated WebP as its
-    first frame (the thumbnail convention)."""
-    import numpy as np
-
-    from trial_submission_studio_spark.operators.multimodal import (
-        _make_image_decoder,
-    )
-
-    frames = _stack(3, h=6, w=8, seed=5)
-    got = _make_image_decoder()(encode_webp_anim(frames))
-    np.testing.assert_array_equal(got, frames[0])

@@ -54,6 +54,7 @@ from typing import Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
+from ..sources.local import sql_literal
 from . import versioned as _ver
 
 __all__ = [
@@ -470,10 +471,9 @@ def sync_catalog_bucketed(
         sort_cols=sort_within,
         path=path,
     )
-    esc_root = root_abs.replace("'", "''")
     spark.sql(
         f"ALTER TABLE {table} SET TBLPROPERTIES ("
-        f"'tss.snapshot_root'='{esc_root}', "
+        f"'tss.snapshot_root'={sql_literal(root_abs)}, "
         f"'tss.snapshot_version'='{cur}')"
     )
     return {"table": table, "version": cur, "refreshed": True}

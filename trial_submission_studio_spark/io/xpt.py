@@ -507,28 +507,41 @@ def write_xpt(
         except Exception:
             est_total = 0
 
-        try:
-            # fast path: serve the pickled-Row JavaRDD directly
-            # (pyspark-internal helpers, stable across 3.x/4.x — but
-            # guarded so a future relocation degrades to the slower
-            # public path instead of failing mid-file)
+        def _public_path():
+            src_rdd = payload.rdd
+
+            def _fetch(parts: list[int]) -> list:
+                return sc.runJob(src_rdd, lambda it: list(it), partitions=parts)
+
+            return src_rdd.getNumPartitions(), _fetch
+
+        def _fast_path():
+            # serve the pickled-Row JavaRDD directly through
+            # pyspark-internal helpers (stable across 3.x/4.x, but not
+            # a public API)
             from pyspark.rdd import _load_from_socket
             from pyspark.serializers import BatchedSerializer, CPickleSerializer
 
             jrdd = payload._jdf.javaToPython()
-            n_pp = jrdd.rdd().getNumPartitions()
             _ser = BatchedSerializer(CPickleSerializer())
 
             def _fetch(parts: list[int]) -> list:
                 sock_info = sc._jvm.PythonRDD.runJob(sc._jsc.sc(), jrdd, parts)
                 return list(_load_from_socket(sock_info, _ser))
 
-        except ImportError:
-            src_rdd = payload.rdd
-            n_pp = src_rdd.getNumPartitions()
+            return jrdd.rdd().getNumPartitions(), _fetch
 
-            def _fetch(parts: list[int]) -> list:
-                return sc.runJob(src_rdd, lambda it: list(it), partitions=parts)
+        # Any failure of the fast path's setup or of its FIRST fetch
+        # (nothing is written yet) degrades to the public runJob path,
+        # which refetches the same partitions; a real data error raises
+        # again from that retry. Later fetches are not retried: the
+        # path has proven itself and bytes are already on disk.
+        try:
+            n_pp, _fetch = _fast_path()
+            fast = True
+        except Exception:
+            n_pp, _fetch = _public_path()
+            fast = False
 
         if est_total > 0 and n_pp > 0:
             est_pp = max(est_total // n_pp, 1)
@@ -544,7 +557,14 @@ def write_xpt(
             else:
                 avg = max(fetched_bytes // fetched_parts, 1)
                 size = max(1, min(n_pp - lo, int(budget // avg)))
-            rows = _fetch(list(range(lo, lo + size)))
+            parts = list(range(lo, lo + size))
+            try:
+                rows = _fetch(parts)
+            except Exception:
+                if not (fast and fetched_parts == 0):
+                    raise
+                n_pp, _fetch = _public_path()
+                rows = _fetch(parts)
             lo += size
             fetched_parts += size
             for prow in rows:

@@ -30,9 +30,7 @@ because those stages are closed-form math:
   provably correct; see :func:`_build_synthesis_bank`).
 
 Two pieces of the format are TABULATED constants with no source in
-this container, and this module is explicit about the boundary
-(same honesty rule as the lossy-WebP/AAC stubs — see
-``multimodal.py``):
+this container, and this module is explicit about the boundary:
 
 1. **Huffman code tables** (ISO Table B.7). The registry
    (`mp3_tables.py`) carries every table that survives a hard
@@ -49,27 +47,24 @@ this container, and this module is explicit about the boundary
    corpus jobs quarantine them via ``on_error="null"`` instead of
    decoding garbage. The in-repo :func:`encode_mp3_tones`
    correctness encoder codes payloads through ANY registered table
-   (integer magnitudes, count1 quadruples) — the vp8l/gifanim
+   (integer magnitudes, count1 quadruples) — the vp8l
    "correctness encoder" pattern — so every registered decode path
    is roundtrip-tested end to end.
 2. **The 512-tap synthesis window** (ISO Table B.3 / C.1). A
    near-perfect-reconstruction prototype of the same length and
    cutoff is DESIGNED here (Kaiser-windowed lowpass, DC-gain
    calibrated); conformant streams therefore decode to
-   approximately-right PCM (fine for the feature/fingerprint
-   consumers in `multimodal.py`), not bit-exact ISO reference
-   output. Swapping in the ISO table is a one-constant change.
+   approximately-right PCM (fine for feature/fingerprint use),
+   not bit-exact ISO reference output. Swapping in the ISO table is a one-constant change.
 
 Scalefactor-band tables ARE included: all six (3 sample rates ×
 long/short) reproduce from public knowledge and self-check — each
 must sum to exactly 576 (long) / 192 (short), which they do.
 
-Scale shape: like `jpeg.py`/`flac.py`, this is the correct,
-dependency-free reference codec for test/metadata scale; bulk decode
-belongs in a libmad/ffmpeg-backed kernel behind the same
-`audio_features` operator surface. Spark-side integration is via
-`multimodal._make_audio_decoder` (Arrow-batched, per-record
-quarantine).
+Scale shape: this is the correct, dependency-free reference codec for
+test/metadata scale; bulk decode belongs in a libmad/ffmpeg-backed
+kernel. No study-pipeline stage calls it: it is a standalone codec
+library.
 """
 
 from __future__ import annotations

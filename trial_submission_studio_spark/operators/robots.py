@@ -39,8 +39,7 @@ from pyspark.sql import functions as F
 # The mapInPandas kernels below capture module-level functions
 # (parse_robots / rule_to_like); register the module for BY-VALUE
 # cloudpickle serialization so executors that cannot import this
-# package (non-repo cwd) still run them — same discipline as the
-# codec modules in multimodal.py.
+# package (non-repo cwd) still run them.
 try:  # pragma: no cover - serialization concern
     import sys as _sys
 

@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from trial_submission_studio_spark.functions.datetime_iso import ISO_PARTIAL_RE
+from trial_submission_studio_spark.sources.local import sql_literal
 
 ISSUE_SCHEMA = T.StructType(
     [
@@ -63,11 +64,7 @@ def _issue_frame(spark, rows):
     # round trip): the Column-API formulation cost ~100 ms of driver
     # chatter per frame (~6 F.lit + casts + struct per row).
     def _s(v) -> str:
-        if v is None:
-            return "CAST(NULL AS STRING)"
-        # Spark SQL string literals process backslash escapes, so
-        # escape the backslash itself first, then the quote
-        return "'" + str(v).replace("\\", "\\\\").replace("'", "\\'") + "'"
+        return "CAST(NULL AS STRING)" if v is None else sql_literal(str(v))
 
     if not rows:
         return spark.range(0, 0, 1, 1).selectExpr(

@@ -16,12 +16,10 @@ backreferences — enough surface to roundtrip arbitrary images through
 every decoder path that matters (normal codes, cache, LZ77 copy,
 transform inversion). It is a correctness encoder, not a compressor.
 
-This closes one of the documented lossy/compressed-codec stubs
-(multimodal.py round-7 list); like `jpeg.py`/`flac.py` the entropy
-coder is its own implementation, structured by the format spec, not
-by any codec library. Reference parity note: the reference engine
-(rubentalstra/Trial-Submission-Studio) has no media surface; this
-belongs to the training-data extension family (SURVEY.md §2.13).
+The entropy coder is its own implementation, structured by the format
+spec, not by any codec library. Reference parity note: the reference
+engine (rubentalstra/Trial-Submission-Studio) has no media surface;
+no study-pipeline stage calls this standalone codec.
 """
 
 from __future__ import annotations

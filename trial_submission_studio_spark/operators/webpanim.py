@@ -5,7 +5,7 @@ The modern animated-image format on the web: a canvas plus ANMF
 frames, each a sub-rectangle with its own duration, BLEND mode
 (alpha-blend vs overwrite) and DISPOSE mode (keep vs fill with the
 ANIM background color) — the same inter-frame state machine family
-as animated GIF (`gifanim.py`), with alpha. Frames whose payload is
+as animated GIF, with alpha. Frames whose payload is
 lossless (VP8L) decode natively; lossy-VP8 frames raise
 ``NotImplementedError`` (same stub boundary as still WebP).
 
@@ -14,8 +14,7 @@ entries with VP8L payloads — a correctness encoder driving both
 blend modes and dispose-to-background through the decoder.
 
 Reference parity note: the reference engine has no media surface;
-this extends the multimodal family (SURVEY.md §2.13) beside
-`gifanim.py`.
+no study-pipeline stage calls this standalone codec.
 """
 
 from __future__ import annotations

@@ -30,10 +30,8 @@ Everything here is built-in Spark machinery configured the way a
   first ingest of untrusted data, ``quarantine=False`` for narrow
   analytical re-reads of corpora you already validated.
 - **Malformed lines quarantine, never kill the job.** A bad line
-  yields NULL data columns and the raw line in the quarantine column
-  — the same per-record contract as the multimodal reader's
-  ``on_error="null"``. :func:`split_quarantine` separates the
-  streams; the bad stream keeps the raw line (and ``_path`` when
+  yields NULL data columns and the raw line in the quarantine column.
+  :func:`split_quarantine` separates the streams; the bad stream keeps the raw line (and ``_path`` when
   requested) so a re-ingest after an upstream fix can target exactly
   the bad shards.
 - **Compression layout = parallelism.** ``.jsonl`` splits by block

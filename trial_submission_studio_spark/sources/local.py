@@ -14,7 +14,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 
-def _sql_literal(v) -> str:
+def sql_literal(v) -> str:
+    """Spark SQL literal for a Python value; strings round-trip exactly.
+
+    Spark processes backslash escapes inside string literals, so the
+    backslash is escaped first and the quote second. ``${`` is written
+    as ``$\\{`` because ``spark.sql`` and ``F.expr`` substitute
+    ``${name}`` references (``${env:HOME}``, ``${spark.app.name}``) in
+    the raw SQL text before parsing; ``\\{`` parses back to ``{``.
+    This is the one escaper for every SQL-literal frame.
+    """
     if v is None:
         return "NULL"
     if isinstance(v, bool):
@@ -32,8 +41,8 @@ def _sql_literal(v) -> str:
     if isinstance(v, bytes):
         return f"X'{v.hex()}'"
     if isinstance(v, (list, tuple)):
-        return "array(" + ", ".join(_sql_literal(x) for x in v) + ")"
-    s = str(v).replace("'", "''")
+        return "array(" + ", ".join(sql_literal(x) for x in v) + ")"
+    s = str(v).replace("\\", "\\\\").replace("'", "\\'").replace("${", "$\\{")
     return f"'{s}'"
 
 
@@ -53,7 +62,7 @@ def values_df(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame:
         _attach_local_rows(out, [], names)
         return out
     value_rows = ", ".join(
-        "(" + ", ".join(_sql_literal(v) for v in row) + ")" for row in rows
+        "(" + ", ".join(sql_literal(v) for v in row) + ")" for row in rows
     )
     cols = ", ".join(
         f"CAST({n} AS {t}) AS {n}" for n, t in zip(names, types)

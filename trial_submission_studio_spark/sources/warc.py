@@ -13,8 +13,7 @@ Scale shape:
   That IS the right parallelism for CommonCrawl: a crawl ships as
   tens of thousands of ~1 GB ``.warc.gz`` members, and gzip members
   are not splittable — per-file tasks are the standard and optimal
-  decomposition (the same story as the multimodal media reader,
-  `operators/multimodal.py`).
+  decomposition.
 - Parsing runs in ``mapInPandas`` with Arrow batches; records stream
   out of a ``gzip.GzipFile`` wrapper so the decompressed archive is
   never materialized as one bytes object on top of the compressed
