@@ -1,8 +1,10 @@
 """Plan compiler + validation engine end-to-end on an AE-shaped fixture."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from tests.conftest import rows
+from trial_submission_studio_spark.operators import normalize
 from trial_submission_studio_spark.operators.normalize import (
     NormalizationContext,
     Rule,
@@ -81,6 +83,17 @@ def test_compile_pipeline_end_to_end(spark):
     assert (r2["AESTDTC"], r2["AESTDY"], r2["AEDOSE"]) == ("2024-01-15", 108, 1234.5)
     r3 = got["ST-S-002/1"]
     assert (r3["AESTDTC"], r3["AESTDY"], r3["AEDOSE"]) == ("2024-01", None, None)
+
+
+def test_compile_pipeline_rejects_transform_without_branch(spark, monkeypatch):
+    """A transform kind the compiler has no branch for fails loudly
+    instead of compiling to copy semantics."""
+    monkeypatch.setattr(normalize, "TRANSFORMS", normalize.TRANSFORMS + ("mystery",))
+    rule = Rule("AETERM", "mystery", source="AETERM")
+    ctx = NormalizationContext(study_id="ST", domain_code="AE", order_col="")
+    df = values_df(spark, [("Headache",)], "AETERM string")
+    with pytest.raises(ValueError, match="mystery"):
+        compile_pipeline(df, [rule], ctx)
 
 
 def test_infer_rules_priority():
@@ -180,6 +193,7 @@ def test_duplicate_sequence_issues(spark):
     )
     got = duplicate_sequence_issues(df, "AE").collect()
     assert len(got) == 1 and got[0]["count"] == 1
+    assert tuple(got[0]) == ("AE", "AESEQ", "Consistency", "Error", 1, ["S1/1"])
 
 
 def test_sdtm_registry_roundtrip_and_inference(spark):

@@ -22,7 +22,13 @@ from trial_submission_studio_spark.mapping import (
     score_pair,
     suggest_mappings,
 )
+from trial_submission_studio_spark.operators.profiling import max_observed_length
 from trial_submission_studio_spark.sources.local import values_df
+
+
+def _observed(frames):
+    """write_define_xml's observed-length map for a {dataset: frame} dict."""
+    return {dom: max_observed_length(df, df.columns) for dom, df in frames.items()}
 
 
 @pytest.mark.parametrize("v", [0.0, 1.0, -1.0, 0.1, 123.456, 1e10, -2.5e-8, 55.0])
@@ -169,7 +175,7 @@ def test_write_define_xml(spark, tmp_path):
         ],
     )
     path = str(tmp_path / "define.xml")
-    write_define_xml(path, "ST.STUDY", [ds], frames)
+    write_define_xml(path, "ST.STUDY", [ds], _observed(frames))
     doc = xml.dom.minidom.parse(path)
     items = {
         e.getAttribute("OID"): e for e in doc.getElementsByTagName("ItemDef")
@@ -317,7 +323,7 @@ def test_define_xml_codelists(spark, tmp_path):
     )
     path = str(tmp_path / "define_cl.xml")
     write_define_xml(
-        path, "ST", [ds], frames,
+        path, "ST", [ds], _observed(frames),
         codelists={"CL.C66731": [("M", "Male"), ("F", "Female")]},
     )
     doc = xml.dom.minidom.parse(path)
@@ -361,7 +367,7 @@ def test_define_xml_value_level_metadata(spark, tmp_path):
     )
     path = str(tmp_path / "define_vl.xml")
     write_define_xml(
-        path, "ST", [ds], frames, codelists={"CL.PGA": [("3", "Moderate")]}
+        path, "ST", [ds], _observed(frames), codelists={"CL.PGA": [("3", "Moderate")]}
     )
     doc = xml.dom.minidom.parse(path)
     vls = doc.getElementsByTagName("def:ValueListDef")
@@ -573,7 +579,7 @@ def test_define_xml_standards_origin_keysequence(spark, tmp_path):
     )
     path = str(tmp_path / "define_std.xml")
     write_define_xml(
-        path, "ST", [ds], frames,
+        path, "ST", [ds], _observed(frames),
         codelists={"CL.C66731": [("M", "Male"), ("F", "Female")]},
         ct_version="2025-03-28",
         codelist_meta={"CL.C66731": {"name": "Sex", "extensible": False}},

@@ -8,6 +8,7 @@ import pytest
 
 from trial_submission_studio_spark.standards import codelist_lookup_df, load_ct_csv
 from trial_submission_studio_spark.study import (
+    Study,
     build_domain,
     build_supp,
     create_study,
@@ -107,6 +108,95 @@ def test_full_study_flow(spark, study, tmp_path):
     # validation gate: errors block export without the bypass
     with pytest.raises(ValueError, match="export blocked"):
         export_study(study, {"DM": dm, "AE": ae}, str(tmp_path / "out2"))
+
+
+def _built(study):
+    dm = build_domain(study, "DM")
+    return {"DM": dm, "AE": build_domain(study, "AE", dm_frame=dm)}
+
+
+def test_bypassed_export_runs_no_validation(study, tmp_path, monkeypatch):
+    """The gate is only computed when it can block: a bypassed export
+    never calls validate_study and still writes every artifact."""
+    import trial_submission_studio_spark.study as study_mod
+
+    def refuse(*args, **kwargs):
+        raise AssertionError("validate_study ran under bypass_validation")
+
+    monkeypatch.setattr(study_mod, "validate_study", refuse)
+    out = export_study(study, _built(study), str(tmp_path / "out"), bypass_validation=True)
+    assert set(out) == {"DM", "AE", "define"}
+    assert all(os.path.getsize(p) > 0 for p in out.values())
+    xml.dom.minidom.parse(out["define"])
+
+
+def test_bypassed_export_job_budget(spark, study, tmp_path):
+    """A bypassed export of the 2-domain fixture stays within half the
+    42 jobs it took while it re-validated and scanned each domain
+    twice (the XPT lengths and define.xml share one scan now)."""
+    frames = _built(study)
+    sc = spark.sparkContext
+    group = "test-bypassed-export-job-budget"
+    sc.setJobGroup(group, "bypassed export")
+    try:
+        export_study(study, frames, str(tmp_path / "out"), bypass_validation=True)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 21
+
+
+def test_export_rejects_unknown_format(spark, tmp_path):
+    out = tmp_path / "out"
+    with pytest.raises(ValueError, match="fmt"):
+        export_study(Study(spark, "S"), {}, str(out), fmt="XPT", bypass_validation=True)
+    assert not out.exists()  # nothing written
+
+
+def test_define_xml_observed_edge_cases(spark, tmp_path):
+    """define.xml Length, def:HasNoData and def:Origin on all-null,
+    whitespace-only, leading-space and numeric-with-nulls columns
+    agree with a pandas rendition of the rules: Length is the max
+    right-trimmed length (floor 1) of a Char column, and a column has
+    data when some value is non-blank after trimming spaces."""
+    import pandas as pd
+
+    from trial_submission_studio_spark.sources.local import values_df
+
+    cores = {"USUBJID": "Req", "ARMCD": "Perm", "COUNTRY": "Exp",
+             "SITEID": "Perm", "AGE": "Exp"}
+    rows = [
+        ("E-01", None, "   ", " x", 1.5),
+        ("E-02", None, "", "  yz ", None),
+        ("E-03", None, None, None, None),
+    ]
+    schema = ("USUBJID string, ARMCD string, COUNTRY string, SITEID string, "
+              "AGE double")
+    variables = [
+        {"name": n, "label": n, "core": c,
+         "data_type": "Num" if n == "AGE" else "Char"}
+        for n, c in cores.items()
+    ]
+    st = Study(spark, "EDGE", domains={"DM": variables})
+    out = export_study(st, {"DM": values_df(spark, rows, schema)},
+                       str(tmp_path / "out"), bypass_validation=True)
+
+    pdf = pd.DataFrame(rows, columns=list(cores))
+    doc = xml.dom.minidom.parse(out["define"])
+    items = {e.getAttribute("Name"): e for e in doc.getElementsByTagName("ItemDef")}
+    assert set(items) == set(cores)
+    for name, core in cores.items():
+        vals = pdf[name].dropna().astype(str)
+        length = int(vals.str.rstrip(" ").str.len().max()) if len(vals) else 0
+        has = bool((vals.str.strip(" ") != "").any())
+        if has:
+            origin = "Collected"
+        else:
+            origin = "Not Available" if core == "Exp" else "Derived"
+        item = items[name]
+        assert item.getAttribute("Length") == ("" if name == "AGE" else str(max(length, 1)))
+        assert item.getAttribute("def:HasNoData") == ("No" if has else "Yes")
+        assert item.getElementsByTagName("def:Origin")[0].getAttribute("Type") == origin
 
 
 # --- mockdata-shaped wide study: domains outside the original core ---

@@ -6,18 +6,17 @@ one ItemDef per variable; Char lengths come from the *observed* data
 (max trimmed length), plus a has-data flag; codelists referenced by
 OID.
 
-Spark-side: the only data-plane work is the per-column aggregate pass
-(max length + any-non-null), computed in ONE ``agg`` per domain;
-everything else is driver-side templating over schema-sized metadata.
+A pure format writer: the caller passes each dataset's observed
+right-trimmed lengths (one aggregate per domain,
+:func:`~trial_submission_studio_spark.operators.profiling.max_observed_length`,
+shared with the XPT writer), and everything here is driver-side
+templating over schema-sized metadata.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
 from xml.sax.saxutils import quoteattr
-
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 
 @dataclass
@@ -62,36 +61,23 @@ class DefineDataset:
     base_domain: str = ""
 
 
-def observed_metadata(df: DataFrame, columns: list[str]) -> dict[str, tuple[int, bool]]:
-    """One pass: {column: (max_trimmed_length, has_data)}."""
-    aggs = []
-    for c in columns:
-        col = F.col(c).cast("string")
-        aggs.append(F.max(F.length(F.rtrim(col))).alias(f"{c}__len"))
-        aggs.append(
-            F.max(F.when(col.isNotNull() & (F.trim(col) != ""), 1).otherwise(0)).alias(
-                f"{c}__has"
-            )
-        )
-    row = df.agg(*aggs).collect()[0].asDict()
-    return {
-        c: (max(int(row[f"{c}__len"] or 0), 1), bool(row[f"{c}__has"]))
-        for c in columns
-    }
-
-
 def write_define_xml(
     path: str,
     study_oid: str,
     datasets: list[DefineDataset],
-    frames: dict[str, DataFrame],
+    observed: dict[str, dict[str, int]],
     study_name: str = "",
     ig_version: str = "SDTM-IG 3.4",
     codelists: dict[str, list[tuple[str, str]]] | None = None,
     ct_version: str | None = None,
     codelist_meta: dict[str, dict] | None = None,
 ) -> None:
-    """``codelists``: CodeList OID → [(coded value, decode), ...];
+    """``observed``: dataset name → {column: max right-trimmed length}
+    over the columns the dataset carries; variables outside it are
+    skipped. A column's ``Length`` is ``max(n, 1)`` and it has data
+    when ``n > 0``.
+
+    ``codelists``: CodeList OID → [(coded value, decode), ...];
     referenced OIDs without an entry are emitted as external refs.
 
     Reference-parity extras (export/define_xml.rs:195-330):
@@ -186,15 +172,8 @@ def write_define_xml(
     item_defs: list[str] = []
     for ds in datasets:
         dom = ds.domain.upper()
-        df = frames.get(dom)
-        present = (
-            [v for v in ds.variables if df is not None and v.name in df.columns]
-            if df is not None
-            else []
-        )
-        observed = (
-            observed_metadata(df, [v.name for v in present]) if present else {}
-        )
+        lengths = observed.get(dom, {})
+        present = [v for v in ds.variables if v.name in lengths]
         base = (ds.base_domain or dom).upper()
         lines.append(
             f'   <ItemGroupDef OID={q(f"IG.{dom}")} Name={q(dom)} Domain={q(base)} '
@@ -214,11 +193,12 @@ def write_define_xml(
             )
         lines.append("   </ItemGroupDef>")
         for v in present:
-            length, has = observed.get(v.name, (1, False))
+            length = lengths[v.name]
+            has = length > 0
             if v.data_type in ("float", "integer"):
                 len_attr = ""
             else:
-                len_attr = f' Length="{v.length or length}"'
+                len_attr = f' Length="{v.length or max(length, 1)}"'
             item = (
                 f'   <ItemDef OID={q(f"IT.{dom}.{v.name}")} Name={q(v.name)} '
                 f'DataType={q(v.data_type)}{len_attr} def:HasNoData'

@@ -265,7 +265,9 @@ def compile_pipeline(df: DataFrame, rules: list[Rule], ctx: NormalizationContext
             return normalize_iso_duration(F.col(r.source)).alias(t)
         if r.transform == "numeric":
             return parse_numeric(F.col(r.source)).alias(t)
-        return F.col(r.source).cast("string").alias(t)  # copy
+        if r.transform == "copy":
+            return F.col(r.source).cast("string").alias(t)
+        raise ValueError(f"transform {r.transform!r} ({t}) has no compile branch")
 
     for r in rules:
         if r.transform in ("sequence", "study_day"):

@@ -148,19 +148,17 @@ def distinct_samples(df: DataFrame, column: str, n: int = 5) -> DataFrame:
 
 
 def max_observed_length(df: DataFrame, columns: list[str]) -> dict[str, int]:
-    """A4: XPT/Define-XML Char length = max trimmed length, floor 1
-    (reference: export/common.rs:83-119)."""
+    """A4/A9 in one pass: {column: max right-trimmed length}, 0 when the
+    column holds no non-blank value (reference: export/common.rs:83-119).
+
+    Export reads both facts from this one aggregate: the XPT/Define-XML
+    Char length is ``max(n, 1)`` and the has-data flag is ``n > 0``
+    (Spark's ``rtrim`` strips the same character ``trim`` does, so a
+    positive right-trimmed length is exactly "non-blank")."""
+    if not columns:
+        return {}
     aggs = [
         F.max(F.length(F.rtrim(F.col(c).cast("string")))).alias(c) for c in columns
     ]
     row = df.agg(*aggs).collect()[0].asDict()
-    return {c: max(int(row[c] or 0), 1) for c in columns}
-
-
-def has_collected_data(df: DataFrame, columns: list[str]) -> dict[str, bool]:
-    """A9: any non-blank value per column (Define-XML HasData flag)."""
-    aggs = [
-        F.max(F.when(_nonblank(F.col(c)), 1).otherwise(0)).alias(c) for c in columns
-    ]
-    row = df.agg(*aggs).collect()[0].asDict()
-    return {c: bool(row[c]) for c in columns}
+    return {c: int(row[c] or 0) for c in columns}

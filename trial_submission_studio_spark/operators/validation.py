@@ -119,6 +119,31 @@ def _sample_agg(value: Column, pred: Column, n: int = 5) -> Column:
     )
 
 
+def _summary_issue(
+    offending: DataFrame,
+    sample: Column,
+    domain: str,
+    variable: str,
+    severity: str,
+    category: str = "CrossReference",
+    count: Column | None = None,
+) -> DataFrame:
+    """One-row issue frame for a check whose offending rows are
+    ``offending``: their count (or ``count``) and up to five sorted
+    ``sample`` values, from one ``collect``; empty when nothing
+    offends."""
+    agg = offending.agg(
+        (F.count(F.lit(1)) if count is None else count).alias("cnt"),
+        _sample_agg(sample, F.lit(True)).alias("samples"),
+    ).collect()[0]
+    rows = (
+        [(domain, variable, category, severity, int(agg["cnt"]), agg["samples"])]
+        if agg["cnt"]
+        else []
+    )
+    return _issue_frame(offending.sparkSession, rows)
+
+
 def validate_domain(
     df: DataFrame,
     domain: str,
@@ -177,7 +202,6 @@ def validate_domain(
                 f"sum(CASE WHEN {ln} > {int(v.length)} THEN 1 ELSE 0 END)"
                 f" AS `{v.name}__toolong`"
             )
-            sqls.append(f"max({ln}) AS `{v.name}__maxlen`")
 
     row = df.agg(*[F.expr(s) for s in sqls]).collect()[0].asDict()
     n = row["__n"]
@@ -230,15 +254,11 @@ def duplicate_sequence_issues(df: DataFrame, domain: str, subject_col: str = "US
         df.groupBy(subject_col, seq)
         .agg(F.count(F.lit(1)).alias("n"))
         .filter(F.col("n") > 1)
-        .agg(
-            F.coalesce(F.sum(F.col("n") - 1), F.lit(0)).alias("extra"),
-            _sample_agg(F.concat_ws("/", subject_col, seq), F.lit(True)).alias("samples"),
-        )
-        .collect()[0]
     )
-    if not dups["extra"]:
-        return _issue_frame(spark, [])
-    return _issue_frame(spark, [(domain, seq, "Consistency", "Error", int(dups["extra"]), dups["samples"])])
+    return _summary_issue(
+        dups, F.concat_ws("/", subject_col, seq), domain, seq, "Error",
+        category="Consistency", count=F.sum(F.col("n") - 1),
+    )
 
 
 # --- cross-domain checks (J1-J6) -------------------------------------------
@@ -252,14 +272,7 @@ def usubjid_not_in_dm(dom_df: DataFrame, dm_df: DataFrame, domain: str) -> DataF
         .filter(~_blank(F.col("USUBJID")))
         .join(dm_keys, "USUBJID", "left_anti")
     )
-    agg = missing.agg(
-        F.count(F.lit(1)).alias("cnt"),
-        _sample_agg(F.col("USUBJID"), F.lit(True)).alias("samples"),
-    ).collect()[0]
-    spark = dom_df.sparkSession
-    if not agg["cnt"]:
-        return _issue_frame(spark, [])
-    return _issue_frame(spark, [(domain, "USUBJID", "CrossReference", "Error", int(agg["cnt"]), agg["samples"])])
+    return _summary_issue(missing, F.col("USUBJID"), domain, "USUBJID", "Error")
 
 
 def rdomain_invalid(df: DataFrame, domain: str, submitted_domains: list[str]) -> DataFrame:
@@ -271,13 +284,7 @@ def rdomain_invalid(df: DataFrame, domain: str, submitted_domains: list[str]) ->
         ~_blank(F.col("RDOMAIN"))
         & ~F.upper(F.trim("RDOMAIN")).isin([d.upper() for d in submitted_domains])
     )
-    agg = bad.agg(
-        F.count(F.lit(1)).alias("cnt"),
-        _sample_agg(F.col("RDOMAIN"), F.lit(True)).alias("samples"),
-    ).collect()[0]
-    if not agg["cnt"]:
-        return _issue_frame(spark, [])
-    return _issue_frame(spark, [(domain, "RDOMAIN", "CrossReference", "Error", int(agg["cnt"]), agg["samples"])])
+    return _summary_issue(bad, F.col("RDOMAIN"), domain, "RDOMAIN", "Error")
 
 
 def rsubjid_not_in_dm(rel: DataFrame, dm_df: DataFrame, domain: str = "RELSUB") -> DataFrame:
@@ -296,13 +303,7 @@ def rsubjid_not_in_dm(rel: DataFrame, dm_df: DataFrame, domain: str = "RELSUB") 
     missing = probes.join(
         F.broadcast(dm_keys), probes["__rsubj"] == F.col("__dm_key"), "left_anti"
     )
-    agg = missing.agg(
-        F.count(F.lit(1)).alias("cnt"),
-        _sample_agg(F.col("__rsubj"), F.lit(True)).alias("samples"),
-    ).collect()[0]
-    if not agg["cnt"]:
-        return _issue_frame(spark, [])
-    return _issue_frame(spark, [(domain, "RSUBJID", "CrossReference", "Error", int(agg["cnt"]), agg["samples"])])
+    return _summary_issue(missing, F.col("__rsubj"), domain, "RSUBJID", "Error")
 
 
 def relspec_invalid_parents(relspec: DataFrame, domain: str = "RELSPEC") -> DataFrame:
@@ -320,18 +321,13 @@ def relspec_invalid_parents(relspec: DataFrame, domain: str = "RELSPEC") -> Data
         F.trim(F.col("REFID").cast("string")).alias("__parent"),
     ).distinct()
     missing = probes.join(keys, ["__usubj", "__parent"], "left_anti")
-    agg = missing.agg(
-        F.count(F.lit(1)).alias("cnt"),
-        _sample_agg(F.concat_ws("/", "__usubj", "__parent"), F.lit(True)).alias("samples"),
-    ).collect()[0]
-    if not agg["cnt"]:
-        return _issue_frame(spark, [])
-    return _issue_frame(spark, [(domain, "PARENT", "CrossReference", "Error", int(agg["cnt"]), agg["samples"])])
+    return _summary_issue(
+        missing, F.concat_ws("/", "__usubj", "__parent"), domain, "PARENT", "Error"
+    )
 
 
 def relsub_not_bidirectional(rel: DataFrame, domain: str = "RELSUB") -> DataFrame:
     """J4/V12: (U,R) pairs lacking the reverse (R,U) — self anti join."""
-    spark = rel.sparkSession
     a, b = rel.alias("a"), rel.alias("b")
     missing = a.join(
         b,
@@ -339,13 +335,9 @@ def relsub_not_bidirectional(rel: DataFrame, domain: str = "RELSUB") -> DataFram
         & (F.col("a.RSUBJID") == F.col("b.USUBJID")),
         "left_anti",
     )
-    agg = missing.agg(
-        F.count(F.lit(1)).alias("cnt"),
-        _sample_agg(F.concat_ws("->", "USUBJID", "RSUBJID"), F.lit(True)).alias("samples"),
-    ).collect()[0]
-    if not agg["cnt"]:
-        return _issue_frame(spark, [])
-    return _issue_frame(spark, [(domain, "RSUBJID", "CrossReference", "Warning", int(agg["cnt"]), agg["samples"])])
+    return _summary_issue(
+        missing, F.concat_ws("->", "USUBJID", "RSUBJID"), domain, "RSUBJID", "Warning"
+    )
 
 
 def relrec_invalid_references(

@@ -9,9 +9,10 @@
    (tss-submit/src/normalize/preview.rs:144-171): infer rules, bind
    mappings, compile, execute.
 3. :func:`export_study` ≙ execute_export (tss-gui/src/service/
-   export.rs:127-276): validate (errors gate unless bypassed),
-   normalize every domain, build SUPP frames, write XPT or
-   Dataset-XML plus define.xml.
+   export.rs:127-276): validate only to gate (errors block; a bypassed
+   gate runs no validation at all), then write XPT or Dataset-XML per
+   domain plus define.xml, both fed by one observed-length scan per
+   domain.
 
 Driver/executor split: everything schema-sized (mappings, rule
 inference, XML envelopes) runs on the driver; every data-shaped step
@@ -309,17 +310,25 @@ def export_study(
 ) -> dict[str, str]:
     """Validate-gate then write every domain + define.xml.
 
-    Returns {artifact name: path}. Errors block export unless
-    ``bypass_validation`` (reference: export.rs:139-168).
+    Returns {artifact name: path}. ``fmt`` is ``"xpt"`` or ``"xml"``
+    (Dataset-XML). Errors block export unless ``bypass_validation``
+    (reference: export.rs:139-168); validation runs only to decide
+    that, so a bypassed export launches no validation job.
     """
+    if fmt not in ("xpt", "xml"):
+        raise ValueError(f"fmt must be 'xpt' or 'xml'; got {fmt!r}")
+    if not bypass_validation:
+        report = validate_study(study, frames)
+        n_errors = report.filter(F.col("severity") == "Error").count()
+        if n_errors:
+            raise ValueError(
+                f"validation reported {n_errors} error issue(s); export blocked"
+            )
     os.makedirs(out_dir, exist_ok=True)
-    report = validate_study(study, frames)
-    n_errors = report.filter(F.col("severity") == "Error").count()
-    if n_errors and not bypass_validation:
-        raise ValueError(f"validation reported {n_errors} error issue(s); export blocked")
 
     written: dict[str, str] = {}
     define_datasets: list[DefineDataset] = []
+    observed: dict[str, dict[str, int]] = {}
     for code in sorted(frames):  # O1: dataset-name order
         df = frames[code]
         base = base_domain_code(code)
@@ -327,17 +336,16 @@ def export_study(
             "variables", []
         )
         present = [v for v in variables if v["name"] in df.columns]
+        # one scan per domain serves the XPT lengths and define.xml
+        lengths = max_observed_length(df, [v["name"] for v in present])
+        observed[code] = lengths
         if fmt == "xpt":
-            char_cols = [
-                v["name"] for v in present if v.get("data_type", "Char") == "Char"
-            ]
-            lengths = max_observed_length(df, char_cols) if char_cols else {}
             xvars = [
                 XptVariable(
                     v["name"],
                     v.get("label", ""),
                     v.get("data_type", "Char") == "Num",
-                    lengths.get(v["name"], 8),
+                    lengths[v["name"]],
                 )
                 for v in present
             ]
@@ -406,7 +414,7 @@ def export_study(
         define_path,
         f"{study.study_id}.STUDY",
         define_datasets,
-        frames,
+        observed,
         codelists=cl_terms,
         ct_version=ct_version,
         codelist_meta=cl_meta,
