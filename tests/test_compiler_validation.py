@@ -151,14 +151,28 @@ def test_validate_domain(spark):
 
 
 def test_cross_domain_checks(spark):
-    dm = values_df(spark, [("S1",), ("S2",)], "USUBJID string")
-    ae = values_df(spark, [("S1",), ("S3",)], "USUBJID string")
+    dm = values_df(spark, [("S1",), ("S2",), (None,), ("  ",)], "USUBJID string")
+    # blank USUBJIDs are never probed; keys match untrimmed, samples trim
+    ae = values_df(
+        spark, [("S1",), ("S3",), ("S3",), (None,), ("  ",), (" S1 ",)], "USUBJID string"
+    )
     got = usubjid_not_in_dm(ae, dm, "AE").collect()
-    assert got[0]["count"] == 1 and got[0]["samples"] == ["S3"]
+    assert [tuple(r) for r in got] == [
+        ("AE", "USUBJID", "CrossReference", "Error", 3, ["S1", "S3"])
+    ]
+    assert usubjid_not_in_dm(ae.limit(0), dm, "AE").collect() == []
 
-    co = values_df(spark, [("AE",), ("ZZ",)], "RDOMAIN string")
+    # RDOMAIN compares trimmed and upper-cased; blank is not checked
+    co = values_df(
+        spark,
+        [("AE",), ("ZZ",), ("ae",), (" DM ",), (None,), ("  ",), (" zz",)],
+        "RDOMAIN string",
+    )
     got = rdomain_invalid(co, "CO", ["AE", "DM"]).collect()
-    assert got[0]["count"] == 1 and got[0]["samples"] == ["ZZ"]
+    assert [tuple(r) for r in got] == [
+        ("CO", "RDOMAIN", "CrossReference", "Error", 2, ["ZZ", "zz"])
+    ]
+    assert rdomain_invalid(co.limit(0), "CO", ["AE", "DM"]).collect() == []
 
     rel = values_df(
         spark, [("S1", "S2", "SPOUSE"), ("S2", "S1", "SPOUSE"), ("S3", "S4", "TWIN")],
@@ -188,12 +202,72 @@ def test_relrec_probe(spark):
 
 
 def test_duplicate_sequence_issues(spark):
+    # groups of 2 and 3 add 1 and 2; null and blank keys group like any
+    # other value, and concat_ws drops the null half of a sample
     df = values_df(
-        spark, [("S1", 1), ("S1", 1), ("S2", 1)], "USUBJID string, AESEQ int"
+        spark,
+        [
+            ("S1", 1), ("S1", 1), ("S2", 1), ("S3", 2), ("S3", 2), ("S3", 2),
+            (None, 5), (None, 5), ("  ", 6), ("  ", 6), ("S4", None), ("S4", None),
+        ],
+        "USUBJID string, AESEQ int",
     )
     got = duplicate_sequence_issues(df, "AE").collect()
-    assert len(got) == 1 and got[0]["count"] == 1
-    assert tuple(got[0]) == ("AE", "AESEQ", "Consistency", "Error", 1, ["S1/1"])
+    assert [tuple(r) for r in got] == [
+        ("AE", "AESEQ", "Consistency", "Error", 6, ["/6", "5", "S1/1", "S3/2", "S4"])
+    ]
+    assert duplicate_sequence_issues(df.limit(0), "AE").collect() == []
+
+
+def test_validate_domain_folds_cross_checks(spark):
+    """One frame carrying every defect: the single aggregate gives the
+    rows of validate_domain, duplicate_sequence_issues,
+    usubjid_not_in_dm and rdomain_invalid as separate queries, in that
+    order (rows captured from those queries)."""
+    df = values_df(
+        spark,
+        [
+            ("S1", 1, "ok", "2024-01-15", "12", "AE", None),
+            ("S1", 1, "long headache", "13/13/2024", "xx", "zz", None),
+            ("S1", 1, None, "2024", "5", " ae ", None),
+            ("S9", 2, "x", None, "1,000", "QQ", None),
+            ("S9", 2, "y", "2024-02", "abc", None, None),
+            (None, 3, "z", "2024-03-01", "7", "DM", None),
+            ("  ", 4, "w", "2024", "8", "  ", None),
+            ("S2", None, "v", "bad", "9", "dm", None),
+            ("S2", None, "u", "2024", "10", "xx", None),
+        ],
+        "USUBJID string, AESEQ int, AETERM string, AESTDTC string, "
+        "AEDOSE string, RDOMAIN string, AEOUT string",
+    )
+    dm = values_df(spark, [("S1",), ("S2",), ("  ",), (None,)], "USUBJID string")
+    specs = [
+        VariableSpec("USUBJID", core="Req", role="Identifier"),
+        VariableSpec("AETERM", core="Req", length=5),
+        VariableSpec("AESTDTC", core="Exp"),
+        VariableSpec("AEDOSE", core="Perm", data_type="Num"),
+        VariableSpec("AEOUT", core="Exp"),
+        VariableSpec("AEDECOD", core="Exp"),
+        VariableSpec("AEACN", core="Exp"),
+        VariableSpec("AEBODSYS", core="Req"),
+    ]
+    got = validate_domain(
+        df, "AE", specs, {"AEACN"}, dm=dm, submitted=["AE", "DM"], seq_domain="AE"
+    ).collect()
+    assert [tuple(r) for r in got] == [
+        ("AE", "USUBJID", "Presence", "Error", 2, []),
+        ("AE", "USUBJID", "Presence", "Error", 2, []),
+        ("AE", "AETERM", "Presence", "Error", 1, []),
+        ("AE", "AETERM", "Limit", "Warning", 1, []),
+        ("AE", "AESTDTC", "Format", "Error", 2, ["13/13/2024", "bad"]),
+        ("AE", "AEDOSE", "Format", "Error", 2, ["abc", "xx"]),
+        ("AE", "AEOUT", "Presence", "Warning", 9, []),
+        ("AE", "AEDECOD", "Presence", "Warning", 1, []),
+        ("AE", "AEBODSYS", "Presence", "Error", 1, []),
+        ("AE", "AESEQ", "Consistency", "Error", 4, ["S1/1", "S2", "S9/2"]),
+        ("AE", "USUBJID", "CrossReference", "Error", 2, ["S9"]),
+        ("AE", "RDOMAIN", "CrossReference", "Error", 3, ["QQ", "xx", "zz"]),
+    ]
 
 
 def test_sdtm_registry_roundtrip_and_inference(spark):

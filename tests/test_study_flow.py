@@ -146,6 +146,32 @@ def test_bypassed_export_job_budget(spark, study, tmp_path):
     assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 21
 
 
+def test_validate_study_job_budget(spark, study):
+    """validate_study runs one aggregate per frame: duplicate --SEQ,
+    USUBJID∈DM and RDOMAIN no longer launch queries of their own
+    (21 jobs on the 2-domain fixture when they did, 11 now)."""
+    frames = _built(study)
+    sc = spark.sparkContext
+    group = "test-validate-study-job-budget"
+    sc.setJobGroup(group, "validate_study")
+    try:
+        validate_study(study, frames)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 15
+
+
+def test_perfbench_targets_resolve():
+    """Every function the traced benchmark wraps is still an attribute
+    of the module it is looked up through (study.py keeps importing
+    the validation wrappers it no longer calls for this)."""
+    from perfbench.tracing import TARGETS
+
+    missing = [(m.__name__, a) for m, a, _ in TARGETS if not callable(getattr(m, a, None))]
+    assert missing == []
+
+
 def test_export_rejects_unknown_format(spark, tmp_path):
     out = tmp_path / "out"
     with pytest.raises(ValueError, match="fmt"):

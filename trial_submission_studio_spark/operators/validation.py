@@ -10,9 +10,12 @@ schema, unioned into a single report:
 categories ≙ validate/issue.rs taxonomy: Presence, Format,
 Consistency, Limit, Terminology, CrossReference.
 
-Scale shape: per-domain checks are one aggregation pass per domain
-(all per-column predicates in a single ``agg``); cross-domain checks
-are anti joins, broadcast where the build side is a key set.
+Scale shape: one aggregate query per domain. :func:`validate_domain`
+turns a rule table into a single ``agg`` that holds every per-column
+predicate and the three per-row cross checks (duplicate --SEQ via a
+window, USUBJID∈DM via a broadcast left join, RDOMAIN via a plain
+predicate). Only the cross-table checks of RELSUB, RELSPEC and RELREC
+are anti joins of their own.
 """
 
 from __future__ import annotations
@@ -113,31 +116,23 @@ def _blank(c: Column) -> Column:
     return c.isNull() | (F.trim(c.cast("string")) == "")
 
 
-def _sample_agg(value: Column, pred: Column, n: int = 5) -> Column:
-    return F.slice(
-        F.sort_array(F.collect_set(F.when(pred, F.trim(value.cast("string"))))), 1, n
-    )
+def _sample_agg(value: Column) -> Column:
+    return F.slice(F.sort_array(F.collect_set(F.trim(value.cast("string")))), 1, 5)
 
 
 def _summary_issue(
-    offending: DataFrame,
-    sample: Column,
-    domain: str,
-    variable: str,
-    severity: str,
-    category: str = "CrossReference",
-    count: Column | None = None,
+    offending: DataFrame, sample: Column, domain: str, variable: str, severity: str
 ) -> DataFrame:
-    """One-row issue frame for a check whose offending rows are
-    ``offending``: their count (or ``count``) and up to five sorted
+    """One-row CrossReference issue frame for a cross-table check whose
+    offending rows are ``offending``: their count and up to five sorted
     ``sample`` values, from one ``collect``; empty when nothing
     offends."""
     agg = offending.agg(
-        (F.count(F.lit(1)) if count is None else count).alias("cnt"),
-        _sample_agg(sample, F.lit(True)).alias("samples"),
+        F.count(F.lit(1)).alias("cnt"),
+        _sample_agg(sample).alias("samples"),
     ).collect()[0]
     rows = (
-        [(domain, variable, category, severity, int(agg["cnt"]), agg["samples"])]
+        [(domain, variable, "CrossReference", severity, int(agg["cnt"]), agg["samples"])]
         if agg["cnt"]
         else []
     )
@@ -149,20 +144,36 @@ def validate_domain(
     domain: str,
     variables: list[VariableSpec],
     not_collected: set[str] | None = None,
+    dm: DataFrame | None = None,
+    submitted: list[str] | None = None,
+    seq_domain: str | None = None,
 ) -> DataFrame:
-    """V1–V7 in one scan + driver-side assembly of the issue frame."""
+    """Every per-row check of one domain in one aggregate query.
+
+    V1–V7 come from ``variables``. Three more ride along when their
+    data is given: V5 duplicate ``{seq_domain}SEQ`` per USUBJID, J1
+    USUBJID∈``dm`` and J2 RDOMAIN∈``submitted``.
+
+    One loop emits rule tuples ``(variable, category, severity, count,
+    samples)``: ``count`` is a SQL aggregate, or an int when the
+    driver already knows it (a missing column), which needs no scan.
+    One ``agg`` evaluates every SQL rule, and one loop turns its row
+    into issue rows, one per rule with a nonzero count.
+    """
     not_collected = not_collected or set()
-    spark = df.sparkSession
     present = {c.upper(): c for c in df.columns}
 
     # Aggregates are built as SQL STRINGS and parsed in one expr each:
     # the Column-DSL formulation made ~8 py4j round trips per
     # aggregate (~200 for a full domain), putting driver-side plan
     # construction above the actual 150K-row execution time. Same
-    # predicates, same names — pinned by the v_domain_check_gates
-    # oracle and the validate tests.
+    # predicates as the v_domain_check_gates oracle, pinned by it and
+    # the validate tests.
     def blank(col_sql: str) -> str:
         return f"({col_sql} IS NULL OR trim(CAST({col_sql} AS STRING)) = '')"
+
+    def hits(pred: str) -> str:
+        return f"sum(CASE WHEN {pred} THEN 1 ELSE 0 END)"
 
     def samples(col_sql: str, pred: str, n: int = 3) -> str:
         return (
@@ -173,118 +184,101 @@ def validate_domain(
     # Spark's SQL parser processes backslash escapes inside string
     # literals, so regex backslashes must double when embedded
     iso_sql = ISO_PARTIAL_RE.replace("\\", "\\\\")
-    sqls: list[str] = ["count(1) AS `__n`"]
+    rules: list[tuple[str, str, str, int | str, str | None]] = []
+
+    def rule(variable, category, severity, count, samples_sql=None):
+        rules.append((variable, category, severity, count, samples_sql))
+
     for v in variables:
         c = present.get(v.name.upper())
+        core = v.core.lower()
+        expected = core == "exp" and v.name.upper() not in not_collected
         if c is None:
+            if core == "req":
+                rule(v.name, "Presence", "Error", 1)  # RequiredMissing
+            elif expected:
+                rule(v.name, "Presence", "Warning", 1)  # ExpectedMissing
             continue
         col = f"`{c}`"
-        sqls.append(
-            f"sum(CASE WHEN {blank(col)} THEN 1 ELSE 0 END) AS `{v.name}__nulls`"
-        )
+        nulls = hits(blank(col))
+        if core == "req":  # RequiredEmpty; all-null counts every row
+            rule(v.name, "Presence", "Error", nulls)
+        elif expected:  # all-null ≙ missing
+            all_null = f"CASE WHEN count(1) > 0 AND {nulls} = count(1) THEN count(1) END"
+            rule(v.name, "Presence", "Warning", all_null)
+        if v.role.lower() == "identifier":
+            rule(v.name, "Presence", "Error", nulls)  # V7 IdentifierNull
         if v.data_type.lower() in ("num", "numeric"):
             bad = (
                 f"(NOT {blank(col)} AND try_cast(regexp_replace("
                 f"trim(CAST({col} AS STRING)), '[,\\\\s]', '') AS DOUBLE) IS NULL)"
             )
-            sqls.append(f"sum(CASE WHEN {bad} THEN 1 ELSE 0 END) AS `{v.name}__badnum`")
-            sqls.append(f"{samples(col, bad)} AS `{v.name}__badnum_samples`")
+            rule(v.name, "Format", "Error", hits(bad), samples(col, bad))
         if v.name.upper().endswith(DATE_SUFFIXES):
             bad = (
                 f"(NOT {blank(col)} AND NOT "
                 f"trim(CAST({col} AS STRING)) RLIKE '{iso_sql}')"
             )
-            sqls.append(f"sum(CASE WHEN {bad} THEN 1 ELSE 0 END) AS `{v.name}__baddate`")
-            sqls.append(f"{samples(col, bad)} AS `{v.name}__baddate_samples`")
+            rule(v.name, "Format", "Error", hits(bad), samples(col, bad))
         if v.length and v.data_type.lower() == "char":
-            ln = f"length(rtrim(CAST({col} AS STRING)))"
-            sqls.append(
-                f"sum(CASE WHEN {ln} > {int(v.length)} THEN 1 ELSE 0 END)"
-                f" AS `{v.name}__toolong`"
-            )
+            too_long = f"length(rtrim(CAST({col} AS STRING))) > {int(v.length)}"
+            rule(v.name, "Limit", "Warning", hits(too_long))
 
-    row = df.agg(*[F.expr(s) for s in sqls]).collect()[0].asDict()
-    n = row["__n"]
+    scan = df
+    seq = present.get(f"{seq_domain.upper()}SEQ") if seq_domain else None
+    if seq is not None and "USUBJID" in df.columns:
+        # V5: every row after the first of a (USUBJID, --SEQ) group is
+        # a duplicate, so a group of n rows adds n-1 and shows its key
+        key = f"USUBJID, `{seq}`"
+        scan = scan.withColumn(
+            "__dup", F.expr(f"row_number() OVER (PARTITION BY {key} ORDER BY {key}) > 1")
+        )
+        rule(seq, "Consistency", "Error", hits("__dup"),
+             samples(f"concat_ws('/', {key})", "__dup", 5))
+    if dm is not None and "USUBJID" in df.columns:
+        keys = dm.select("USUBJID").filter(~_blank(F.col("USUBJID"))).distinct()
+        scan = scan.join(F.broadcast(keys.withColumn("__in_dm", F.lit(True))), "USUBJID", "left")
+        missing = f"(NOT {blank('USUBJID')} AND __in_dm IS NULL)"
+        rule("USUBJID", "CrossReference", "Error", hits(missing), samples("USUBJID", missing, 5))
+    if submitted is not None and "RDOMAIN" in df.columns:
+        bad = f"NOT {blank('RDOMAIN')}"
+        if submitted:
+            codes = ",".join(sql_literal(d.upper()) for d in submitted)
+            bad += f" AND upper(trim(RDOMAIN)) NOT IN ({codes})"
+        rule("RDOMAIN", "CrossReference", "Error", hits(bad), samples("RDOMAIN", bad, 5))
 
-    issues: list[tuple] = []
-
-    def add(variable: str, category: str, severity: str, count: int, samples=None):
-        issues.append((domain, variable, category, severity, int(count), samples or []))
-
-    for v in variables:
-        c = present.get(v.name.upper())
-        core = v.core.lower()
-        if c is None:
-            if core == "req":
-                add(v.name, "Presence", "Error", 1)  # RequiredMissing
-            elif core == "exp" and v.name.upper() not in not_collected:
-                add(v.name, "Presence", "Warning", 1)  # ExpectedMissing
-            continue
-        nulls = row.get(f"{v.name}__nulls", 0) or 0
-        if core == "req":
-            if n > 0 and nulls == n:
-                add(v.name, "Presence", "Error", n)  # all-null ≙ missing
-            elif nulls > 0:
-                add(v.name, "Presence", "Error", nulls)  # RequiredEmpty
-        elif core == "exp" and n > 0 and nulls == n and v.name.upper() not in not_collected:
-            add(v.name, "Presence", "Warning", n)
-        if v.role.lower() == "identifier" and nulls > 0:
-            add(v.name, "Presence", "Error", nulls)  # V7 IdentifierNull
-        badnum = row.get(f"{v.name}__badnum", 0) or 0
-        if badnum:
-            add(v.name, "Format", "Error", badnum, row.get(f"{v.name}__badnum_samples"))
-        baddate = row.get(f"{v.name}__baddate", 0) or 0
-        if baddate:
-            add(v.name, "Format", "Error", baddate, row.get(f"{v.name}__baddate_samples"))
-        toolong = row.get(f"{v.name}__toolong", 0) or 0
-        if toolong:
-            add(v.name, "Limit", "Warning", toolong)
-
-    return _issue_frame(spark, issues)
+    aggs = []
+    for i, (_, _, _, count, smp) in enumerate(rules):
+        if isinstance(count, str):
+            aggs.append(F.expr(f"{count} AS `__c{i}`"))
+            if smp is not None:
+                aggs.append(F.expr(f"{smp} AS `__s{i}`"))
+    row = scan.agg(*aggs).collect()[0].asDict() if aggs else {}
+    issues = []
+    for i, (variable, category, severity, count, smp) in enumerate(rules):
+        n = row[f"__c{i}"] if isinstance(count, str) else count
+        if n:
+            found = row[f"__s{i}"] if smp is not None else []
+            issues.append((domain, variable, category, severity, int(n), found))
+    return _issue_frame(df.sparkSession, issues)
 
 
-def duplicate_sequence_issues(df: DataFrame, domain: str, subject_col: str = "USUBJID") -> DataFrame:
-    """V5 DuplicateSequence as an issue frame (A5 under the hood)."""
-    spark = df.sparkSession
-    seq_cols = [c for c in df.columns if c.upper() == f"{domain.upper()}SEQ"]
-    if not seq_cols or subject_col not in df.columns:
-        return _issue_frame(spark, [])
-    seq = seq_cols[0]
-    dups = (
-        df.groupBy(subject_col, seq)
-        .agg(F.count(F.lit(1)).alias("n"))
-        .filter(F.col("n") > 1)
-    )
-    return _summary_issue(
-        dups, F.concat_ws("/", subject_col, seq), domain, seq, "Error",
-        category="Consistency", count=F.sum(F.col("n") - 1),
-    )
+def duplicate_sequence_issues(df: DataFrame, domain: str) -> DataFrame:
+    """V5 DuplicateSequence alone (see :func:`validate_domain`)."""
+    return validate_domain(df, domain, [], seq_domain=domain)
 
 
 # --- cross-domain checks (J1-J6) -------------------------------------------
 
 
 def usubjid_not_in_dm(dom_df: DataFrame, dm_df: DataFrame, domain: str) -> DataFrame:
-    """J1/V9: USUBJID values absent from DM — left anti join + agg."""
-    dm_keys = dm_df.select(F.col("USUBJID")).filter(~_blank(F.col("USUBJID"))).distinct()
-    missing = (
-        dom_df.select("USUBJID")
-        .filter(~_blank(F.col("USUBJID")))
-        .join(dm_keys, "USUBJID", "left_anti")
-    )
-    return _summary_issue(missing, F.col("USUBJID"), domain, "USUBJID", "Error")
+    """J1/V9 USUBJID∈DM alone (see :func:`validate_domain`)."""
+    return validate_domain(dom_df, domain, [], dm=dm_df)
 
 
 def rdomain_invalid(df: DataFrame, domain: str, submitted_domains: list[str]) -> DataFrame:
-    """J2/V10: RDOMAIN must be a submitted domain code."""
-    spark = df.sparkSession
-    if "RDOMAIN" not in df.columns:
-        return _issue_frame(spark, [])
-    bad = df.filter(
-        ~_blank(F.col("RDOMAIN"))
-        & ~F.upper(F.trim("RDOMAIN")).isin([d.upper() for d in submitted_domains])
-    )
-    return _summary_issue(bad, F.col("RDOMAIN"), domain, "RDOMAIN", "Error")
+    """J2/V10 RDOMAIN∈submitted domains alone (see :func:`validate_domain`)."""
+    return validate_domain(df, domain, [], submitted=submitted_domains)
 
 
 def rsubjid_not_in_dm(rel: DataFrame, dm_df: DataFrame, domain: str = "RELSUB") -> DataFrame:
@@ -359,7 +353,7 @@ def relrec_invalid_references(
     )
     grouped = missing.groupBy(F.upper(F.trim("RDOMAIN")).alias("rd")).agg(
         F.count(F.lit(1)).alias("cnt"),
-        _sample_agg(F.concat_ws("=", "IDVAR", "IDVARVAL"), F.lit(True)).alias("samples"),
+        _sample_agg(F.concat_ws("=", "IDVAR", "IDVARVAL")).alias("samples"),
     )
     rows = [
         (domain, f"RDOMAIN={r['rd']}", "CrossReference", "Error", int(r["cnt"]), r["samples"])
