@@ -38,39 +38,55 @@ BENCH_QUERIES = (
 )
 
 
-def _prepare_cdisc_fixture(spark, sf_dir: str, out_csv: str) -> int:
-    """Write an AE-shaped 2-row-header EDC CSV from the orders table
-    (NOT timed). Returns the row count."""
+def _prepare_cdisc_fixture(sf_dir: str, work: str) -> tuple[dict[str, str], int]:
+    """Write two 2-row-header EDC CSVs into ``work`` (NOT timed): AE
+    from the orders table, and DM from the customer table with one
+    constant reference start, so AE's study day comes from the
+    per-subject DM join. Returns {dataset: csv path} and the AE row
+    count."""
     import duckdb
 
     con = duckdb.connect()
-    tmp_data = out_csv + ".data"
-    con.execute(
-        f"""
-        COPY (
-          SELECT 'S-' || CAST(o_custkey AS VARCHAR) AS c1,
-                 'EVT-' || CAST(o_orderkey % 20 AS VARCHAR) AS c2,
-                 CASE o_orderkey % 3 WHEN 0 THEN 'mild'
-                      WHEN 1 THEN 'Moderate' ELSE 'SEVERE' END AS c3,
-                 strftime(CAST(o_orderdate AS DATE), '%m/%d/%Y') AS c4,
-                 CASE WHEN o_orderkey % 7 = 0
-                      THEN strftime(CAST(o_orderdate AS DATE), '%Y-%m')
-                      ELSE strftime(CAST(o_orderdate AS DATE), '%Y-%m-%d') END AS c5
-          FROM read_parquet('{sf_dir}/orders.parquet')
-          ORDER BY o_orderkey
-        ) TO '{tmp_data}' (FORMAT CSV, HEADER false)
-        """
-    )
+    csvs = {
+        "DM": (
+            b"Subject,Reference Start\nSubjectId,RFSTDAT\n",
+            f"""
+            SELECT 'S-' || CAST(c_custkey AS VARCHAR) AS c1,
+                   '1995-01-01' AS c2
+            FROM read_parquet('{sf_dir}/customer.parquet')
+            ORDER BY c_custkey
+            """,
+        ),
+        "AE": (
+            b"Subject,AE Term,Severity,Start Date,End Date\n"
+            b"SubjectId,AETERM,AESEV,AESTDAT,AEENDAT\n",
+            f"""
+            SELECT 'S-' || CAST(o_custkey AS VARCHAR) AS c1,
+                   'EVT-' || CAST(o_orderkey % 20 AS VARCHAR) AS c2,
+                   CASE o_orderkey % 3 WHEN 0 THEN 'mild'
+                        WHEN 1 THEN 'Moderate' ELSE 'SEVERE' END AS c3,
+                   strftime(CAST(o_orderdate AS DATE), '%m/%d/%Y') AS c4,
+                   CASE WHEN o_orderkey % 7 = 0
+                        THEN strftime(CAST(o_orderdate AS DATE), '%Y-%m')
+                        ELSE strftime(CAST(o_orderdate AS DATE), '%Y-%m-%d') END AS c5
+            FROM read_parquet('{sf_dir}/orders.parquet')
+            ORDER BY o_orderkey
+            """,
+        ),
+    }
+    paths: dict[str, str] = {}
+    for code, (header, query) in csvs.items():
+        path = paths[code] = os.path.join(work, f"{code.lower()}.csv")
+        con.execute(f"COPY ({query}) TO '{path}.data' (FORMAT CSV, HEADER false)")
+        with open(path, "wb") as out:
+            out.write(header)
+            with open(path + ".data", "rb") as data:
+                out.write(data.read())
+        os.remove(path + ".data")
     n = con.execute(
         f"SELECT count(*) FROM read_parquet('{sf_dir}/orders.parquet')"
     ).fetchone()[0]
-    with open(out_csv, "wb") as out:
-        out.write(b"Subject,AE Term,Severity,Start Date,End Date\n")
-        out.write(b"SubjectId,AETERM,AESEV,AESTDAT,AEENDAT\n")
-        with open(tmp_data, "rb") as data:
-            out.write(data.read())
-    os.remove(tmp_data)
-    return int(n)
+    return paths, int(n)
 
 
 def _host_control(spark) -> dict:
@@ -102,105 +118,66 @@ def _host_control(spark) -> dict:
     }
 
 
-def _cdisc_stages(spark, sf_dir: str, timings: dict) -> None:
-    """The reference's three published targets, 1:1 (BASELINE.md:
-    import 100K rows < 2 s, validate < 5 s, export < 3 s), over an
-    EDC-shaped CSV derived from the orders table."""
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from trial_submission_studio_spark.io.xpt import XptVariable, write_xpt
-    from trial_submission_studio_spark.operators.normalize import (
-        NormalizationContext,
-        compile_pipeline,
-        infer_rules,
-    )
-    from trial_submission_studio_spark.operators.validation import (
-        VariableSpec,
-        duplicate_sequence_issues,
-        validate_domain,
-    )
-    from trial_submission_studio_spark.sources.csv_reader import read_source_csv
-    from trial_submission_studio_spark.standards.ct_catalog import builtin_lookup_df
-    from trial_submission_studio_spark.standards.sdtm_domains import DOMAINS
-
-    work = tempfile.mkdtemp(prefix="spark_graft_bench_")
-    csv_path = os.path.join(work, "ae.csv")
-    n_rows = _prepare_cdisc_fixture(spark, sf_dir, csv_path)
-
-    t0 = time.time()
-    src = read_source_csv(spark, csv_path, header_rows=2)
-    # import = CSV -> memory, like the reference (its 2s target loads
-    # the frame); downstream stages then transform the resident data
-    # instead of re-scanning the file
-    src.df = src.df.persist()
-    src.df.write.format("noop").mode("overwrite").save()
-    timings["cdisc_import_csv"] = round(time.time() - t0, 3)
-
-    mappings = {
+#: the mappings a study team accepts for the cdisc bench fixture
+CDISC_MAPPINGS = {
+    "DM": {"SUBJID": "SubjectId", "RFSTDTC": "RFSTDAT"},
+    "AE": {
         "SUBJID": "SubjectId",
         "AETERM": "AETERM",
         "AESEV": "AESEV",
         "AESTDTC": "AESTDAT",
         "AEENDTC": "AEENDAT",
-    }
-    ctx = NormalizationContext(
-        study_id="BENCH",
-        domain_code="AE",
-        order_col="_row_id",
-        subject_col="SubjectId",
-        ct_lookup=builtin_lookup_df(spark),
-        global_ref_date="1995-01-01",
-    )
+    },
+}
+
+
+def _cdisc_stages(spark, sf_dir: str, timings: dict) -> None:
+    """The reference's three published targets, 1:1 (BASELINE.md:
+    import 100K rows < 2 s, validate < 5 s, export < 3 s), timed on the
+    public study lifecycle (``study.py``: create, build, validate,
+    export) over EDC-shaped DM and AE CSVs. Each stage persists the
+    frames it hands to the next, so later stages transform resident
+    data instead of re-scanning the files."""
+    import shutil
+    import tempfile
+
+    from trial_submission_studio_spark import study as S
+
+    def resident(df):
+        df = df.persist()
+        df.write.format("noop").mode("overwrite").save()
+        return df
+
+    work = tempfile.mkdtemp(prefix="spark_graft_bench_")
+    paths, n_rows = _prepare_cdisc_fixture(sf_dir, work)
+
     t0 = time.time()
-    built = compile_pipeline(
-        src.df, infer_rules(DOMAINS["AE"]["variables"], mappings, ctx), ctx
-    ).persist()  # validate + export consume the built domain, not the raw CSV
-    built.write.format("noop").mode("overwrite").save()
+    st = S.create_study(spark, "BENCH", paths)
+    for code, mappings in CDISC_MAPPINGS.items():
+        for var, col in mappings.items():
+            st.mappings[code].accept(var, col)
+    # import = CSV -> memory, like the reference (its 2s target loads
+    # the frame)
+    for table in st.sources.values():
+        table.df = resident(table.df)
+    timings["cdisc_import_csv"] = round(time.time() - t0, 3)
+
+    t0 = time.time()
+    dm = resident(S.build_domain(st, "DM"))
+    frames = {"DM": dm, "AE": resident(S.build_domain(st, "AE", dm_frame=dm))}
     timings["cdisc_build_pipeline"] = round(time.time() - t0, 3)
 
-    specs = [
-        VariableSpec(
-            v["name"],
-            core=v.get("core", "Perm"),
-            data_type=v.get("data_type", "Char"),
-            length=v.get("length"),
-            role=v.get("role", ""),
-            codelist_code=v.get("codelist_code") or None,
-        )
-        for v in DOMAINS["AE"]["variables"]
-    ]
     t0 = time.time()
-    validate_domain(built, "AE", specs).collect()
-    duplicate_sequence_issues(built, "AE").collect()
+    S.validate_study(st, frames).collect()
     timings["cdisc_validate"] = round(time.time() - t0, 3)
 
-    export_cols = [
-        XptVariable("STUDYID", "Study Identifier", False, 8),
-        XptVariable("USUBJID", "Unique Subject Identifier", False, 20),
-        XptVariable("AESEQ", "Sequence Number", True),
-        XptVariable("AETERM", "Reported Term", False, 12),
-        XptVariable("AESEV", "Severity", False, 10),
-        XptVariable("AESTDTC", "Start Date/Time", False, 10),
-        XptVariable("AEENDTC", "End Date/Time", False, 10),
-        XptVariable("AESTDY", "Study Day of Start", True),
-    ]
     t0 = time.time()
-    # no pre-export sort: the built frame's order is already
-    # deterministic (window output), and the reference's export writes
-    # frame order too — a global sort would only add a shuffle
-    write_xpt(
-        built.select([F.col(v.name) for v in export_cols]),
-        os.path.join(work, "ae.xpt"),
-        export_cols,
-        "AE",
-        "Adverse Events",
-    )
+    S.export_study(st, frames, os.path.join(work, "out"), bypass_validation=True)
     timings["cdisc_export_xpt"] = round(time.time() - t0, 3)
     timings["cdisc_rows"] = n_rows
-    built.unpersist()
-    src.df.unpersist()
+    for df in (*frames.values(), *(t.df for t in st.sources.values())):
+        df.unpersist()
+    shutil.rmtree(work, ignore_errors=True)
 
 
 def main() -> None:

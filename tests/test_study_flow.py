@@ -815,20 +815,37 @@ def test_split_dataset_study_flow(spark, tmp_path):
 def test_multi_file_domain_union(spark, tmp_path):
     """One domain delivered as several CSVs: create_study takes a
     path LIST, unions by name, and _row_id stays dense and 1-based in
-    file order so --SEQ numbering matches a pre-concatenated file."""
+    file order so --SEQ numbering matches a pre-concatenated file.
+    Each file is scanned for its rows once: the per-file row counts
+    that offset ``_row_id`` come from the offset scan itself (15 jobs
+    for three files when a second count() pass computed them)."""
     (tmp_path / "lb1.csv").write_text(LBCC_CSV)
     (tmp_path / "lb2.csv").write_text(LBHM_CSV)
-    st = create_study(
-        spark, "MF",
-        {"LB": [str(tmp_path / "lb1.csv"), str(tmp_path / "lb2.csv")]},
-        min_confidence=0.99,
+    # column order may differ between files; frames align by name
+    (tmp_path / "lb3.csv").write_text(
+        "Unit,Subject,Lab Code,Result,Sample Date\n"
+        "UNIT,SubjectId,LBCODE,RESULT,LBDAT\n"
+        "mg/dL,L-01,GLUC,95,2024-01-14\n"
     )
+    sc = spark.sparkContext
+    group = "test-multi-file-domain-union"
+    sc.setJobGroup(group, "three-file create_study")
+    try:
+        st = create_study(
+            spark, "MF",
+            {"LB": [str(tmp_path / f"lb{i}.csv") for i in (1, 2, 3)]},
+            min_confidence=0.99,
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 9
     src = st.sources["LB"]
     ids = [
         (r["_row_id"], r["LBCODE"])
         for r in src.df.orderBy("_row_id").collect()
     ]
-    assert ids == [(1, "ALT"), (2, "ALT"), (3, "HGB"), (4, "HGB")]
+    assert ids == [(1, "ALT"), (2, "ALT"), (3, "HGB"), (4, "HGB"), (5, "GLUC")]
     assert src.labels["LBCODE"] == "Lab Code"
 
     st.mappings["LB"].accept("SUBJID", "SubjectId")
@@ -838,6 +855,7 @@ def test_multi_file_domain_union(spark, tmp_path):
     got = {(r["USUBJID"], r["LBTESTCD"]): r["LBSEQ"] for r in lb.collect()}
     # file order survives: ALT (file 1) numbers before HGB (file 2)
     assert got[("MF-L-01", "ALT")] == 1 and got[("MF-L-01", "HGB")] == 2
+    assert got[("MF-L-01", "GLUC")] == 3
     assert got[("MF-L-02", "ALT")] == 1 and got[("MF-L-02", "HGB")] == 2
 
     # mismatched columns refuse loudly

@@ -20,27 +20,13 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 import __spark_entry__ as entrymod  # noqa: E402
+from bench import BENCH_QUERIES  # noqa: E402
 from trial_submission_studio_spark import get_spark  # noqa: E402
-
-DEFAULT = (
-    "q1_pricing_summary",
-    "q3_order_revenue",
-    "t3_sequence_number",
-    "t4_iso8601_normalize",
-    "t7_study_day",
-    "t9_numeric_parse",
-    "e2e_cdisc_pipeline",
-    "events_tumbling_window",
-    "text_analysis_gates",
-    "dedup_minhash_lsh",
-    "simhash_fingerprints",
-    "ann_cosine_topk",
-)
 
 
 def main() -> None:
     suffix = sys.argv[1] if len(sys.argv) > 1 else "before"
-    names = sys.argv[2:] or list(DEFAULT)
+    names = sys.argv[2:] or list(BENCH_QUERIES)
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     out_dir = os.path.join(
         REPO, "plans", os.environ.get("SPARK_GRAFT_PLANS_TAG", "r17")

@@ -135,6 +135,18 @@ def read_source_csv(
     normalized to NULL; a deterministic ``_row_id`` (1-based file row
     order) is attached for --SEQ and sink row numbering.
     """
+    return _read_counted(spark, path, header_rows, encoding, blank_as_null)[0]
+
+
+def _read_counted(
+    spark: SparkSession,
+    path: str,
+    header_rows: int,
+    encoding: str | None,
+    blank_as_null: bool,
+) -> tuple[SourceTable, int]:
+    """:func:`read_source_csv` plus the file's data-row count, which
+    the ``_row_id`` offset scan yields for free."""
     if header_rows not in (1, 2):
         raise ValueError("header_rows must be 1 or 2")
     enc = encoding or detect_encoding(path)
@@ -224,7 +236,8 @@ def read_source_csv(
             ],
             SourceTable.ROW_ID,
         )
-    return SourceTable(df=df, columns=names, labels=labels, encoding=enc, path=path)
+    table = SourceTable(df=df, columns=names, labels=labels, encoding=enc, path=path)
+    return table, max(acc - header_rows, 0)
 
 
 def read_source_csvs(
@@ -246,8 +259,8 @@ def read_source_csvs(
     sink row order behave exactly as if the files had been
     pre-concatenated. Labels merge first-file-wins.
 
-    Each per-file count() is one parallel scan of a ≤500 MB CSV (the
-    reference's own cap); the at-scale path is parquet.
+    Each file's row count comes from the scan that numbers its rows,
+    so every file is scanned once; the at-scale path is parquet.
     """
     if not paths:
         raise ValueError("read_source_csvs: empty path list")
@@ -256,13 +269,11 @@ def read_source_csvs(
             spark, paths[0], header_rows=header_rows,
             encoding=encoding, blank_as_null=blank_as_null,
         )
-    tables = [
-        read_source_csv(
-            spark, p, header_rows=header_rows,
-            encoding=encoding, blank_as_null=blank_as_null,
-        )
+    counted = [
+        _read_counted(spark, p, header_rows, encoding, blank_as_null)
         for p in paths
     ]
+    tables = [t for t, _ in counted]
     first = tables[0]
     base_cols = set(first.columns)
     for t in tables[1:]:
@@ -279,7 +290,7 @@ def read_source_csvs(
             labels.setdefault(k, v)
     ordered = [*first.columns, SourceTable.ROW_ID]
     df, offset = None, 0
-    for t in tables:
+    for t, n_rows in counted:
         part = t.df.select(
             *first.columns,
             (F.col(SourceTable.ROW_ID) + F.lit(offset)).cast("long").alias(
@@ -287,7 +298,7 @@ def read_source_csvs(
             ),
         ).select(*ordered)
         df = part if df is None else df.unionByName(part)
-        offset += t.df.count()
+        offset += n_rows
     return SourceTable(
         df=df,
         columns=first.columns,
