@@ -420,28 +420,131 @@ def test_xpt_golden_bytes(spark, tmp_path):
     assert digest == GOLDEN_XPT_SHA256, f"XPT bytes changed: {digest}"
 
 
-def test_xpt_fast_fetch_failure_falls_back_byte_identical(spark, tmp_path, monkeypatch):
-    """The partition fetch rides a pyspark-internal helper; when its
-    first fetch fails for any reason, write_xpt refetches through the
-    public runJob path and writes the same bytes."""
-    import pyspark.rdd
+def _ibm_both(x):
+    """(scalar, vectorized) encodings of one value; "raises" on XptEncodingError."""
+    import numpy as np
 
-    df = values_df(spark, [("A", 1.0), ("B", None), ("C", -2.5)], "C string, N double")
-    vars_ = [XptVariable("C", "Char var", False, 1), XptVariable("N", "Num var", True)]
-    fast = tmp_path / "fast.xpt"
-    assert write_xpt(df.orderBy("C"), str(fast), vars_, "G", "Golden") == 3
+    from trial_submission_studio_spark.io.xpt import XptEncodingError, _ibm_bytes
 
-    calls = []
+    out = []
+    for enc in (ibm_float, lambda v: _ibm_bytes(np.array([v], dtype=np.float64), "X")[0].tobytes()):
+        try:
+            out.append(enc(x))
+        except XptEncodingError:
+            out.append("raises")
+    return tuple(out)
 
-    def moved(*args, **kwargs):
-        calls.append(args)
-        raise RuntimeError("pyspark internal helper changed")
 
-    monkeypatch.setattr(pyspark.rdd, "_load_from_socket", moved)
-    slow = tmp_path / "slow.xpt"
-    assert write_xpt(df.orderBy("C"), str(slow), vars_, "G", "Golden") == 3
-    assert calls, "the fast path was not taken"
-    assert slow.read_bytes() == fast.read_bytes()
+def test_ibm_vectorized_matches_scalar_and_range_edges():
+    """The vectorized IBM encoder is bit-identical to the scalar one over
+    the whole double range; magnitudes below 16**-65 write IBM zero, and
+    ±inf or |x| >= 16**63 raise in both (they used to wrap silently)."""
+    import math
+
+    import numpy as np
+    from hypothesis import given, settings, strategies as st
+
+    from trial_submission_studio_spark.io.xpt import _ibm_bytes
+
+    @settings(max_examples=500, deadline=None)
+    @given(st.floats())
+    def agree(x):
+        s, v = _ibm_both(x)
+        assert s == v, (x, s, v)
+
+    agree()
+
+    rng = np.random.default_rng(7)
+    xs = rng.uniform(-1, 1, 100_000) * np.exp2(rng.integers(-262, 253, 100_000).astype(float))
+    got = _ibm_bytes(xs, "X")
+    assert all(got[i].tobytes() == ibm_float(float(x)) for i, x in enumerate(xs))
+
+    zero, missing = b"\x00" * 8, b"\x2e" + b"\x00" * 7
+    lo, hi = 16.0**-65, 16.0**63
+    assert _ibm_both(lo)[0] == _ibm_both(lo)[1] != zero
+    assert ibm_to_ieee(ibm_float(lo)) == lo
+    top = math.nextafter(hi, 0)
+    assert _ibm_both(top)[0] == _ibm_both(top)[1]
+    assert ibm_to_ieee(ibm_float(top)) == top
+    for x in (math.nextafter(lo, 0), -1e-80, 1e-80, 5e-324, -0.0, 0.0):
+        assert _ibm_both(x) == (zero, zero), x
+    for x in (hi, -hi, 1e76, -8e75, math.inf, -math.inf):
+        assert _ibm_both(x) == ("raises", "raises"), x
+    assert _ibm_both(math.nan) == (missing, missing)
+
+
+def test_xpt_numeric_out_of_range_raises_before_the_file(spark, tmp_path):
+    """1e76 used to be written as -7.46e-79: now it raises, naming the
+    variable and a sample, and no file is created; 1e-80 writes 0."""
+    import os
+
+    from trial_submission_studio_spark.io.xpt import XptEncodingError, read_xpt
+
+    vars_ = [XptVariable("I", "idx", True), XptVariable("X", "val", True)]
+    big = values_df(spark, [(1.0, 2.0), (2.0, 1e76)], "I double, X double")
+    path = str(tmp_path / "big.xpt")
+    with pytest.raises(XptEncodingError, match=r"'X'.*1e\+76"):
+        write_xpt(big.orderBy("I"), path, vars_, "G")
+    assert not os.path.exists(path)
+
+    tiny = values_df(spark, [(1.0, 1e-80), (2.0, -3.0)], "I double, X double")
+    write_xpt(tiny.orderBy("I"), path, vars_, "G")
+    assert [tuple(r) for r in read_xpt(spark, path).orderBy("I").collect()] == [
+        (1.0, 0.0), (2.0, -3.0)
+    ]
+
+
+def test_xpt_many_partitions_match_per_row_rendition(spark, tmp_path):
+    """A 20-partition member with nulls, empty strings, over-width and
+    non-ASCII values spread over many partitions writes exactly the
+    bytes of a pure-Python per-row encode, in frame order; 'issue' mode
+    reports the global first-3 sorted non-ASCII values per variable,
+    and 'error' mode leaves no file behind."""
+    import os
+
+    from pyspark.sql import functions as F
+
+    from trial_submission_studio_spark.io.xpt import XptEncodingError
+
+    n = 2000
+    i = F.col("id")
+    df = spark.range(0, n, 1, 20).select(
+        F.when(i % 7 == 0, F.lit(None))
+        .when(i % 11 == 0, F.lit(""))
+        .when(i % 13 == 0, F.format_string("Zürich%05d", F.lit(n) - i))
+        .when(i % 17 == 0, F.lit("日本語"))
+        .otherwise(F.format_string("OVERWIDE%d", i))
+        .alias("CITY"),
+        F.when(i % 5 == 0, F.lit(None)).otherwise(i * 0.5 - 300.0).alias("X"),
+        F.when(i % 3 == 0, F.lit(None)).otherwise(F.format_string("S%d", i)).alias("ID"),
+    )
+    vars_ = [
+        XptVariable("CITY", "City", False, 6),
+        XptVariable("X", "Val", True),
+        XptVariable("ID", "Id", False, 4),
+    ]
+    rows_ = df.collect()
+    payload = b"".join(
+        (r["CITY"] or "")[:6].ljust(6).encode("ascii", "replace")
+        + ibm_float(r["X"])
+        + (r["ID"] or "")[:4].ljust(4).encode("ascii", "replace")
+        for r in rows_
+    )
+    bad = sorted({r["CITY"] for r in rows_ if r["CITY"] and not r["CITY"].isascii()})
+
+    path = str(tmp_path / "wide.xpt")
+    sink: list = []
+    assert write_xpt(df, path, vars_, "G", on_non_ascii="issue", issue_sink=sink) == n
+    blob = open(path, "rb").read()
+    obs = blob.index(b"OBS     HEADER") - 20 + 80
+    assert blob[obs:] == payload + b" " * ((-len(payload)) % 80)
+    assert sink == [("CITY", v) for v in bad[:3]]
+    assert bad[0].startswith("Zürich") and len(bad) > 3
+
+    err = str(tmp_path / "err.xpt")
+    with pytest.raises(XptEncodingError, match="CITY"):
+        write_xpt(df, err, vars_, "G")
+    assert not os.path.exists(err)
 
 
 def test_xpt_read_roundtrip(spark, tmp_path):
@@ -521,6 +624,21 @@ def test_xpt_numeric_fidelity_sweep(spark, tmp_path):
     back = {int(r["I"]): r["X"] for r in read_xpt(spark, path).collect()}
     for i, v in enumerate(vals):
         assert back[i] == float(v), (i, v, back[i])
+
+
+def test_xpt_zero_rows_roundtrip(spark, tmp_path):
+    """An empty member writes headers only and reads back as an empty
+    frame with the same columns and types."""
+    from trial_submission_studio_spark.io.xpt import read_xpt
+
+    df = values_df(spark, [("A", 1.0)], "C string, N double").limit(0)
+    vars_ = [XptVariable("C", "Char", False, 3), XptVariable("N", "Num", True)]
+    path = str(tmp_path / "empty.xpt")
+    assert write_xpt(df, path, vars_, "E") == 0
+    assert open(path, "rb").read().endswith(b"OBS     HEADER RECORD!!!!!!!" + b"0" * 30 + b" " * 2)
+    back = read_xpt(spark, path)
+    assert back.dtypes == [("C", "string"), ("N", "double")]
+    assert back.count() == 0
 
 
 def test_xpt_non_ascii_policy(spark, tmp_path):

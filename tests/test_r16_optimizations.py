@@ -88,9 +88,8 @@ def test_widen_csv_splits_are_real(spark, tmp_path):
 
 
 def test_xpt_grouped_fetch_many_partitions(spark, tmp_path):
-    """Byte-identical output across partition counts: the grouped
-    runJob fetch must preserve partition order exactly as the old
-    serial toLocalIterator did."""
+    """Byte-identical output across partition counts: the member's
+    collect must preserve partition order (= frame row order)."""
     from trial_submission_studio_spark.io.xpt import XptVariable, write_xpt
 
     rows = [(f"S{i:05d}", float(i) if i % 7 else None) for i in range(5000)]

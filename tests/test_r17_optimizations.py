@@ -172,8 +172,8 @@ def test_compile_pipeline_single_exchange_with_seq(spark, tmp_path):
 
 
 def test_xpt_grouped_fetch_stats_sized(spark, tmp_path):
-    """Byte-identical XPT output at 1 vs 20 partitions through the
-    stats-sized single-Python-layer fetch."""
+    """Byte-identical XPT output at 1 vs 20 partitions of a
+    range-derived frame."""
     from trial_submission_studio_spark.io.xpt import XptVariable, write_xpt
 
     cols = [

@@ -11,8 +11,7 @@ scale as ordinary shuffles on 8-byte-hashable token keys.
 Reference parity note: the reference engine
 (rubentalstra/Trial-Submission-Studio) has no corpus-statistics
 surface; this extends the text/curation family (SURVEY.md §2.13)
-beside `bm25.py` (retrieval), `lm.py` (sequence likelihood), and
-`clustering.py` (whose KMeans labels `tfidf_keywords` can name).
+beside `bm25.py` (retrieval) and `lm.py` (sequence likelihood).
 
 Scale notes (100 TB):
 - `collocations`: one explode pass feeds a bigram count and a

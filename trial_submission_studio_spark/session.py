@@ -28,8 +28,8 @@ def get_spark(
     - ``spark.sql.session.timeZone=UTC``: all temporal semantics in
       this engine are wall-clock ISO-8601 strings; UTC pins the
       string<->timestamp boundary.
-    - Arrow enabled: every Pandas-UDF path (duration grammar, XPT
-      export staging) rides vectorized Arrow batches.
+    - Arrow enabled: the duration-grammar Pandas UDF rides
+      vectorized Arrow batches.
     - Runtime bloom-filter joins are left at the Spark 4 defaults
       (``spark.sql.optimizer.runtime.bloomFilter.enabled=true``,
       application-side threshold 10 GB): on a selective-dimension
