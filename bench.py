@@ -38,6 +38,17 @@ BENCH_QUERIES = (
 )
 
 
+def _commit() -> str:
+    import subprocess
+
+    try:
+        r = subprocess.run(["git", "rev-parse", "HEAD"], capture_output=True,
+                           text=True, timeout=30, cwd=REPO)
+    except (OSError, subprocess.SubprocessError):
+        return "unknown"
+    return r.stdout.strip() if r.returncode == 0 else "unknown"
+
+
 def _prepare_cdisc_fixture(sf_dir: str, work: str) -> tuple[dict[str, str], int]:
     """Write two 2-row-header EDC CSVs into ``work`` (NOT timed): AE
     from the orders table, and DM from the customer table with one
@@ -137,7 +148,8 @@ def _cdisc_stages(spark, sf_dir: str, timings: dict) -> None:
     public study lifecycle (``study.py``: create, build, validate,
     export) over EDC-shaped DM and AE CSVs. Each stage persists the
     frames it hands to the next, so later stages transform resident
-    data instead of re-scanning the files."""
+    data instead of re-scanning the files; the study adopts the built
+    frames it consumes and ``st.close()`` releases them."""
     import shutil
     import tempfile
 
@@ -175,8 +187,9 @@ def _cdisc_stages(spark, sf_dir: str, timings: dict) -> None:
     S.export_study(st, frames, os.path.join(work, "out"), bypass_validation=True)
     timings["cdisc_export_xpt"] = round(time.time() - t0, 3)
     timings["cdisc_rows"] = n_rows
-    for df in (*frames.values(), *(t.df for t in st.sources.values())):
-        df.unpersist()
+    st.close()
+    for table in st.sources.values():
+        table.df.unpersist()
     shutil.rmtree(work, ignore_errors=True)
 
 
@@ -562,6 +575,9 @@ def main() -> None:
     sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
     full_payload = {
         "metric": "headline_queries_total_runtime",
+        # self-describing: the same engine reads differently at c8 and c32
+        "cpus": spark.sparkContext.defaultParallelism,
+        "commit": _commit(),
         "value": total,
         "unit": "sec",
         "queries": timings,

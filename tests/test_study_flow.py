@@ -42,14 +42,14 @@ C41340,C66769,No,Severity,SEVERE,severe,,
 """
 
 
-@pytest.fixture()
-def study(spark, tmp_path):
+def _make_study(spark, tmp_path, study_id="KIEM"):
+    tmp_path.mkdir(parents=True, exist_ok=True)
     (tmp_path / "DM.csv").write_text(DM_CSV)
     (tmp_path / "AE.csv").write_text(AE_CSV)
     lookup = codelist_lookup_df(spark, load_ct_csv(CT_CSV, is_text=True))
     st = create_study(
         spark,
-        "KIEM",
+        study_id,
         {"DM": str(tmp_path / "DM.csv"), "AE": str(tmp_path / "AE.csv")},
         min_confidence=0.6,
         ct_lookup=lookup,
@@ -67,6 +67,11 @@ def study(spark, tmp_path):
     st.mappings["AE"].accept("AESTDTC", "AESTDAT")
     st.mappings["AE"].accept("AEENDTC", "AEENDAT")
     return st
+
+
+@pytest.fixture()
+def study(spark, tmp_path):
+    return _make_study(spark, tmp_path)
 
 
 def test_full_study_flow(spark, study, tmp_path):
@@ -160,6 +165,226 @@ def test_validate_study_job_budget(spark, study):
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 15
+
+
+def _persistent_rdds(spark):
+    return set(spark.sparkContext._jsc.getPersistentRDDs())
+
+
+def _lifecycle(st, out_dir):
+    frames = _built(st)
+    validate_study(st, frames).collect()
+    export_study(st, frames, out_dir, bypass_validation=True)
+    return frames
+
+
+def test_close_releases_resident_frames(spark, study, tmp_path):
+    """validate_study and export_study pin the frames they consume, one
+    cached relation per dataset code, until the study closes."""
+    before = _persistent_rdds(spark)
+    frames = _lifecycle(study, str(tmp_path / "out"))
+    assert study.resident == frames
+    assert len(_persistent_rdds(spark) - before) == 2
+    study.close()
+    assert study.resident == {}
+    assert not _persistent_rdds(spark) - before
+
+
+def test_dropped_study_releases_resident_frames(spark, tmp_path):
+    """A study dropped without close() releases its frames when it is
+    garbage-collected."""
+    import gc
+
+    before = _persistent_rdds(spark)
+    st = _make_study(spark, tmp_path / "in")
+    frames = _lifecycle(st, str(tmp_path / "out"))
+    assert len(_persistent_rdds(spark) - before) == 2
+    del st
+    gc.collect()
+    assert not _persistent_rdds(spark) - before
+    assert frames["AE"].count() == 3  # a released frame still computes
+
+
+def test_preview_rebuilds_keep_one_resident_dm(spark, study):
+    """The edit loop (remap, rebuild AE against DM, preview 100 rows)
+    pins nothing: with DM validated once, ten rebuilds leave that one
+    resident DM and no resident AE."""
+    before = _persistent_rdds(spark)
+    dm = build_domain(study, "DM")
+    build_domain(study, "AE", dm_frame=dm).limit(100).collect()
+    assert study.resident == {}
+    validate_study(study, {"DM": dm}).collect()
+    for i in range(10):
+        if i % 2:
+            study.mappings["AE"].mark_omitted("AEENDTC")
+        else:
+            study.mappings["AE"].accept("AEENDTC", "AEENDAT")
+        ae = build_domain(study, "AE", dm_frame=dm)
+        assert len(ae.limit(100).collect()) == 3
+    assert list(study.resident) == ["DM"] and study.resident["DM"] is dm
+    assert len(_persistent_rdds(spark) - before) == 1
+    study.close()
+
+
+def test_release_tolerates_a_stopped_session():
+    """The finalizer of a dropped study runs whenever the collector
+    gets to it, possibly after the session stopped or its JVM died."""
+    from py4j.protocol import Py4JError
+
+    from trial_submission_studio_spark.study import _release_dropped
+
+    class Gone:
+        def unpersist(self):
+            raise Py4JError("the JVM is gone")
+
+    resident = {"DM": Gone(), "AE": Gone()}
+    _release_dropped(resident)
+    assert resident == {}
+
+
+def test_validate_then_export_pins_each_code_once(spark, study, tmp_path, monkeypatch):
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    persist = DataFrame.persist
+    pinned = []
+
+    def counting(df, *args, **kwargs):
+        pinned.append(df)
+        return persist(df, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrame, "persist", counting)
+    frames = _built(study)
+    validate_study(study, frames).collect()
+    cached = _persistent_rdds(spark)
+    export_study(study, frames, str(tmp_path / "out"), bypass_validation=True)
+    assert _persistent_rdds(spark) == cached
+    assert sorted(map(id, pinned)) == sorted(map(id, frames.values()))
+    study.close()
+
+
+def test_replacing_a_resident_frame_unpersists_it(spark, study, tmp_path):
+    frames = _built(study)
+    validate_study(study, frames).collect()
+    old_ae = frames["AE"]
+    frames["AE"] = build_domain(study, "AE", dm_frame=frames["DM"])
+    validate_study(study, frames).collect()
+    assert not old_ae.is_cached and study.resident["AE"] is frames["AE"]
+    study.close()
+
+
+def test_study_id_is_stripped_literally(spark, tmp_path):
+    """The study day joins each AE row to its DM row by the raw subject,
+    recovered from USUBJID by removing the literal "{study}-" prefix:
+    regex metacharacters in the study id change nothing."""
+    days = {}
+    for i, study_id in enumerate(["KIEM", "K+1", "K(1)", "K.1", "K\\1", "K$"]):
+        st = _make_study(spark, tmp_path / str(i), study_id)
+        ae = build_domain(st, "AE", dm_frame=build_domain(st, "DM"))
+        days[study_id] = sorted(
+            (r["USUBJID"].removeprefix(study_id), r["AESEQ"], r["AESTDY"])
+            for r in ae.collect()
+        )
+        st.close()
+    assert days["KIEM"] == [("-KIEM-01", 1, 1), ("-KIEM-01", 2, 10), ("-KIEM-02", 1, 1)]
+    assert {k: v for k, v in days.items() if v != days["KIEM"]} == {}
+
+
+def test_warm_lifecycle_compiles_nothing(spark, tmp_path):
+    """A warm lifecycle reuses every class the first one compiled. With
+    Spark's default 100-entry codegen cache each warm run of this
+    fixture evicted and recompiled 36-48; get_spark keeps 2000. A study id
+    of a length not seen before recompiles at most the two classes that
+    strip the id from USUBJID: the prefix length is an int literal, and
+    Spark writes int literals into the generated code."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+
+    def compiles(study_id):
+        before = metrics.METRIC_COMPILATION_TIME().getCount()
+        st = _make_study(spark, tmp_path / study_id, study_id)
+        _lifecycle(st, str(tmp_path / study_id / "out"))
+        st.close()
+        return metrics.METRIC_COMPILATION_TIME().getCount() - before
+
+    compiles("KIEM")
+    assert compiles("KOAN") == 0
+    assert compiles("KIEMX") <= 2
+
+
+def test_built_domains_match_a_pandas_rendition(spark, study):
+    """Golden differential check of the build rules on this fixture: the
+    pinned, built DM and AE equal a pure-pandas rendition of the ISO
+    date ladder (ISO passes through, MM/DD/YYYY is rewritten, anything
+    else is kept verbatim), the per-subject study day (no day 0), --SEQ
+    in file order and the CT synonym lookup."""
+    import re
+    from datetime import date
+
+    import pandas as pd
+    from pandas.testing import assert_frame_equal
+
+    frames = _built(study)
+    validate_study(study, frames).collect()  # pins both frames
+    sid = study.study_id
+
+    def src(text):
+        lines = text.splitlines()
+        return pd.DataFrame([r.split(",") for r in lines[2:]], columns=lines[1].split(","))
+
+    def iso(v):
+        if re.fullmatch(r"\d{4}(-\d{2}(-\d{2})?)?", v):
+            return v
+        m = re.fullmatch(r"(\d{1,2})/(\d{1,2})/(\d{4})", v)
+        return f"{m[3]}-{int(m[1]):02d}-{int(m[2]):02d}" if m else v
+
+    def study_day(dtc, ref):
+        full = re.compile(r"\d{4}-\d{2}-\d{2}")
+        if not (full.fullmatch(dtc or "") and full.fullmatch(ref or "")):
+            return pd.NA
+        days = (date.fromisoformat(dtc) - date.fromisoformat(ref)).days
+        return days + 1 if days >= 0 else days
+
+    ct = {"male": "M", "female": "F", "m": "M", "f": "F",
+          "mild": "MILD", "moderate": "MODERATE", "severe": "SEVERE"}
+    dm_src, ae_src = src(DM_CSV), src(AE_CSV)
+    dm = pd.DataFrame({
+        "STUDYID": sid, "DOMAIN": "DM",
+        "USUBJID": sid + "-" + dm_src["SubjectId"],
+        "SUBJID": dm_src["SubjectId"],
+        "RFSTDTC": dm_src["RFSTDAT"].map(iso),
+        "RFICDTC": dm_src["RFICDAT"].map(iso),
+        "AGE": dm_src["AGE"].astype(float),
+        "SEX": dm_src["SEX"].map(lambda v: ct.get(v.lower(), v)),
+        "COUNTRY": dm_src["COUNTRY"],
+        "DMDY": pd.Series([pd.NA] * len(dm_src), dtype="Int32"),
+    })
+    ref = dict(zip(dm_src["SubjectId"], dm["RFSTDTC"]))
+    ae_start, ae_end = ae_src["AESTDAT"].map(iso), ae_src["AEENDAT"].map(iso)
+    subj = ae_src["SubjectId"]
+    ae = pd.DataFrame({
+        "STUDYID": sid, "DOMAIN": "AE",
+        "USUBJID": sid + "-" + subj,
+        "AESEQ": subj.groupby(subj).cumcount() + 1,
+        "AETERM": ae_src["AETERM"],
+        "AESEV": ae_src["AESEV"].map(lambda v: ct.get(v.lower(), v)),
+        "AESTDTC": ae_start,
+        "AEENDTC": ae_end,
+        "AESTDY": pd.Series([study_day(d, ref[s]) for d, s in zip(ae_start, subj)],
+                            dtype="Int32"),
+        "AEENDY": pd.Series([study_day(d, ref[s]) for d, s in zip(ae_end, subj)],
+                            dtype="Int32"),
+    })
+
+    def spark_pdf(df, keys):
+        out = df.toPandas().sort_values(keys, ignore_index=True)
+        ints = {c for c, t in df.dtypes if t in ("int", "bigint")}
+        return out.astype({c: "Int32" if df.schema[c].dataType.typeName() == "integer"
+                           else "int64" for c in ints})
+
+    assert_frame_equal(spark_pdf(study.resident["DM"], ["USUBJID"]),
+                       dm.sort_values("USUBJID", ignore_index=True))
+    assert_frame_equal(spark_pdf(study.resident["AE"], ["USUBJID", "AESEQ"]),
+                       ae.sort_values(["USUBJID", "AESEQ"], ignore_index=True))
+    study.close()
 
 
 def test_perfbench_targets_resolve():

@@ -39,6 +39,13 @@ def get_spark(
       at test scale. ``tests/test_plan_shapes.py`` lowers the
       thresholds to prove our join shapes stay ELIGIBLE for the
       injection (nothing in the plan defeats it).
+    - ``spark.sql.codegen.cache.maxEntries=2000``: Spark keeps 100
+      generated classes by default, fewer than one study lifecycle
+      generates, so every warm lifecycle evicted and recompiled its
+      own classes (``CodegenMetrics``, 4 vCPUs): 36-48 Janino compiles
+      per warm run of the 2-domain test study, 117 per warm perfbench
+      ``study_small`` op on local[1]. With 2000 entries both compile
+      0. The conf is static (read once, when the session starts).
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     if master is None:
@@ -82,6 +89,7 @@ def get_spark(
             os.environ.get("SPARK_GRAFT_OPEN_COST", str(1 << 20)),
         )
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        .config("spark.sql.codegen.cache.maxEntries", "2000")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")

@@ -17,13 +17,31 @@
 Driver/executor split: everything schema-sized (mappings, rule
 inference, XML envelopes) runs on the driver; every data-shaped step
 is a DataFrame plan.
+
+Residency: the reference holds each built domain in memory; here a
+built domain stays a lazy plan until a lifecycle call consumes it.
+Then the :class:`Study` pins it (``persist``) as the resident frame of
+its dataset code (``Study.resident``): every frame given to
+:func:`validate_study` or :func:`export_study`. Later actions on a
+pinned frame read memory instead of re-reading the CSVs and re-running
+the --SEQ window and the DM join. A pinned frame is released
+(``unpersist``) when its code gets a different frame, on
+:meth:`Study.close`, or when the study is garbage-collected without
+``close()``. ``build_domain`` pins nothing, neither its result nor its
+``dm_frame``: the edit loop rebuilds a domain and previews 100 rows of
+it, and caching there only added cache planning and cache build to
+that action.
 """
 
 from __future__ import annotations
 
+import contextlib
 import os
+import threading
+import weakref
 from dataclasses import dataclass, field
 
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -76,6 +94,47 @@ class Study:
     ct_lookup: DataFrame | None = None
     domains: dict[str, list[dict]] = field(default_factory=dict)  # registry vars
     metadata: object | None = None  # StudyMetadata from Items.csv, if any
+    resident: dict[str, DataFrame] = field(default_factory=dict, init=False)
+
+    def __post_init__(self):
+        # holds the dict, not the study: a dropped study stays collectable
+        weakref.finalize(self, _release_dropped, self.resident).atexit = False
+
+    def close(self) -> None:
+        """Unpersist every resident frame. The study stays usable: a
+        later lifecycle call pins what it consumes again."""
+        _unpersist_all(self.resident)
+
+
+def _unpersist_all(resident: dict[str, DataFrame]) -> None:
+    for df in resident.values():
+        with contextlib.suppress(Py4JError):  # a stopped session holds no cache
+            df.unpersist()
+    resident.clear()
+
+
+def _release_dropped(resident: dict[str, DataFrame]) -> None:
+    """Finalizer of a study dropped without ``close()``. The garbage
+    collector may run it in the middle of a py4j call on this thread,
+    so the unpersist calls go out on a thread (and py4j connection) of
+    their own."""
+    if resident:
+        worker = threading.Thread(target=_unpersist_all, args=(resident,))
+        with contextlib.suppress(RuntimeError):  # no new threads at shutdown
+            worker.start()
+            worker.join()
+
+
+def _pin(study: Study, code: str, df: DataFrame) -> None:
+    """Make ``df`` the resident frame of ``code``: persist it, and
+    unpersist the frame it replaces."""
+    code = code.upper()
+    old = study.resident.get(code)
+    if old is df:
+        return
+    if old is not None:
+        old.unpersist()
+    study.resident[code] = df.persist()
 
 
 def create_study(
@@ -223,10 +282,17 @@ def build_domain(study: Study, code: str, dm_frame: DataFrame | None = None) -> 
         and {"USUBJID", "RFSTDTC"} <= set(dm_frame.columns)
         and subj_src
     ):
+        # strip the literal "{study}-" prefix: the study id is data, and
+        # as a regex K+1 or K(1) would match no USUBJID
+        prefix = study.study_id + "-"
+        usubjid = F.col("USUBJID")
         ref_df = dm_frame.select(
-            F.regexp_replace(
-                F.col("USUBJID"), "^" + study.study_id + "-", ""
-            ).alias(subj_src),
+            F.when(
+                usubjid.startswith(prefix),
+                F.substr(usubjid, F.lit(len(prefix) + 1)),
+            )
+            .otherwise(usubjid)
+            .alias(subj_src),
             "RFSTDTC",
         )
     ctx = NormalizationContext(
@@ -256,6 +322,8 @@ def validate_study(study: Study, frames: dict[str, DataFrame]) -> DataFrame:
     - J6 melted-key record references for RELREC
     """
     spark = study.spark
+    for code, df in frames.items():
+        _pin(study, code, df)
     # JVM-only empty frame: createDataFrame([]) parallelizes and pays
     # a Python-worker task per downstream action (see _issue_frame)
     report = _issue_frame(spark, [])
@@ -319,6 +387,8 @@ def export_study(
     """
     if fmt not in ("xpt", "xml"):
         raise ValueError(f"fmt must be 'xpt' or 'xml'; got {fmt!r}")
+    for code, df in frames.items():
+        _pin(study, code, df)
     if not bypass_validation:
         report = validate_study(study, frames)
         n_errors = report.filter(F.col("severity") == "Error").count()
