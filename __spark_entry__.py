@@ -286,15 +286,6 @@ def q3_order_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 # T-family: column transforms
 # --------------------------------------------------------------------------
 
-def t1_constant_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """T1 Constant: STUDYID/DOMAIN context fill."""
-    return _t(spark, sf_dir, "orders").select(
-        "o_orderkey",
-        F.lit("STUDY01").alias("studyid"),
-        F.lit("XX").alias("domain"),
-    )
-
-
 def t2_usubjid_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T2 UsubjidPrefix incl. blank-subject edge case."""
     c = _t(spark, sf_dir, "customer")
@@ -1849,16 +1840,6 @@ def bds_registry_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     return compile_pipeline(src, rules, ctx)
 
 
-def t12_bool_render(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """T12: boolean -> 'Y'/'N' rendering."""
-    o = _t(spark, sf_dir, "orders")
-    from trial_submission_studio_spark.functions import bool_yn
-
-    return o.select(
-        "o_orderkey", bool_yn(F.col("o_orderstatus") == "F").alias("finished")
-    )
-
-
 def a9_has_collected_data(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A9: any-non-blank flag per column (Define-XML HasData)."""
     c = _t(spark, sf_dir, "customer")
@@ -2039,15 +2020,6 @@ def j5_relspec_parent(spark: SparkSession, sf_dir: str) -> DataFrame:
     keys = rel.select("usubj", F.col("refid").alias("parent"))
     missing = probes.join(keys, ["usubj", "parent"], "left_anti")
     return missing.agg(F.count(F.lit(1)).cast("long").alias("dangling_parents"))
-
-
-def text_bpe_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BPE-ish subword-proxy token counting per language."""
-    d = _t(spark, sf_dir, "documents")
-    return d.groupBy("lang").agg(
-        F.sum(bpe_ish_token_count("text")).cast("long").alias("total_pieces"),
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
-    )
 
 
 def events_sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3056,83 +3028,6 @@ _ZONEMAP_BENCH_PRED = [
 ]
 
 
-_MERGE_BENCH_MEMO: dict = {}
-
-
-def table_merge_bench(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """File-grain MERGE + row-level change feed (io/merge.py,
-    io/changefeed.py) against a key-clustered versioned snapshot of
-    the events table: per timed run, one copy-on-write merge commit
-    of a 1k-row CDC batch (updates + inserts) followed by the
-    change-feed summary back to the base version. The snapshot build
-    is memoized per sf_dir (best-of-2 drops the build run). Benched
-    extra, NOT a contract slot — merge/feed semantics are pinned by
-    tests/test_merge.py, test_changefeed.py, test_table_model.py."""
-    import tempfile
-
-    from trial_submission_studio_spark.io.changefeed import (
-        change_feed_summary,
-    )
-    from trial_submission_studio_spark.io.merge import merge_version
-    from trial_submission_studio_spark.io.versioned import (
-        current_version,
-        new_data_dir,
-        publish_version,
-    )
-
-    memo = _MERGE_BENCH_MEMO.get(sf_dir)
-    if memo is None:
-        root = tempfile.mkdtemp(prefix="tss-merge-bench-") + "/t"
-        import os as _os
-
-        _os.makedirs(root)
-        d = new_data_dir(root)
-        ev = _t(spark, sf_dir, "events").select(
-            "event_id", "user_id", "event_type", "value"
-        )
-        (
-            ev.repartitionByRange(_bench_file_count(ev), "event_id")
-            .write.parquet(d, mode="append")
-        )
-        base = publish_version(root, d)["version"]
-        memo = {"root": root, "base": base}
-        _MERGE_BENCH_MEMO[sf_dir] = memo
-    root, base = memo["root"], memo["base"]
-    # 1k keys clustered in a narrow range -> few files rewritten
-    # (the copy-on-write point), plus 100 inserts
-    src = (
-        _t(spark, sf_dir, "events")
-        .select("event_id", "user_id", "event_type", "value")
-        .filter((F.col("event_id") >= 1000) & (F.col("event_id") < 2000))
-        .withColumn("value", F.col("value") + 1.0)
-        .unionByName(
-            spark.range(0, 100).selectExpr(
-                "id + 2000000000 AS event_id",
-                "CAST(id AS LONG) AS user_id",
-                "'cdc' AS event_type",
-                "CAST(1.5 AS DOUBLE) AS value",
-            )
-        )
-    )
-    m = merge_version(spark, root, src, "event_id", verify=False)
-    s = change_feed_summary(
-        spark, root, base, current_version(root), "event_id"
-    )
-    st = m["metadata"]["merge"]
-    return _literal_df(
-        spark,
-        [
-            (
-                st["files_rewritten"],
-                st["files_kept"],
-                s["n_insert"],
-                s["n_update"],
-            )
-        ],
-        "files_rewritten int, files_kept int, n_insert long, n_update long",
-    )
-
-
 def zonemap_scan_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Control for zonemap_scan_pruned: the SAME filtered aggregate
     over the same snapshot, planned over the FULL manifest file list
@@ -3164,140 +3059,6 @@ def zonemap_scan_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
         read_pruned(spark, root, _ZONEMAP_BENCH_PRED)
         .groupBy("event_type")
         .agg(F.sum("value").alias("v"), F.count(F.lit(1)).alias("n"))
-    )
-
-
-_ROLLUP_BENCH_MEMO: dict = {}
-
-
-def rollup_refresh_bench(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental rollup maintenance (io/rollup.py) as it runs in
-    production: per timed run, ONE fixed-size ingest batch (2k rows,
-    fresh ids via a per-root counter) appends to the versioned base
-    and `refresh_rollup` brings the materialized per-lang aggregate
-    up to date — scanning ONLY the batch. The base (documents-shaped,
-    built once per sf_dir from the documents table) grows across
-    runs, which is the point: refresh cost must track |batch|, not
-    |table|, so the sf1 ratio of this metric is the measured
-    incremental-maintenance claim (≈1, not ≈10). Benched extra, NOT
-    a contract slot — refresh ≡ direct-groupBy equivalence and crash
-    recovery are pinned by tests/test_rollup.py."""
-    import tempfile
-
-    from trial_submission_studio_spark.io.rollup import (
-        refresh_rollup,
-        rollup_status,
-    )
-    from trial_submission_studio_spark.io.versioned import (
-        new_data_dir,
-        publish_version,
-        current_version,
-    )
-
-    memo = _ROLLUP_BENCH_MEMO.get(sf_dir)
-    if memo is None:
-        base = tempfile.mkdtemp(prefix="tss-rollup-bench-") + "/t"
-        import os as _os
-
-        _os.makedirs(base)
-        d = new_data_dir(base)
-        (
-            _t(spark, sf_dir, "documents")
-            .select(
-                "doc_id", "lang",
-                F.length("text").cast("long").alias("length"),
-            )
-            .repartition(8)
-            .write.parquet(d, mode="append")
-        )
-        publish_version(base, d)
-        memo = {"base": base, "roll": base + "-roll", "next_id": 10**12}
-        _ROLLUP_BENCH_MEMO[sf_dir] = memo
-    base, roll = memo["base"], memo["roll"]
-    batch = spark.range(memo["next_id"], memo["next_id"] + 2000).selectExpr(
-        "id AS doc_id",
-        "CASE WHEN id % 3 = 0 THEN 'en' ELSE 'de' END AS lang",
-        "CAST(id % 997 AS LONG) AS length",
-    )
-    memo["next_id"] += 2000
-    d = new_data_dir(base)
-    batch.repartition(2).write.parquet(d, mode="append")
-    publish_version(base, d, base_version=current_version(base))
-    m = refresh_rollup(
-        spark, base, roll, ["lang"],
-        {"n": ("count", None), "chars": ("sum", "length"),
-         "longest": ("max", "length")},
-    )
-    st = rollup_status(roll)
-    au = m["metadata"]["rollup"]
-    return _literal_df(
-        spark,
-        [(au["files_added"], au["files_removed"], st["base_version"])],
-        "files_added int, files_removed int, base_version int",
-    )
-
-
-_ANN_BENCH_MEMO: dict = {}
-
-
-def ann_store_topk_bench(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Persisted-IVF serving path (operators/ann_store.py): top-10
-    cosine for an 8-query batch against the saved, cell-partitioned
-    store (32 cells, n_probe=2 — the query plans over ~1/16 of the
-    manifest's files). Store build is memoized per sf_dir (the first
-    timed run pays it; the median-of-3 drops it). Benched extra, NOT
-    a contract slot — brute-force equivalence and the LSM semantics
-    are pinned by tests/test_ann_store.py; recall vs exact is the
-    contract slot ann_recall_gates."""
-    import tempfile
-
-    from trial_submission_studio_spark.operators.ann_store import (
-        save_ivf_corpus,
-        saved_ivf_topk,
-    )
-
-    root = _ANN_BENCH_MEMO.get(sf_dir)
-    vecs = _t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    if root is None:
-        root = tempfile.mkdtemp(prefix="tss-annstore-bench-") + "/s"
-        save_ivf_corpus(vecs, root, n_centroids=32)
-        _ANN_BENCH_MEMO[sf_dir] = root
-    queries = vecs.filter(F.col("vec_id") % 251 == 0).limit(8)
-    return saved_ivf_topk(spark, root, queries, k=10, n_probe=2)
-
-
-_IVF_RETRAIN_BENCH_MEMO: dict = {}
-
-
-def ivf_retrain_bench(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Atomic IVF retrain (operators/ann_store.py:retrain_ivf_store):
-    per timed run, one sample-k-means retrain + full clustered
-    rewrite + centroid-swap commit of the persisted store — the
-    maintenance cost `sync_ivf_store(auto_retrain_skew=...)` pays
-    when drift trips it. Store build memoized per sf_dir (the first
-    timed run pays it; the median drops it). Benched extra, NOT a
-    contract slot — balance-restoration and answer equivalence are
-    pinned by tests/test_ann_store.py and test_maintenance.py."""
-    import tempfile
-
-    from trial_submission_studio_spark.operators.ann_store import (
-        ivf_cell_balance,
-        retrain_ivf_store,
-        save_ivf_corpus,
-    )
-
-    root = _IVF_RETRAIN_BENCH_MEMO.get(sf_dir)
-    if root is None:
-        vecs = _t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-        root = tempfile.mkdtemp(prefix="tss-ivfretrain-bench-") + "/s"
-        save_ivf_corpus(vecs, root, n_centroids=32)
-        _IVF_RETRAIN_BENCH_MEMO[sf_dir] = root
-    m = retrain_ivf_store(spark, root)
-    bal = ivf_cell_balance(spark, root)
-    return _literal_df(
-        spark,
-        [(m["version"], bal["n_rows"], float(bal["skew"]))],
-        "version long, n_rows long, skew double",
     )
 
 
@@ -3863,14 +3624,6 @@ def quality_model_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def quality_model_train_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Composed train+score (kept for round-over-round bench
-    comparability; the split keys above are what BENCH records
-    since r8)."""
-    _train_qm(spark, sf_dir)
-    return quality_model_score(spark, sf_dir)
-
-
 # --------------------------------------------------------------------------
 # driver contract
 # --------------------------------------------------------------------------
@@ -4402,9 +4155,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     t_const_bool_render / t_customer_transform_gates /
     a_profile_gates / j_crossdomain_gates / v_domain_check_gates /
     ann_recall_gates / dedup_verify_gates / dedup_exact_gates /
-    r_reciprocal_gates / text_analysis_gates; every component stays a
-    standalone callable). Queries that have never seen the oracle sit
-    FIRST — r6 lesson: nothing rotates out of the window
+    r_reciprocal_gates / text_analysis_gates). T1, T12 and the BPE
+    piece count exist only inside their gates. Queries that have never
+    seen the oracle sit FIRST — r6 lesson: nothing rotates out of the window
     unverified."""
     return {
         "crosssource_overlap_gates": crosssource_overlap_gates,

@@ -359,22 +359,11 @@ def main() -> None:
         # first of the 3 timed runs and the median drops it.
         "zonemap_scan_full",
         "zonemap_scan_pruned",
-        # file-grain MERGE commit + change-feed summary on the same
-        # snapshot discipline (memoized build; per-run workload is
-        # identical, so timings compare across rounds)
-        "table_merge_bench",
-        # round-12: the remaining table-format + vector-store serving
-        # paths, so the 100 TB claims of io/rollup.py and
-        # operators/ann_store.py are measured, not argued
-        "rollup_refresh_bench",
-        "ann_store_topk_bench",
         # round-13: the delete pair (copy-on-write vs merge-on-read
         # deletion vectors — same scattered 500-key erasure, the
-        # delta is the measured write-amplification win) and the
-        # atomic IVF retrain that auto-maintenance pays on drift
+        # delta is the measured write-amplification win)
         "table_delete_cow",
         "table_delete_dv",
-        "ivf_retrain_bench",
         # retention TTL: whole-file drops by zone-map proof
         "table_retention_bench",
         # round-14: directory-grain retention on a Hive-partitioned
@@ -420,27 +409,19 @@ def main() -> None:
         "events_stream_gates",
         "incremental_dedup_docs",
         "v_domain_check_gates",
-        # round-12 (r11 verdict task 5): table format + vector store.
-        # Expected curvature: merge ~flat (clustered keys touch a
-        # ~fixed number of constant-size files), pruned scan ~flat
-        # (fixed one-day window; replicas extend the time axis) vs
-        # full scan ~10x, rollup refresh ~flat (fixed ingest batch),
-        # saved-IVF ~(n_probe/cells) of a 10x table
-        "table_merge_bench",
+        # round-12 (r11 verdict task 5): table format. Expected
+        # curvature: pruned scan ~flat (fixed one-day window; replicas
+        # extend the time axis) vs full scan ~10x
         "zonemap_scan_full",
         "zonemap_scan_pruned",
-        "rollup_refresh_bench",
-        "ann_store_topk_bench",
         # round-13: expected curvature — cow erasure ~10x (rewrites
         # every touched file; file count grows with data), dv erasure
-        # ~flat (O(k) sidecar regardless of table size), retrain ~10x
-        # (full clustered rewrite is honestly linear), retention
+        # ~flat (O(k) sidecar regardless of table size), retention
         # ~flat (cost tracks the expired day's files, not table size
         # — the sf1 replicas extend the time axis so a day stays a
         # constant slice)
         "table_delete_cow",
         "table_delete_dv",
-        "ivf_retrain_bench",
         "table_retention_bench",
         # round-14: expected curvature — partitioned retention ~flat
         # (directory-grain metadata; a day is a constant slice),
@@ -628,9 +609,6 @@ def main() -> None:
             " dentry-cache state, not code",
             "table_retention_bench": "same shape at file grain —"
             " per-run workload is a different expired day",
-            "ann_store_topk_bench": "first run after a retrain pays"
-            " the store's manifest+centroid reload; later runs hit"
-            " the process cache",
         },
         "sf": sf_val,
         # r12: repeats raised after the r11 A/A test proved best-of-2

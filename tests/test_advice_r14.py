@@ -1,8 +1,6 @@
 """Round-14 hardening of the table-format edge cases: retired
 intervening manifests must CONFLICT a rebase (not silently vanish
-from the safety proof), rollup dv-generation tags must be
-content-derived (equal tombstone COUNTS across a rollback are not
-the same generation), lineage keying must anchor the root match
+from the safety proof), lineage keying must anchor the root match
 (interior-substring paths), delete_where's audit must count LIVE
 rows, and the exclusive manifest create must absorb an NFS-style
 self-race without absorbing a real one."""
@@ -10,7 +8,6 @@ self-race without absorbing a real one."""
 import os
 
 import pytest
-from pyspark.sql import functions as F
 
 from trial_submission_studio_spark.io import versioned
 from trial_submission_studio_spark.io.deletion_vectors import (
@@ -19,7 +16,6 @@ from trial_submission_studio_spark.io.deletion_vectors import (
     delete_where,
     rel_path_col,
 )
-from trial_submission_studio_spark.io.rollup import read_rollup, refresh_rollup
 from trial_submission_studio_spark.io.versioned import (
     TableConflictError,
     _atomic_create,
@@ -29,7 +25,6 @@ from trial_submission_studio_spark.io.versioned import (
     publish_version,
     read_manifest,
     read_version,
-    rollback,
 )
 from trial_submission_studio_spark.io.zonemap import publish_with_stats
 
@@ -150,40 +145,3 @@ def test_delete_where_rows_dropped_counts_live_rows(spark, tmp_path):
     )
 
 
-def test_rollup_dv_tag_survives_rollback_equal_count_delete(
-    spark, tmp_path
-):
-    """Rollback to a dv-free version, then delete the SAME NUMBER of
-    different rows: the two dv generations must get distinct tags, so
-    the refresh retires only the stale partials — a count-derived tag
-    would delete the fresh ones too and lose the file's contribution."""
-    root = _publish(spark, tmp_path, [(k, k % 2) for k in range(8)])
-    rollup = str(tmp_path / "r")
-    dims, measures = ["v"], {"n": ("count", None), "sk": ("sum", "k")}
-
-    def _refresh():
-        return refresh_rollup(spark, root, rollup, dims, measures)
-
-    def _expect():
-        want = {
-            (r.v, r.n, r.sk)
-            for r in read_version(spark, root)
-            .groupBy("v")
-            .agg(F.count(F.lit(1)).alias("n"), F.sum("k").alias("sk"))
-            .collect()
-        }
-        got = {(r.v, r.n, r.sk) for r in read_rollup(spark, rollup).collect()}
-        assert got == want
-
-    _refresh()
-    dv_free_v = current_version(root)
-    delete_matching_dv(spark, root, _kv(spark, [(0, 0)]), "k")
-    _refresh()
-    _expect()
-    rollback(root, dv_free_v)
-    _refresh()
-    _expect()
-    # equal COUNT (1 row), different row -> different dv generation
-    delete_matching_dv(spark, root, _kv(spark, [(3, 1)]), "k")
-    _refresh()
-    _expect()

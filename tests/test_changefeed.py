@@ -1,23 +1,24 @@
-"""Row-level change feed between versions (io/changefeed.py):
-equivalence with a FULL-table diff while scanning only the file
-delta; layout-only commits feed nothing."""
+"""Row-level change sets between versions of a versioned table:
+`operators/diff.py:snapshot_diff` over two `read_version` time-travel
+loads, with `io/versioned.py:diff_versions` as the file-level side —
+merges, deletes and appends classify per key, and layout-only commits
+change files but no rows."""
 
 import os
 
-from pyspark.sql import functions as F
-
-from trial_submission_studio_spark.io.changefeed import (
-    change_feed,
-    change_feed_summary,
-)
 from trial_submission_studio_spark.io.merge import delete_matching, merge_version
 from trial_submission_studio_spark.io.versioned import (
     compact_version,
+    diff_versions,
     new_data_dir,
     publish_version,
+    read_manifest,
     read_version,
 )
-from trial_submission_studio_spark.operators.diff import snapshot_diff
+from trial_submission_studio_spark.operators.diff import (
+    snapshot_diff,
+    snapshot_diff_summary,
+)
 
 
 def _docs(spark, lo, hi):
@@ -39,14 +40,6 @@ def _table(spark, root, n_runs=3, per=100):
 
 
 def _feed(spark, root, v_from, v_to):
-    return {
-        (r.doc_id, r._change)
-        for r in change_feed(spark, root, v_from, v_to, "doc_id").collect()
-    }
-
-
-def _full_diff(spark, root, v_from, v_to):
-    """Ground truth: diff the COMPLETE snapshots."""
     d = snapshot_diff(
         read_version(spark, root, v_from),
         read_version(spark, root, v_to),
@@ -54,6 +47,14 @@ def _full_diff(spark, root, v_from, v_to):
     )
     name = {"added": "insert", "removed": "delete", "changed": "update"}
     return {(r.doc_id, name[r.change_type]) for r in d.collect()}
+
+
+def _summary(spark, root, v_from, v_to):
+    return snapshot_diff_summary(
+        read_version(spark, root, v_from),
+        read_version(spark, root, v_to),
+        ["doc_id"],
+    ).first()
 
 
 def test_feed_matches_full_diff_across_merge(spark, tmp_path):
@@ -64,13 +65,15 @@ def test_feed_matches_full_diff_across_merge(spark, tmp_path):
         "doc_id long, text string",
     )
     v2 = merge_version(spark, root, src, "doc_id")["version"]
-    assert _feed(spark, root, v1, v2) == _full_diff(spark, root, v1, v2) == {
+    assert _feed(spark, root, v1, v2) == {
         (5, "update"), (150, "update"), (999, "insert")
     }
-    s = change_feed_summary(spark, root, v1, v2, "doc_id")
-    assert (s["n_insert"], s["n_update"], s["n_delete"]) == (1, 2, 0)
-    # only the delta files were involved
-    assert s["files_untouched"] > 0
+    s = _summary(spark, root, v1, v2)
+    assert (s.n_added, s.n_changed, s.n_removed) == (1, 2, 0)
+    assert (s.n_old, s.n_new) == (300, 301)
+    # only the files holding the merged keys were rewritten
+    f = diff_versions(root, v1, v2)
+    assert 0 < f["n_removed"] < len(read_manifest(root, v1)["files"])
 
 
 def test_feed_across_delete_and_append(spark, tmp_path):
@@ -81,23 +84,26 @@ def test_feed_across_delete_and_append(spark, tmp_path):
     d = new_data_dir(root)
     _docs(spark, 300, 320).repartition(1).write.parquet(d, mode="append")
     v3 = publish_version(root, d, base_version=v2)["version"]
-    assert _feed(spark, root, v1, v3) == _full_diff(spark, root, v1, v3)
     assert _feed(spark, root, v1, v3) == {(3, "delete"), (250, "delete")} | {
         (i, "insert") for i in range(300, 320)
     }
+    # each hop on its own
+    assert _feed(spark, root, v1, v2) == {(3, "delete"), (250, "delete")}
+    assert _feed(spark, root, v2, v3) == {(i, "insert") for i in range(300, 320)}
 
 
 def test_compaction_feeds_nothing(spark, tmp_path):
     """A pure-layout commit moves rows between files without logical
-    change: every moved row digests equal -> empty feed."""
+    change: every moved row digests equal -> empty change set."""
     root = str(tmp_path / "t")
     v1 = _table(spark, root)
     v2 = compact_version(spark, root, target_bytes=1 << 26)["version"]
     assert v2 != v1
     assert _feed(spark, root, v1, v2) == set()
-    s = change_feed_summary(spark, root, v1, v2, "doc_id")
-    assert s["n_insert"] == s["n_update"] == s["n_delete"] == 0
-    assert s["files_removed"] > 0  # it DID rewrite layout
+    s = _summary(spark, root, v1, v2)
+    assert s.n_added == s.n_changed == s.n_removed == 0
+    assert s.n_unchanged == 300
+    assert diff_versions(root, v1, v2)["n_removed"] > 0  # it DID rewrite layout
 
 
 def test_insert_only_and_reverse_direction(spark, tmp_path):
@@ -109,7 +115,7 @@ def test_insert_only_and_reverse_direction(spark, tmp_path):
     assert _feed(spark, root, v1, v2) == {
         (i, "insert") for i in range(100, 130)
     }
-    # reading the feed BACKWARDS inverts it
+    # reading the change set BACKWARDS inverts it
     assert _feed(spark, root, v2, v1) == {
         (i, "delete") for i in range(100, 130)
     }

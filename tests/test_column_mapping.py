@@ -10,7 +10,6 @@ back."""
 import os
 
 import pytest
-from pyspark.sql import functions as F
 
 from trial_submission_studio_spark.io.deletion_vectors import (
     delete_matching_dv,
@@ -209,47 +208,6 @@ def test_constraints_enforce_through_mapping(spark, tmp_path):
         publish_version(
             root, d, base_version=current_version(root), spark=spark
         )
-
-
-def test_rollup_over_renamed_column(spark, tmp_path):
-    """Incremental rollups read the base table's LOGICAL view, so a
-    rollup spec'd on the renamed name stays exact through appends
-    and dv deletes."""
-    from trial_submission_studio_spark.io.deletion_vectors import (
-        delete_matching_dv,
-    )
-    from trial_submission_studio_spark.io.rollup import (
-        read_rollup,
-        refresh_rollup,
-    )
-
-    root = _make(spark, tmp_path, name="tr", n=30, n_files=2)
-    rename_column(spark, root, "v", "val")
-    rollup = str(tmp_path / "ru")
-    dims, measures = [], {"n": ("count", None), "s": ("sum", "val")}
-    refresh_rollup(spark, root, rollup, dims, measures)
-
-    def _check():
-        got = read_rollup(spark, rollup).collect()[0]
-        want = (
-            read_version(spark, root)
-            .agg(
-                F.count(F.lit(1)).alias("n"), F.sum("val").alias("s")
-            )
-            .collect()[0]
-        )
-        assert (got.n, got.s) == (want.n, want.s)
-
-    _check()
-    d = new_data_dir(root)
-    to_physical(
-        _kv(spark, [(100, 7)], "k long, val long"),
-        read_manifest(root), context="append",
-    ).write.parquet(d, mode="append")
-    publish_version(root, d, base_version=current_version(root))
-    delete_matching_dv(spark, root, _kv(spark, [(3, 0)]).select("k"), "k")
-    refresh_rollup(spark, root, rollup, dims, measures)
-    _check()
 
 
 def test_branch_rename_publishes_back(spark, tmp_path):

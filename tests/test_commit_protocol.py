@@ -211,43 +211,28 @@ def test_rollback_restores_contracts(spark, tmp_path):
 
 
 def test_racing_rollup_refreshes_cannot_double_count(spark, tmp_path):
-    """Two refreshes computed against the same rollup state must not
-    both land (double-counted partials): the partials append is a
-    KEYED commit, so the stale writer conflicts loudly."""
-    from trial_submission_studio_spark.io.rollup import (
-        read_rollup,
-        refresh_rollup,
-    )
+    """Two refreshes of a rollup table computed against the same
+    rollup state must not both land (double-counted partials): a
+    refresh appends its partial as a KEYED commit, keyed-over-keyed
+    never rebases, so the stale writer conflicts loudly and the
+    rollup keeps only the first refresh."""
+    # a count rollup stored as (partial id, partial count) rows whose
+    # counts sum to the total: 20 base rows so far
+    root = _publish(spark, tmp_path, [(0, 20)], n_files=1, name="r")
+    v0 = current_version(root)
 
-    base = _publish(spark, tmp_path, [(k, k) for k in range(20)], name="b")
-    rroot = str(tmp_path / "r")
-    refresh_rollup(spark, base, rroot, [], {"n": ("count", None)})
-    v_r = current_version(rroot)
+    def _refresh():
+        # both refreshers saw the same one new base row
+        d = _write_run(spark, root, [(1, 1)])
+        return [os.path.relpath(p, root) for p in _files_of(d)]
 
-    # a second base commit, refreshed normally — incremental partial
-    # appends commit as KEYED (they read the store state)
-    publish_version(
-        base, _write_run(spark, base, [(100, 1)]),
-        base_version=current_version(base),
-    )
-    m = refresh_rollup(spark, base, rroot, [], {"n": ("count", None)})
+    first, stale = _refresh(), _refresh()
+    m = commit_files(root, base_version=v0, kind="keyed", add_files=first)
     assert m["metadata"]["commit_kind"] == "keyed"
-    assert read_rollup(spark, rroot).collect()[0]["n"] == 21
-
-    # a stale writer that computed partials against v_r tries to land
-    # them now: refused (keyed-over-keyed), store unchanged
-    d = new_data_dir(rroot)
-    _kv(spark, [(0, 0)]).write.parquet(d, mode="append")
-    import os as _os
-
-    from trial_submission_studio_spark.io.versioned import data_files
-
     with pytest.raises(TableConflictError):
-        commit_files(
-            rroot, base_version=v_r, kind="keyed",
-            add_files=[_os.path.relpath(p, rroot) for p in data_files(d)],
-        )
-    assert read_rollup(spark, rroot).collect()[0]["n"] == 21
+        commit_files(root, base_version=v0, kind="keyed", add_files=stale)
+    assert current_version(root) == m["version"]
+    assert sum(r.v for r in read_version(spark, root).collect()) == 21
 
 
 def test_table_history_describes_the_commit_log(spark, tmp_path):

@@ -1,6 +1,7 @@
 """Merge-on-read deletion vectors (`io/deletion_vectors.py`): O(k)
 deletes, read-path composition (plain / zone-map / bucket-pruned
-reads, change feed, rollup), tombstone folding by every rewrite, and
+reads, row-level change sets between versions), tombstone folding by
+every rewrite, and
 the bytes-written audit that pins the whole point — a scattered
 k-row delete must not rewrite data files."""
 
@@ -8,7 +9,6 @@ import os
 
 from pyspark.sql import functions as F
 
-from trial_submission_studio_spark.io.changefeed import change_feed
 from trial_submission_studio_spark.io.deletion_vectors import (
     delete_matching_dv,
     dv_map,
@@ -17,10 +17,6 @@ from trial_submission_studio_spark.io.deletion_vectors import (
 from trial_submission_studio_spark.io.merge import (
     delete_matching,
     merge_version,
-)
-from trial_submission_studio_spark.io.rollup import (
-    read_rollup,
-    refresh_rollup,
 )
 from trial_submission_studio_spark.io.versioned import (
     compact_version,
@@ -37,6 +33,7 @@ from trial_submission_studio_spark.io.zonemap import (
     publish_with_stats,
     read_pruned,
 )
+from trial_submission_studio_spark.operators.diff import snapshot_diff
 
 
 def _kv(spark, pairs):
@@ -60,6 +57,16 @@ def _publish(spark, tmp_path, n=40, n_files=4, name="t"):
 
 def _snap(spark, root, version=None):
     return {(r.k, r.v) for r in read_version(spark, root, version).collect()}
+
+
+def _change_feed(spark, root, v_from, v_to):
+    """Row-level change set between two versions: `snapshot_diff` of
+    the two time-travel reads, as ``{(k, insert|delete|update)}``."""
+    name = {"added": "insert", "removed": "delete", "changed": "update"}
+    d = snapshot_diff(
+        read_version(spark, root, v_from), read_version(spark, root, v_to), ["k"]
+    )
+    return {(r.k, name[r.change_type]) for r in d.collect()}
 
 
 def _data_bytes(root, manifest):
@@ -230,10 +237,7 @@ def test_change_feed_reports_dv_deletes_and_reinsert_as_update(
     v0 = current_version(root)
     delete_matching_dv(spark, root, _keys(spark, [3, 17]), "k")
     v1 = current_version(root)
-    feed = {
-        (r.k, r._change) for r in change_feed(spark, root, v0, v1, "k").collect()
-    }
-    assert feed == {(3, "delete"), (17, "delete")}
+    assert _change_feed(spark, root, v0, v1) == {(3, "delete"), (17, "delete")}
 
     # dv-delete then re-insert the key with a NEW value in a later
     # append: across the span that is an update, not delete+insert
@@ -241,45 +245,9 @@ def test_change_feed_reports_dv_deletes_and_reinsert_as_update(
     _kv(spark, [(3, 999)]).repartition(1).write.parquet(d, mode="append")
     publish_version(root, d, base_version=current_version(root))
     v2 = current_version(root)
-    feed = {
-        (r.k, r._change) for r in change_feed(spark, root, v0, v2, "k").collect()
-    }
-    assert feed == {(3, "update"), (17, "delete")}
+    assert _change_feed(spark, root, v0, v2) == {(3, "update"), (17, "delete")}
     # and the dv-only hop plus the append-only hop stay exact
-    feed = {
-        (r.k, r._change) for r in change_feed(spark, root, v1, v2, "k").collect()
-    }
-    assert feed == {(3, "insert")}
-
-
-def test_rollup_refresh_sees_dv_deletes(spark, tmp_path):
-    root = _publish(spark, tmp_path, n=40, n_files=4)
-    rroot = str(tmp_path / "r")
-    dims, measures = [], {"n": ("count", None), "s": ("sum", "v")}
-
-    refresh_rollup(spark, root, rroot, dims, measures)
-    assert read_rollup(spark, rroot).collect()[0].asDict() == {
-        "n": 40, "s": sum(k * 10 for k in range(40))
-    }
-
-    delete_matching_dv(spark, root, _keys(spark, [1, 2, 3]), "k")
-    m = refresh_rollup(spark, root, rroot, dims, measures)
-    assert m["metadata"]["rollup"]["files_dv_changed"] >= 1
-    assert m["metadata"]["rollup"]["files_added"] == 0
-    got = read_rollup(spark, rroot).collect()[0].asDict()
-    assert got == {"n": 37, "s": sum(k * 10 for k in range(40) if k > 3)}
-
-    # a second dv delete on the SAME files: generation tags keep the
-    # old and new partials apart
-    delete_matching_dv(spark, root, _keys(spark, [4, 5]), "k")
-    refresh_rollup(spark, root, rroot, dims, measures)
-    got = read_rollup(spark, rroot).collect()[0].asDict()
-    assert got == {"n": 35, "s": sum(k * 10 for k in range(40) if k > 5)}
-
-    # idempotent on an unchanged base
-    before = current_version(rroot)
-    refresh_rollup(spark, root, rroot, dims, measures)
-    assert current_version(rroot) == before
+    assert _change_feed(spark, root, v1, v2) == {(3, "insert")}
 
 
 def test_dv_verify_detects_tampering(spark, tmp_path):
@@ -336,9 +304,9 @@ def test_dv_free_reads_plan_plain_scans(spark, tmp_path):
 
 def test_change_feed_sees_dv_rollback_resurrection(spark, tmp_path):
     """Rolling back a dv delete shrinks the dv map with an identical
-    file list; the feed must report the resurrected rows as inserts
-    (and value-identical re-inserts as nothing vs their pre-delete
-    state across the full span)."""
+    file list; the change set must report the resurrected rows as
+    inserts (and value-identical re-inserts as nothing vs their
+    pre-delete state across the full span)."""
     from trial_submission_studio_spark.io.versioned import rollback
 
     root = _publish(spark, tmp_path)
@@ -347,20 +315,17 @@ def test_change_feed_sees_dv_rollback_resurrection(spark, tmp_path):
     v1 = current_version(root)
     rollback(root, v0)
     v2 = current_version(root)
-    feed = {
-        (r.k, r._change) for r in change_feed(spark, root, v1, v2, "k").collect()
-    }
-    assert feed == {(4, "insert"), (8, "insert")}
+    assert _change_feed(spark, root, v1, v2) == {(4, "insert"), (8, "insert")}
     # full span v0 -> v2 is a no-op (delete then resurrect)
-    assert change_feed(spark, root, v0, v2, "k").count() == 0
+    assert _change_feed(spark, root, v0, v2) == set()
 
 
 def test_delete_where_drops_whole_files_by_metadata(spark, tmp_path):
     """Retention delete (delete_where): on a clustered table the bulk
     of the predicate range is dropped at FILE grain with zero reads
     (zone-map proof), only the boundary file pays row-level
-    tombstones, untouched files are never opened — and the read,
-    time travel, and change feed all stay exact."""
+    tombstones, untouched files are never opened — and the read, time
+    travel, and the row-level change set all stay exact."""
     from trial_submission_studio_spark.io.deletion_vectors import (
         delete_where,
     )
@@ -385,14 +350,9 @@ def test_delete_where_drops_whole_files_by_metadata(spark, tmp_path):
     assert au["rows_dropped"] + au["rows_tombstoned"] == 30
     assert _snap(spark, root) == {(k, k) for k in range(30, 100)}
     assert _snap(spark, root, v0) == {(k, k) for k in range(100)}
-
-    feed = {
-        (r.k, r._change)
-        for r in change_feed(
-            spark, root, v0, m1["version"], "k"
-        ).collect()
+    assert _change_feed(spark, root, v0, m1["version"]) == {
+        (k, "delete") for k in range(30)
     }
-    assert feed == {(k, "delete") for k in range(30)}
 
     # no-match predicate: no-op, no commit
     m2 = delete_where(spark, root, [("k", ">=", 1000)])

@@ -1,12 +1,11 @@
-"""Link-graph ranking: html_links extraction and distributed PageRank
-(vs a numpy power-iteration reference; dangling handling; probability
+"""Link-graph ranking: distributed PageRank and HITS (vs a numpy
+power-iteration reference; dangling handling; probability
 conservation)."""
 
 import numpy as np
 import pytest
 
 from trial_submission_studio_spark.operators.graph import pagerank
-from trial_submission_studio_spark.operators.textclean import html_links
 from trial_submission_studio_spark.sources.local import values_df
 
 
@@ -147,54 +146,24 @@ def test_pagerank_duplicate_edges_and_validations(spark):
         pagerank(dup, damping=1.0)
 
 
-def test_html_links_extraction(spark):
-    html = (
-        '<html><body><a href="/about">About</a>'
-        '<a href="https://other.example.com/x?a=1">X</a>'
-        '<a href="mailto:a@b.c">mail</a>'
-        '<a name="anchor">no href</a>'
-        '<a href="rel/path.html">rel</a></body></html>'
-    )
-    df = values_df(
-        spark,
-        [(1, html, "https://site.example.com/dir/page.html"), (2, None, None)],
-        "id bigint, html string, base string",
-    )
-    rows = {r.id: r.links for r in df.select(
-        "id", html_links("html", "base").alias("links")
-    ).collect()}
-    assert rows[1] == [
-        "https://site.example.com/about",
-        "https://other.example.com/x?a=1",
-        "https://site.example.com/dir/rel/path.html",
-    ]
-    assert rows[2] is None
-    # without a base, relative links drop, absolute stay
-    bare = df.filter("id = 1").select(html_links("html").alias("links")).first().links
-    assert bare == ["https://other.example.com/x?a=1"]
-
-
 def test_crawl_graph_composition(spark):
-    """Pages → links → domain edges → pagerank: the crawl-governance
+    """Page links → domain edges → pagerank: the crawl-governance
     chain; a domain every page links to outranks the rest."""
     from pyspark.sql import functions as F
 
     from trial_submission_studio_spark.operators.urls import url_registered_domain
 
-    pages = values_df(
+    links = values_df(
         spark,
         [
-            (1, '<a href="https://hub.example.com/a">h</a>', "https://www.source-one.net/"),
-            (2, '<a href="https://hub.example.com/b">h</a>', "https://www.source-two.net/"),
-            (3, '<a href="https://www.source-one.net/c">s</a>', "https://hub.example.com/"),
+            (1, "https://hub.example.com/a", "https://www.source-one.net/"),
+            (2, "https://hub.example.com/b", "https://www.source-two.net/"),
+            (3, "https://www.source-one.net/c", "https://hub.example.com/"),
         ],
-        "id bigint, html string, url string",
+        "id bigint, href string, url string",
     )
     edges = (
-        pages.select(
-            url_registered_domain("url").alias("src"),
-            F.explode(html_links("html", "url")).alias("href"),
-        )
+        links.select(url_registered_domain("url").alias("src"), "href")
         .select("src", url_registered_domain("href").alias("dst"))
         .filter(F.col("src") != F.col("dst"))
     )
@@ -224,49 +193,6 @@ def test_pagerank_step_plan_shape(spark):
     step = _pagerank_step(nodes, ed, ranks, dangling, 4, 0.85)
     plan = step._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan
-
-
-def test_html_anchor_links_extraction(spark):
-    """Anchor-text extraction: hrefs resolve against the base URL,
-    anchor text is the whitespace-collapsed element content, nested
-    markup inside <a> contributes its text, unclosed anchors flush,
-    and the per-target anchor table composes with a groupBy."""
-    from pyspark.sql import functions as F
-
-    from trial_submission_studio_spark.operators.textclean import (
-        html_anchor_links,
-    )
-
-    html = """
-    <html><body>
-      <a href="/docs/intro">Getting   <b>started</b></a>
-      <a href="https://other.example.com/page">External link</a>
-      <a name="no-href">not a link</a>
-      <a href="mailto:x@example.com">mail</a>
-      <a href="/tail">unclosed anchor text
-    </body></html>
-    """
-    pages = spark.createDataFrame(
-        [(1, html, "https://site.example.com/a/b")],
-        "page_id long, html string, url string",
-    )
-    rows = pages.select(
-        F.explode(html_anchor_links("html", "url")).alias("l")
-    ).select("l.href", "l.anchor")
-    got = {(r["href"], r["anchor"]) for r in rows.collect()}
-    assert got == {
-        ("https://site.example.com/docs/intro", "Getting started"),
-        ("https://other.example.com/page", "External link"),
-        ("https://site.example.com/tail", "unclosed anchor text"),
-    }
-    # per-target anchor table: the classic web relevance signal
-    table = (
-        pages.select(F.explode(html_anchor_links("html", "url")).alias("l"))
-        .groupBy("l.href")
-        .agg(F.collect_list("l.anchor").alias("anchors"))
-    )
-    by_href = {r["href"]: r["anchors"] for r in table.collect()}
-    assert by_href["https://site.example.com/docs/intro"] == ["Getting started"]
 
 
 def _numpy_hits(n, edges, iterations):

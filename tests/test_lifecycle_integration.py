@@ -1,40 +1,26 @@
-"""The full corpus lifecycle in one flow — every table-format piece
-composing end-to-end the way a production deployment would chain
-them:
+"""One table-format cycle in one flow — the pieces composing
+end-to-end the way a production deployment would chain them:
 
-    release (gate+publish) -> CDC merge -> rollup refresh
-    -> change feed -> ANN store sync -> OPTIMIZE -> audits
+    publish (with zone maps) -> CDC merge -> OPTIMIZE -> pruning audit
 
 Each piece has its own suite; this test pins the COMPOSITION —
 that the artifacts each step emits are exactly what the next step
 consumes, across one realistic cycle."""
 
+import os
+
 from pyspark.sql import functions as F
 
-from trial_submission_studio_spark.corpus import CorpusConfig
-from trial_submission_studio_spark.io.changefeed import change_feed_summary
 from trial_submission_studio_spark.io.merge import merge_version
-from trial_submission_studio_spark.io.rollup import read_rollup, refresh_rollup
 from trial_submission_studio_spark.io.versioned import (
-    current_version,
+    new_data_dir,
     read_version,
 )
 from trial_submission_studio_spark.io.zonemap import (
     optimize_version,
     pruning_audit,
+    publish_with_stats,
     read_pruned,
-)
-from trial_submission_studio_spark.operators.ann_store import (
-    save_ivf_corpus,
-    saved_ivf_topk,
-    sync_ivf_store,
-)
-from trial_submission_studio_spark.release import release_corpus
-
-CFG = CorpusConfig(
-    min_line_words=None, min_doc_tokens=2, paragraph_max_docs=None,
-    substring_w=None, exact_dedup=True, near_dedup=False,
-    contamination_threshold=None,
 )
 
 
@@ -43,86 +29,44 @@ def _docs(spark, lo, hi):
         "id AS doc_id",
         "concat('document number ', id, ' body text') AS text",
         "CASE WHEN id % 2 = 0 THEN 'web' ELSE 'books' END AS source",
-        "transform(sequence(0, 7), j -> CAST(sin(id*0.7+j*1.3) AS DOUBLE))"
-        " AS embedding",
     )
 
 
-def test_release_merge_rollup_feed_ann_optimize_cycle(spark, tmp_path):
+def test_merge_optimize_prune_cycle(spark, tmp_path):
     root = str(tmp_path / "corpus")
-    rroot = str(tmp_path / "rollup")
-    ann = str(tmp_path / "ann")
+    os.makedirs(root)
 
-    # 1. release v1 (gated, schema + zone maps recorded)
-    out = release_corpus(
-        spark, _docs(spark, 0, 200), "doc_id", "text", root,
-        config=CFG,
-        expectations=[{"check": "unique", "cols": ["doc_id"]}],
-        stats_columns=["doc_id"],
-    )
-    v1 = out["manifest"]["version"]
+    # 1. publish v1 with zone maps on the key
+    d = new_data_dir(root)
+    _docs(spark, 0, 200).repartition(4).write.parquet(d, mode="append")
+    publish_with_stats(root, d, ["doc_id"])
 
-    # 2. serving artifacts off v1: rollup + ANN store
-    spec = {"n": ("count", None), "users": ("approx_distinct", "doc_id")}
-    refresh_rollup(spark, root, rroot, ["source"], spec)
-    n_by_src = {r.source: r.n for r in read_rollup(spark, rroot).collect()}
-    assert sum(n_by_src.values()) == 200
-    save_ivf_corpus(
-        read_version(spark, root).select("doc_id", "embedding"),
-        ann, n_centroids=4, id_col="doc_id", vec_col="embedding",
-    )
-
-    # 3. CDC: one merge commit (update text+embedding of 5, delete 6,
-    #    insert 500)
+    # 2. CDC: one merge commit (update text of 5, delete 6, insert 500)
     changes = (
         _docs(spark, 500, 501)
         .unionByName(
-            _docs(spark, 300, 301).select(
-                F.lit(5).cast("long").alias("doc_id"),
-                F.lit("updated body of five").alias("text"),
-                F.lit("web").alias("source"),
-                "embedding",
+            _docs(spark, 5, 6).withColumn(
+                "text", F.lit("updated body of five")
             )
         )
         .withColumn("is_del", F.lit(False))
         .unionByName(_docs(spark, 6, 7).withColumn("is_del", F.lit(True)))
     )
     merge_version(spark, root, changes, "doc_id", delete_col="is_del")
-    v2 = current_version(root)
-
-    # 4. change feed drives BOTH consumers incrementally
-    s = change_feed_summary(spark, root, v1, v2, "doc_id")
-    assert (s["n_insert"], s["n_update"], s["n_delete"]) == (1, 1, 1)
-    r = refresh_rollup(spark, root, rroot, ["source"], spec)
-    assert r["metadata"]["rollup"]["files_added"] >= 1
-    n2 = {x.source: x.n for x in read_rollup(spark, rroot).collect()}
-    assert sum(n2.values()) == 200  # -1 delete +1 insert
-    sync = sync_ivf_store(spark, root, ann, v1, v2)
-    assert sync["upserted"] == 2 and sync["deleted"] == 1
-    # the ANN store answers for the NEW embedding of doc 5
-    probe = _docs(spark, 300, 301).select(
-        F.lit(9000).cast("long").alias("doc_id"), "embedding"
-    )
-    hits = {
-        x.doc_id
-        for x in saved_ivf_topk(spark, ann, probe, k=3, n_probe=4).collect()
+    after_merge = {
+        r.doc_id: r.text for r in read_version(spark, root).collect()
     }
-    assert 5 in hits
-    assert 6 not in {
-        x.doc_id
-        for x in saved_ivf_topk(
-            spark, ann, _docs(spark, 6, 7).select("doc_id", "embedding"),
-            k=5, n_probe=4,
-        ).collect()
-    }
+    assert len(after_merge) == 200  # -1 delete +1 insert
+    assert after_merge[5] == "updated body of five"
+    assert 6 not in after_merge and 500 in after_merge
 
-    # 5. OPTIMIZE the corpus; rollup refresh absorbs the rewrite and
-    #    every consumer answer is unchanged
+    # 3. OPTIMIZE the corpus: every answer is unchanged, and the
+    #    clustered layout + fresh stats make a narrow id range prune
     optimize_version(spark, root, {"doc_id": (0.0, 1000.0)},
                      num_partitions=4)
-    refresh_rollup(spark, root, rroot, ["source"], spec)
-    assert {x.source: x.n for x in read_rollup(spark, rroot).collect()} == n2
-    # clustered layout + fresh stats: a narrow id range now prunes
+    assert {
+        r.doc_id: r.text for r in read_version(spark, root).collect()
+    } == after_merge
     a = pruning_audit(root, [("doc_id", "between", (10, 20))])
     assert a["files_skipped"] > 0
     got = {
@@ -132,30 +76,3 @@ def test_release_merge_rollup_feed_ann_optimize_cycle(spark, tmp_path):
         ).collect()
     }
     assert got == set(range(10, 21))  # (the deleted id 6 is outside)
-
-    # 6. r12: ANN drift management composes with the synced store —
-    #    balance audit, retrain (atomic centroid swap + rewrite),
-    #    answers preserved for the same probes
-    from trial_submission_studio_spark.operators.ann_store import (
-        ivf_cell_balance,
-        retrain_ivf_store,
-    )
-
-    before = ivf_cell_balance(spark, ann)
-    assert before["n_rows"] == 200
-    m_re = retrain_ivf_store(spark, ann)
-    assert "retrain_of" in m_re["metadata"]
-    after = ivf_cell_balance(spark, ann)
-    assert after["n_rows"] == 200  # nothing lost in the rewrite
-    hits_re = {
-        x.doc_id
-        for x in saved_ivf_topk(spark, ann, probe, k=3, n_probe=4).collect()
-    }
-    assert 5 in hits_re  # the upserted embedding still serves
-    assert 6 not in {
-        x.doc_id
-        for x in saved_ivf_topk(
-            spark, ann, _docs(spark, 6, 7).select("doc_id", "embedding"),
-            k=5, n_probe=4,
-        ).collect()
-    }  # the delete is still honored across the retrain rewrite

@@ -1,16 +1,14 @@
 """One composed r13 lifecycle: a constrained versioned table fed by
-dv-mode streaming CDC with rollups riding the batches, auto-
-maintenance folding the tombstone debt, and a shallow clone taking an
-experimental merge — every artifact consumed by the next step, every
-step's answers pinned against direct recomputation."""
+merges and merge-on-read deletes, auto-maintenance folding the
+tombstone debt, and a shallow clone taking an experimental merge —
+every artifact consumed by the next step, every step's answers pinned
+against a plain dict model."""
 
-import os
-
-from pyspark.sql import functions as F
-
-from trial_submission_studio_spark.io.deletion_vectors import dv_map
+from trial_submission_studio_spark.io.deletion_vectors import (
+    delete_matching_dv,
+    dv_map,
+)
 from trial_submission_studio_spark.io.merge import merge_version
-from trial_submission_studio_spark.io.rollup import read_rollup
 from trial_submission_studio_spark.io.versioned import (
     ConstraintViolationError,
     current_version,
@@ -22,108 +20,75 @@ from trial_submission_studio_spark.io.versioned import (
     set_table_constraints,
     shallow_clone,
 )
-from trial_submission_studio_spark.streaming.cdc import apply_cdc_batch
 
-SCHEMA = "k bigint, grp string, score double, is_del boolean"
-
-
-def _direct_rollup(spark, root):
-    return {
-        (r.grp, r.n, r.s)
-        for r in read_version(spark, root)
-        .groupBy("grp")
-        .agg(F.count(F.lit(1)).alias("n"),
-             F.sum("score").cast("long").alias("s"))
-        .collect()
-    }
+SCHEMA = "k bigint, grp string, score double"
 
 
-def _rolled(spark, rroot):
-    return {
-        (r.grp, r.n, int(r.s))
-        for r in read_rollup(spark, rroot).collect()
-    }
+def _snap(spark, root):
+    return {(r.k, r.grp, r.score) for r in read_version(spark, root).collect()}
 
 
-def test_constrained_dv_cdc_rollup_maintenance_clone(spark, tmp_path):
+def test_constrained_dv_maintenance_clone(spark, tmp_path):
     root = str(tmp_path / "t")
-    rroot = str(tmp_path / "r")
-    measures = {"n": ("count", None), "s": ("sum", "score")}
-    rollups = [{"root": rroot, "dims": ["grp"], "measures": measures}]
+    model = {k: ("a" if k % 2 else "b", float(k)) for k in range(1, 41)}
+
+    def _want():
+        return {(k, g, s) for k, (g, s) in model.items()}
 
     # bootstrap + CHECK contract
-    b0 = spark.createDataFrame(
-        [(k, "a" if k % 2 else "b", float(k), False) for k in range(1, 41)],
-        SCHEMA,
-    )
-    apply_cdc_batch(b0, 0, root, "k", delete_col="is_del",
-                    delete_mode="dv", rollups=rollups)
+    d = new_data_dir(root)
+    spark.createDataFrame(
+        [(k, g, s) for k, (g, s) in model.items()], SCHEMA
+    ).repartition(2).write.parquet(d, mode="append")
+    publish_version(root, d)
     set_table_constraints(spark, root, {"score_nonneg": "score >= 0"})
-    assert _rolled(spark, rroot) == _direct_rollup(spark, root)
+    assert _snap(spark, root) == _want()
 
-    # dv-mode batches: erasures tombstone, rollup stays exact
-    for i, batch in enumerate(
-        (
-            [(1, None, 0.0, True), (2, None, 0.0, True),
-             (50, "a", 5.0, False)],
-            [(3, "b", 9.0, False), (4, None, 0.0, True)],
-        ),
-        start=1,
-    ):
-        apply_cdc_batch(
-            spark.createDataFrame(batch, SCHEMA), i, root, "k",
-            delete_col="is_del", delete_mode="dv", rollups=rollups,
-        )
-        assert _rolled(spark, rroot) == _direct_rollup(spark, root)
+    # dv deletes + upserts: erasures tombstone, the snapshot stays exact
+    for dels, ups in (([1, 2], [(50, "a", 5.0)]), ([4], [(3, "b", 9.0)])):
+        keys = spark.createDataFrame([(k,) for k in dels], "k bigint")
+        delete_matching_dv(spark, root, keys, "k")
+        merge_version(spark, root, spark.createDataFrame(ups, SCHEMA), "k")
+        for k in dels:
+            model.pop(k)
+        model.update({k: (g, s) for k, g, s in ups})
+        assert _snap(spark, root) == _want()
     assert dv_map(read_manifest(root))  # tombstone debt exists
 
-    # a violating batch refuses at the commit choke point: nothing
-    # lands, and the SAME batch id retries clean afterwards
-    bad = spark.createDataFrame([(60, "a", -1.0, False)], SCHEMA)
+    # a violating commit refuses at the commit choke point: nothing
+    # lands, and a clean retry goes through
     v = current_version(root)
     try:
-        apply_cdc_batch(bad, 3, root, "k", delete_col="is_del",
-                        delete_mode="dv", rollups=rollups)
-        raise AssertionError("violating batch was accepted")
+        merge_version(
+            spark, root, spark.createDataFrame([(60, "a", -1.0)], SCHEMA), "k"
+        )
+        raise AssertionError("violating merge was accepted")
     except ConstraintViolationError:
         pass
     assert current_version(root) == v
-    good = spark.createDataFrame([(60, "a", 1.0, False)], SCHEMA)
-    apply_cdc_batch(good, 3, root, "k", delete_col="is_del",
-                    delete_mode="dv", rollups=rollups)
-    assert _rolled(spark, rroot) == _direct_rollup(spark, root)
+    merge_version(
+        spark, root, spark.createDataFrame([(60, "a", 1.0)], SCHEMA), "k"
+    )
+    model[60] = ("a", 1.0)
+    assert _snap(spark, root) == _want()
 
-    # auto-maintenance folds the dv debt; the next rollup refresh
-    # absorbs the rewrite through the file delta and stays exact
+    # auto-maintenance folds the dv debt and the rows survive exactly
     r = maintain_table(spark, root, max_small_files=10_000, max_dv_rows=1)
     assert r["dv_folded"]
     assert not dv_map(read_manifest(root))
-    from trial_submission_studio_spark.io.rollup import refresh_rollup
+    assert _snap(spark, root) == _want()
 
-    refresh_rollup(spark, root, rroot, ["grp"], measures)
-    assert _rolled(spark, rroot) == _direct_rollup(spark, root)
-
-    # a shallow clone takes an experimental merge; production table,
-    # its rollup, and its constraints are untouched — and the clone
-    # inherits the CHECK contract
-    snap_before = {tuple(r) for r in read_version(spark, root).collect()}
+    # a shallow clone takes an experimental merge; the production
+    # table is untouched — and the clone inherits the CHECK contract
     dst = str(tmp_path / "exp")
     shallow_clone(root, dst, spark=spark)
     merge_version(
-        spark, dst,
-        spark.createDataFrame([(50, "b", 123.0)],
-                              "k bigint, grp string, score double"),
-        "k",
+        spark, dst, spark.createDataFrame([(50, "b", 123.0)], SCHEMA), "k"
     )
-    assert {tuple(r) for r in read_version(spark, root).collect()} \
-        == snap_before
-    assert _rolled(spark, rroot) == _direct_rollup(spark, root)
+    assert _snap(spark, root) == _want()
     try:
         merge_version(
-            spark, dst,
-            spark.createDataFrame([(70, "a", -9.0)],
-                                  "k bigint, grp string, score double"),
-            "k",
+            spark, dst, spark.createDataFrame([(70, "a", -9.0)], SCHEMA), "k"
         )
         raise AssertionError("clone accepted a constraint violation")
     except ConstraintViolationError:

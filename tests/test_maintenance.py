@@ -1,7 +1,6 @@
-"""Auto-maintenance policies (`io/versioned.py:maintain_table` +
-`operators/ann_store.py:sync_ivf_store(auto_retrain_skew=...)`): the
-r12 sensors (cell balance, file stats) wired to their actuators so a
-pipeline heals itself without manual compact/retrain calls."""
+"""Auto-maintenance policies (`io/versioned.py:maintain_table`): the
+file-stat and tombstone-debt sensors wired to compaction so a
+pipeline heals itself without manual compact calls."""
 
 import os
 
@@ -85,95 +84,3 @@ def test_tombstone_debt_triggers_dv_fold(spark, tmp_path):
     assert not r2["compacted"] and r2["version"] == r["version"]
 
 
-def test_sync_auto_retrain_heals_drift_end_to_end(spark, tmp_path):
-    """The full lifecycle without manual calls: a versioned embeddings
-    table drifts (appends from a region the build never saw), the
-    change-feed sync is asked to keep the store balanced, and one
-    sync call applies the feed, detects the skew, retrains
-    atomically, and answers stay ≡ brute-force cosine."""
-    from trial_submission_studio_spark.operators.ann_store import (
-        ivf_cell_balance,
-        save_ivf_corpus,
-        saved_ivf_topk,
-        sync_ivf_store,
-    )
-    from trial_submission_studio_spark.operators.similarity import ivf_topk
-
-    DIM = 8
-
-    def _vecs(lo, hi, shift=0.0):
-        return spark.range(lo, hi).selectExpr(
-            "id AS vec_id",
-            f"""transform(sequence(0, {DIM - 1}), j ->
-                 CAST({shift} + sin(id * 0.7 + j * 1.3) + 0.1 * j AS DOUBLE))
-               AS embedding""",
-        )
-
-    base = str(tmp_path / "emb")
-    root = str(tmp_path / "ann")
-    os.makedirs(base)
-    d = new_data_dir(base)
-    _vecs(0, 200).repartition(2).write.parquet(d, mode="append")
-    v1 = publish_version(base, d)["version"]
-    save_ivf_corpus(read_version(spark, base), root, n_centroids=8)
-
-    # drift lands in the BASE table (the store hasn't seen it yet)
-    d = new_data_dir(base)
-    _vecs(200, 600, shift=5.0).repartition(2).write.parquet(d, mode="append")
-    publish_version(base, d, base_version=v1)
-
-    s = sync_ivf_store(spark, base, root, v1, auto_retrain_skew=2.0)
-    assert s["upserted"] == 400 and s["retrained"]
-    assert s["balance"]["skew"] > 2.0
-    assert s["balance_after"]["skew"] < s["balance"]["skew"] / 2
-    assert s["balance_after"]["n_rows"] == 600
-
-    # answers ≡ brute force (full probe) over the synced corpus
-    corpus = read_version(spark, base)
-    queries = _vecs(1000, 1003).unionByName(_vecs(2000, 2003, shift=5.0))
-    cents = read_manifest(root)["metadata"]["ivf"]["centroids"]
-    want = {
-        (r.query_id, r.rank): (r.vec_id, r.sim)
-        for r in ivf_topk(
-            corpus, queries, k=5, n_probe=len(cents), centroids=cents
-        ).collect()
-    }
-    got = {
-        (r.query_id, r.rank): (r.vec_id, r.sim)
-        for r in saved_ivf_topk(
-            spark, root, queries, k=5, n_probe=len(cents)
-        ).collect()
-    }
-    assert got == want
-
-    # nothing changed since: the next sync applies nothing, retrains
-    # nothing
-    s2 = sync_ivf_store(
-        spark, base, root, current_version(base), auto_retrain_skew=2.0
-    )
-    assert s2["upserted"] == 0 and not s2["retrained"]
-
-
-def test_auto_retrain_refused_on_ivfpq(spark, tmp_path):
-    import pytest
-
-    from trial_submission_studio_spark.operators.ann_store import (
-        save_ivfpq_corpus,
-        sync_ivf_store,
-    )
-
-    DIM = 8
-    base = str(tmp_path / "emb")
-    root = str(tmp_path / "ann")
-    os.makedirs(base)
-    d = new_data_dir(base)
-    vecs = spark.range(0, 64).selectExpr(
-        "id AS vec_id",
-        f"""transform(sequence(0, {DIM - 1}), j ->
-             CAST(sin(id * 0.7 + j * 1.3) AS DOUBLE)) AS embedding""",
-    )
-    vecs.write.parquet(d, mode="append")
-    v1 = publish_version(base, d)["version"]
-    save_ivfpq_corpus(read_version(spark, base), root, n_centroids=4, m=4)
-    with pytest.raises(ValueError, match="float-IVF-only"):
-        sync_ivf_store(spark, base, root, v1, auto_retrain_skew=2.0)

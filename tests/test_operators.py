@@ -4,20 +4,22 @@ reshape, dedup, similarity, text stats."""
 from pyspark.sql import functions as F
 
 from tests.conftest import rows
-from trial_submission_studio_spark.operators import (
-    add_sequence_number,
-    apply_codelist_decode,
-    apply_ct_normalization,
-    reciprocal_augment,
-    supp_unpivot,
-)
+from trial_submission_studio_spark.operators.codelist_decode import apply_codelist_decode
+from trial_submission_studio_spark.operators.ct_lookup import apply_ct_normalization
 from trial_submission_studio_spark.operators.dedup import (
     exact_duplicates,
     lsh_candidate_pairs,
     minhash_signatures,
     ngram_jaccard_pairs,
 )
-from trial_submission_studio_spark.operators.sequence import duplicate_sequence_counts
+from trial_submission_studio_spark.operators.reshape import (
+    reciprocal_augment,
+    supp_unpivot,
+)
+from trial_submission_studio_spark.operators.sequence import (
+    add_sequence_number,
+    duplicate_sequence_counts,
+)
 from trial_submission_studio_spark.operators.similarity import brute_force_topk
 from trial_submission_studio_spark.operators.textstats import (
     quality_score,
@@ -369,33 +371,6 @@ def test_salt_spreads_single_partition_hot_key(spark):
     assert rows(agg) == [("HOT", 1000, float(sum(range(1000))))]
 
 
-def test_melt_findings(spark):
-    from trial_submission_studio_spark.operators.findings import MeasureGroup, melt_findings
-
-    df = values_df(
-        spark,
-        [("S1", "185", "cm", "84.0", "kg", "SUPINE"), ("S2", "", "cm", "70.5", "kg", "")],
-        "USUBJID string, ORRES_HEIGHT string, ORRESU_HEIGHT string, "
-        "ORRES_WEIGHT string, ORRESU_WEIGHT string, POS string",
-    )
-    out = melt_findings(
-        df,
-        [
-            MeasureGroup("HEIGHT", "Height", "ORRES_HEIGHT", "ORRESU_HEIGHT"),
-            MeasureGroup("WEIGHT", "Weight", "ORRES_WEIGHT", "ORRESU_WEIGHT", extra={"VSPOS": "POS"}),
-        ],
-        id_cols=["USUBJID"],
-        testcd_col="VSTESTCD", test_col="VSTEST", orres_col="VSORRES", orresu_col="VSORRESU",
-    )
-    got = rows(out, "USUBJID", "VSTESTCD", "VSORRES", "VSORRESU", "VSPOS")
-    # S1 both measures; S2 only weight (blank height dropped)
-    assert got == [
-        ("S1", "HEIGHT", "185", "cm", None),
-        ("S1", "WEIGHT", "84.0", "kg", "SUPINE"),
-        ("S2", "WEIGHT", "70.5", "kg", ""),
-    ]
-
-
 def test_ivf_topk_recovers_exact_match(spark):
     from trial_submission_studio_spark.operators.similarity import ivf_topk
 
@@ -483,45 +458,6 @@ def test_pack_sequences_token_budget(spark):
     got = pack_sequences(big, "id", "n_tok", budget=2048, buckets=2).collect()
     assert len(got) == 3 and all(r["pack_tokens"] == 5000 for r in got)
     assert len({r["pack_id"] for r in got}) == 3
-
-
-def test_textclean_scrubbers(spark):
-    from trial_submission_studio_spark.operators.textclean import (
-        normalize_unicode,
-        scrub_pii,
-        strip_control_chars,
-        strip_html,
-    )
-
-    df = values_df(
-        spark,
-        [
-            (1, "see https://example.com/a?b=1 or www.foo.org/x now"),
-            (2, "mail me at john.doe+spam@example.co.uk please"),
-            (3, "call +1 (555) 123-4567 or 020 7946 0958 today"),
-            (4, "server 192.168.1.100 responded"),
-            (5, "born 2024-01-15 with 42 apples"),  # date + int survive
-            (6, "<p>Hello <b>world</b></p>"),
-        ],
-        "id bigint, text string",
-    )
-    got = {r["id"]: r["t"] for r in df.select("id", scrub_pii("text").alias("t")).collect()}
-    assert got[1] == "see <|url|> or <|url|> now"
-    assert got[2] == "mail me at <|email|> please"
-    assert got[3] == "call <|phone|> or <|phone|> today"
-    assert got[4] == "server <|ip|> responded"
-    assert got[5] == "born 2024-01-15 with 42 apples"
-
-    html = df.filter("id = 6").select(strip_html("text").alias("t")).first()["t"]
-    assert html == "Hello world"
-
-    ctl = values_df(spark, [("a\x00b\tc",)], "text string")
-    assert ctl.select(strip_control_chars("text").alias("t")).first()["t"] == "ab\tc"
-
-    # NFC: decomposed e + combining acute composes to é
-    nfd = values_df(spark, [("café",)], "text string")
-    out = nfd.select(normalize_unicode("text").alias("t")).first()["t"]
-    assert out == "café" and len(out) == 4
 
 
 def test_dedup_near_end_to_end(spark):
@@ -713,27 +649,6 @@ def test_supp_pivot_back_roundtrip(spark):
     assert got[("S1", "1")] == ("alpha", "high")
     assert got[("S1", "2")] == ("beta", None)   # blank PRIO never unpivoted
     assert got[("S2", "1")] == (None, "low")
-
-
-def test_fix_mojibake_repairs_and_preserves(spark):
-    from trial_submission_studio_spark.operators.textclean import fix_mojibake
-
-    single = "café déjà vu".encode("utf-8").decode("cp1252")
-    double = single.encode("utf-8").decode("cp1252")
-    df = spark.createDataFrame(
-        [
-            (1, single), (2, double), (3, "café déjà vu"),
-            (4, "plain ascii"), (5, "中文本身不受影响"), (6, None),
-            (7, "naïve € — already clean"),
-        ],
-        "id long, t string",
-    )
-    got = {r["id"]: r["o"] for r in df.select("id", fix_mojibake("t").alias("o")).collect()}
-    assert got[1] == got[2] == got[3] == "café déjà vu"
-    assert got[4] == "plain ascii"
-    assert got[5] == "中文本身不受影响"
-    assert got[6] is None
-    assert got[7] == "naïve € — already clean"
 
 
 def test_numeric_profile_exact_and_approx(spark):

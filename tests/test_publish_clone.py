@@ -110,29 +110,28 @@ def test_dv_rekey_roundtrip_through_publish(spark, tmp_path):
     assert sum(e["rows"] for e in dv_map(m).values()) == 2
 
 
-def test_change_feed_across_publish_sees_only_branch_deletes(
-    spark, tmp_path
-):
+def test_publish_appends_to_fork_era_sidecars(spark, tmp_path):
     """The landed dv state APPENDS to the source's fork-era sidecars
-    (never replaces them), so the source's change feed across the
-    publish commit shows exactly the branch's deletes — no phantom
-    resurrection+re-delete of rows that were already dead at fork."""
-    from trial_submission_studio_spark.io.changefeed import change_feed
-
+    (never replaces them): each fork-era sidecar list is a prefix of
+    the published one, and the tombstone count grows by exactly the
+    branch's deletes — no re-delete of rows already dead at fork."""
     src = _make_src(spark, tmp_path, n=40, n_files=2)
     delete_matching_dv(
         spark, src, _kv(spark, [(3, 0), (4, 0)]).select("k"), "k"
     )
-    pre = current_version(src)
+    pre = dv_map(read_manifest(src))
     clone = str(tmp_path / "c")
     shallow_clone(src, clone, spark=spark)
     delete_matching_dv(spark, clone, _kv(spark, [(7, 0)]).select("k"), "k")
-    m = publish_clone(spark, clone)
-    feed = {
-        (r.k, r._change)
-        for r in change_feed(spark, src, pre, m["version"], "k").collect()
+    post = dv_map(publish_clone(spark, clone))
+    assert pre
+    for f, e in pre.items():
+        assert post[f]["sidecars"][: len(e["sidecars"])] == e["sidecars"]
+        assert len(post[f]["sidecars"]) == len(e["sidecars"]) + 1
+    assert sum(e["rows"] for e in post.values()) == 3
+    assert _snap(spark, src) == {
+        (k, k) for k in range(40) if k not in (3, 4, 7)
     }
-    assert feed == {(7, "delete")}
 
 
 def test_metadata_only_branch_lands_contract_changes(spark, tmp_path):

@@ -53,3 +53,21 @@ def test_closure_follows_module_function_and_relative_imports(tmp_path, capsys):
     assert "reached: 6/7 modules, 5/9 lines" in out
     assert "unreached: 1/7 modules, 4/9 lines" in out
     assert "       4  pkg.dead" in out
+
+
+def test_repo_unreached_modules_are_the_known_five():
+    """Dead-code guard over the real repository: a new package module
+    that no contract query, bench stage or lifecycle path imports, or
+    a re-export barrel that hides one, changes this set."""
+    repo = reachability.REPO
+    roots = sorted(
+        {p for pat in reachability.DEFAULT_ROOTS for p in repo.glob(pat)}
+    )
+    rep = reachability.report(roots, repo / reachability.PACKAGE, repo)
+    assert {name for name, _ in rep["unreached"]} == {
+        "trial_submission_studio_spark.streaming.ingest",
+        "trial_submission_studio_spark.operators.urls",
+        "trial_submission_studio_spark.streaming.asof",
+        "trial_submission_studio_spark.operators.chunking",
+        "trial_submission_studio_spark.operators.planaudit",
+    }

@@ -272,11 +272,11 @@ def test_fetch_schedule_politeness(spark):
     }
 
 
-def test_crawl_governance_end_to_end(spark, tmp_path):
-    """WARC → robots rules → permission join → politeness schedule:
-    the whole governance chain over one synthetic crawl. Pages from
-    a disallowed path are excluded before scheduling; the rest get
-    per-host fetch waves honoring Crawl-delay."""
+def test_crawl_governance_end_to_end(spark):
+    """Crawl records → robots rules → permission join → politeness
+    schedule: the whole governance chain over one synthetic crawl.
+    Pages from a disallowed path are excluded before scheduling; the
+    rest get per-host fetch waves honoring Crawl-delay."""
     from pyspark.sql import functions as F
 
     from trial_submission_studio_spark.operators.robots import (
@@ -284,34 +284,18 @@ def test_crawl_governance_end_to_end(spark, tmp_path):
         robots_allowed,
         robots_rules,
     )
-    from trial_submission_studio_spark.sources.warc import read_warc
 
-    def record(rtype, rid, uri, payload):
-        head = (
-            b"WARC/1.0\r\n"
-            b"WARC-Type: " + rtype + b"\r\n"
-            b"WARC-Record-ID: <urn:uuid:" + rid + b">\r\n"
-            b"WARC-Date: 2024-05-06T07:08:09Z\r\n"
-            b"WARC-Target-URI: " + uri + b"\r\n"
-            b"Content-Length: " + str(len(payload)).encode() + b"\r\n\r\n"
-        )
-        return head + payload + b"\r\n\r\n"
-
-    def http(body, ctype=b"text/plain"):
-        return (
-            b"HTTP/1.1 200 OK\r\nContent-Type: " + ctype + b"\r\n\r\n" + body
-        )
-
-    robots_body = b"User-agent: *\nDisallow: /private/\nCrawl-delay: 2\n"
-    warc = (
-        record(b"response", b"r1", b"http://site-a.test/robots.txt", http(robots_body))
-        + record(b"response", b"p1", b"http://site-a.test/ok1", http(b"ok"))
-        + record(b"response", b"p2", b"http://site-a.test/ok2", http(b"ok"))
-        + record(b"response", b"p3", b"http://site-a.test/private/x", http(b"no"))
-        + record(b"response", b"p4", b"http://site-b.test/free", http(b"ok"))
+    robots_body = "User-agent: *\nDisallow: /private/\nCrawl-delay: 2\n"
+    records = spark.createDataFrame(
+        [
+            ("http://site-a.test/robots.txt", robots_body),
+            ("http://site-a.test/ok1", "ok"),
+            ("http://site-a.test/ok2", "ok"),
+            ("http://site-a.test/private/x", "no"),
+            ("http://site-b.test/free", "ok"),
+        ],
+        "url string, text string",
     )
-    (tmp_path / "crawl.warc").write_bytes(warc)
-    records = read_warc(spark, str(tmp_path))
 
     host = F.lower(F.try_parse_url(F.col("url"), F.lit("HOST")))
     robots_pages = records.filter(

@@ -5,7 +5,6 @@ import os
 
 import pytest
 
-from trial_submission_studio_spark.io.corpus_shards import write_corpus_shards
 from trial_submission_studio_spark.io.versioned import (
     current_version,
     list_versions,
@@ -144,23 +143,6 @@ def test_streaming_ingest_publishes_snapshots(spark, tmp_path):
     assert {r.doc_id for r in read_version(spark, corpus, version=v1).collect()} == {1, 2}
     # discovery-based read still works and ignores _versions
     assert {r.doc_id for r in spark.read.parquet(corpus).collect()} == {1, 2, 4}
-
-
-def test_composes_with_corpus_shards(spark, tmp_path):
-    """The intended pairing: shard-write into a fresh run dir, then
-    publish; the snapshot read equals the sharded write."""
-    root = str(tmp_path / "corpus")
-    os.makedirs(root)
-    src = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").select(
-        "doc_id", "text"
-    )
-    d = new_data_dir(root)
-    manifest_df = write_corpus_shards(src, d, "doc_id", n_shards=4)
-    assert manifest_df.count() == 4
-    publish_version(root, d, metadata={"n_shards": 4})
-    back = read_version(spark, root)
-    assert back.count() == src.count()
-    assert set(back.columns) >= {"doc_id", "text"}
 
 
 def test_diff_versions(spark, tmp_path):

@@ -26,8 +26,6 @@ Layers (mirrors the reference's crate split — SURVEY.md §7):
                                               (≙ tss-submit + extensions)
 - :mod:`~trial_submission_studio_spark.streaming` — Structured
   Streaming ingest/aggregation (extension; reference is batch-only)
-- :mod:`~trial_submission_studio_spark.corpus`    — composed
-  pretraining-corpus pipeline over the operator families (extension)
 """
 
 __version__ = "0.1.0"

@@ -6,7 +6,7 @@ The workflow this enables (Iceberg's branch + fast-forward, Delta's
 clone-then-merge): fork a zero-copy dev branch of a production table,
 run the risky operation there (a backfill, a new dedup pass, a
 retention delete), audit the branch (CHECK constraints, row counts,
-`release.py`-style stage gates), then land the WHOLE branch on the
+stage gates), then land the WHOLE branch on the
 source as ONE atomic commit — or walk away and the source never saw
 a thing.
 
@@ -209,7 +209,7 @@ def publish_clone(
         # source keys, APPENDING to the source's fork-era sidecars
         # rather than replacing them — sidecar lists are append-only
         # per file until a rewrite folds them, and the change feed's
-        # dv delta (io/changefeed.py) depends on that: a wholesale
+        # dv delta depends on that: a wholesale
         # sidecar swap would read as a rollback-resurrection plus a
         # re-delete of every long-dead row.
         v1m, _info = _fork_info(clone_root)

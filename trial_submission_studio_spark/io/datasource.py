@@ -30,8 +30,8 @@ then mask; plain files let pyarrow skip row groups. Every pushed
 filter is also RETURNED to Spark for re-evaluation, so pruning can
 only cost speed, never rows — the module-wide discipline.
 
-Streaming semantics (the CDC-out dual of `streaming/cdc.py`'s
-CDC-in): offsets are ``{"version": N}``; each micro-batch is the
+Streaming semantics (the format's CDC-out side): offsets are
+``{"version": N}``; each micro-batch is the
 RETRACT STREAM of commits ``(start, end]`` — live rows of removed
 files and newly-tombstoned rows emit ``_change="delete"``, live rows
 of added files and dv-rollback resurrections emit
@@ -1469,15 +1469,14 @@ class _TssStreamWriter(DataSourceStreamArrowWriter):
     ``metadata.stream_sink = {run_id, batch_id}``; on the at-least-
     once replay Structured Streaming guarantees, a batch id at or
     below the newest recorded one for this run COMMITS NOTHING (the
-    replayed task files stay unreferenced and age out via vacuum) —
-    the same batch-id fencing discipline as `streaming/cdc.py`, at
-    the sink layer. Everything here is stdlib+pyarrow self-contained:
+    replayed task files stay unreferenced and age out via vacuum).
+    Everything here is stdlib+pyarrow self-contained:
     the streaming sink runner worker carries no pyFiles.
 
     Refusals at start (loud, with the right alternative): non-append
     output modes, CHECK-constraint tables (no SparkSession to
     enforce), layout-spec'd tables (plain task files would break
-    their pruning — use the CDC/foreachBatch route)."""
+    their pruning — use foreachBatch with merge_version)."""
 
     def __init__(self, options, schema, overwrite):
         import uuid
@@ -1486,7 +1485,7 @@ class _TssStreamWriter(DataSourceStreamArrowWriter):
             raise ValueError(
                 "tss streaming sink is append-only; complete/update "
                 "output modes need an aggregate-aware sink — use "
-                "foreachBatch with merge_version/refresh_rollup"
+                "foreachBatch with merge_version"
             )
         self._root = options["root"]
         self._schema = schema
@@ -1499,15 +1498,15 @@ class _TssStreamWriter(DataSourceStreamArrowWriter):
             if m.get("constraints"):
                 raise ValueError(
                     "table has CHECK constraints; the streaming sink "
-                    "cannot enforce them — use the foreachBatch CDC "
-                    "route (streaming/cdc.py) instead"
+                    "cannot enforce them — use foreachBatch with "
+                    "merge_version instead"
                 )
             md = m["metadata"]
             if md.get("bucket_spec") or md.get("partition_spec"):
                 raise ValueError(
                     "table carries a layout contract; plain task files "
-                    "would break its pruning — use the foreachBatch "
-                    "CDC route with append_bucketed/append_partitioned"
+                    "would break its pruning — use foreachBatch with "
+                    "append_bucketed/append_partitioned"
                 )
         # one immutable run dir per query run; files are uuid-named
         # so replayed tasks can never collide

@@ -27,9 +27,8 @@ FILE list first, and only the surviving files' sidecars are loaded.
 
 The debt is repaid at rewrite time, exactly like an LSM: any commit
 that rewrites a file (CoW merge/delete, compaction, OPTIMIZE)
-materializes the survivors and DROPS the file's DV entries — the
-same seq-stamped-tombstone rule `operators/ann_store.py` uses, at
-file grain. ``io/versioned.py:compact_version(include_dv_files=True)``
+materializes the survivors and DROPS the file's DV entries.
+``io/versioned.py:compact_version(include_dv_files=True)``
 folds tombstone-heavy files eagerly.
 
 Reference parity note: the reference's persistence layer
@@ -88,18 +87,16 @@ def dv_rows(manifest: dict, rel_files: list[str] | None = None) -> int:
 def rel_path_col(root: str, *, allow_external: bool = False) -> Column:
     """The MANIFEST-ENTRY key of a scanned row's source file,
     extracted from ``_metadata.file_path`` by position with column
-    functions (the `io/rollup.py` pattern — never
-    string-interpolated SQL). Files under ``root`` key by their
-    root-relative path. ``allow_external`` (set when the manifest
-    actually holds absolute entries — shallow clones,
+    functions (never string-interpolated SQL). Files under ``root``
+    key by their root-relative path. ``allow_external`` (set when the
+    manifest actually holds absolute entries — shallow clones,
     `versioned.shallow_clone`) keys outside-root files by the
     scheme-stripped absolute path, which is exactly how the clone's
     manifest names them; WITHOUT it a non-matching path FAILS LOUDLY
-    — a silently mis-keyed row would drop from partial tags or dodge
-    its tombstones. Both sides of every (file, position) comparison
-    — sidecar writes, anti-joins, manifest dv maps, rollup partial
-    tags — go through this one function, so the keying is consistent
-    by construction."""
+    — a silently mis-keyed row would dodge its tombstones. Both sides
+    of every (file, position) comparison — sidecar writes, anti-joins,
+    manifest dv maps — go through this one function, so the keying is
+    consistent by construction."""
     marker = os.path.abspath(root) + "/"
     path = F.col("_metadata.file_path")
     # strip the URI scheme first ("file:/abs", "file:///abs" ->

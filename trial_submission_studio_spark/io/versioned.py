@@ -51,8 +51,8 @@ Protocol:
 - :func:`vacuum` deletes data files no surviving manifest references
   (run after retiring old versions with ``keep_latest``).
 
-Pairs with `io/corpus_shards.py` (write shards into a fresh
-``data/<run-id>`` dir, then publish) and with the incremental-dedup
+Writers put shards into a fresh ``data/<run-id>`` dir
+(:func:`new_data_dir`), then publish. Pairs with the incremental-dedup
 ingest (each accepted batch = one new version; replaying a batch
 re-publishes the same file list, which is idempotent by content).
 """
@@ -557,8 +557,8 @@ def _fresh_run_id() -> str:
 
 def new_data_dir(root: str) -> str:
     """A fresh immutable data directory for one write run. Writers
-    target this (e.g. ``write_corpus_shards(df, new_data_dir(root),
-    ...)``) so no run ever overwrites another's files."""
+    target this (e.g. ``df.write.parquet(new_data_dir(root))``) so
+    no run ever overwrites another's files."""
     d = os.path.join(root, "data", _fresh_run_id())
     os.makedirs(d, exist_ok=False)
     return d
@@ -1922,10 +1922,6 @@ def table_history(root: str, *, limit: int | None = None) -> list[dict]:
             op = "clone"
         elif "set_constraints" in md:
             op = "set_constraints"
-        elif "rollup" in md:
-            op = "rollup_refresh"
-        elif "cdc" in md:
-            op = "cdc"
         else:
             op = "write"
         out.append({
@@ -2050,7 +2046,7 @@ def _diff_raw(root: str, raw_a: dict, raw_b: dict) -> dict:
     Returns ``{"added", "removed", "dv_changed"`` (sorted file
     lists) ``, "dv_from", "dv_to"}`` — the dv maps carry entries for
     exactly the added/removed/dv_changed files, which is everything
-    the change feed and `io/changefeed.py` need."""
+    the change feed needs."""
     shared: set = set()
     if "segments" in raw_a and "segments" in raw_b:
         shared = set(raw_a["segments"]) & set(raw_b["segments"])
@@ -2098,7 +2094,7 @@ def diff_versions(root: str, v_from: int, v_to: int) -> dict:
     removed file lists, net file-count delta, and the files whose
     deletion-vector state changed (a merge-on-read delete commit is
     INVISIBLE at file grain — ``dv_changed`` is how the audit sees
-    it; `io/changefeed.py` gives the row-level answer). The
+    it). The
     operational answer to "what did last night's ingest actually
     publish?". Segment-aware: on a segmented store only the segments
     the two versions do NOT share are loaded (`_diff_raw`), so the
@@ -2621,68 +2617,3 @@ def maintain_table(
     return out
 
 
-def vacuum_tables(
-    root: str,
-    tables: tuple[str, ...],
-    *,
-    min_age_seconds: float = VACUUM_MIN_AGE_SECONDS,
-    dry_run: bool = False,
-) -> list[str]:
-    """:func:`vacuum` for stores whose data lives under named table
-    trees (``<table>/run=<id>/...``) instead of ``data/`` — the
-    layout the persisted BM25 and IVF indexes use. Same protocol:
-    delete files no surviving manifest references, never touch
-    anything younger than ``min_age_seconds`` (an in-flight writer's
-    run is unreferenced ON PURPOSE until its manifest swap), sweep
-    run dirs that end up fully dead. Refuses to run on a root with
-    no manifest at all (nothing would be 'live'). Returns the
-    root-relative deleted (or, with ``dry_run``, deletable) paths.
-    """
-    import shutil
-
-    live: set[str] = set()
-    for v in list_versions(root):
-        live.update(read_manifest(root, v)["files"])
-    if not live:
-        raise ValueError(
-            f"{root} has no published manifest - refusing to vacuum"
-        )
-    cutoff = time.time() - min_age_seconds
-    doomed: list[str] = []
-    young_runs: set[str] = set()
-    for table in tables:
-        troot = os.path.join(root, table)
-        if not os.path.isdir(troot):
-            continue
-        for cur, _dirs, names in os.walk(troot):
-            for n in names:
-                if n.startswith((".", "_")):
-                    continue
-                full = os.path.join(cur, n)
-                rel = os.path.relpath(full, root)
-                if rel in live:
-                    continue
-                parts = rel.split(os.sep)
-                run_key = os.sep.join(parts[:2])  # "<table>/run=<id>"
-                if os.path.getmtime(full) > cutoff:
-                    young_runs.add(run_key)
-                    continue
-                doomed.append(rel)
-    if not dry_run:
-        for rel in doomed:
-            os.remove(os.path.join(root, rel))
-        for table in tables:
-            troot = os.path.join(root, table)
-            if not os.path.isdir(troot):
-                continue
-            for run in os.listdir(troot):
-                if not run.startswith("run="):
-                    continue
-                key = os.path.join(table, run)
-                prefix = key + os.sep
-                if key in young_runs or any(
-                    f.startswith(prefix) for f in live
-                ):
-                    continue
-                shutil.rmtree(os.path.join(troot, run))
-    return sorted(doomed)

@@ -1,36 +1,1 @@
-from trial_submission_studio_spark.operators.normalize import (  # noqa: F401
-    NormalizationContext,
-    Rule,
-    compile_pipeline,
-)
-from trial_submission_studio_spark.operators.sequence import add_sequence_number  # noqa: F401
-from trial_submission_studio_spark.operators.ct_lookup import apply_ct_normalization  # noqa: F401
-from trial_submission_studio_spark.operators.codelist_decode import apply_codelist_decode  # noqa: F401
-from trial_submission_studio_spark.operators.reshape import (  # noqa: F401
-    reciprocal_augment,
-    supp_unpivot,
-)
-from trial_submission_studio_spark.operators.bpe import (  # noqa: F401
-    bpe_token_count,
-    bpe_tokens,
-    train_bpe,
-)
-from trial_submission_studio_spark.operators.qualitymodel import (  # noqa: F401
-    score_quality_model,
-    train_quality_model,
-    weak_quality_labels,
-)
-from trial_submission_studio_spark.operators.urls import (  # noqa: F401
-    PslRules,
-    domain_blocklist_filter,
-    load_psl,
-    normalize_url,
-    url_dedup,
-    url_registered_domain,
-)
-from trial_submission_studio_spark.operators.chunking import (  # noqa: F401
-    chunk_documents,
-)
-from trial_submission_studio_spark.operators.graph import (  # noqa: F401
-    pagerank,
-)
+"""Plan compiler, profiling, validation, dedup and text operators."""

@@ -25,8 +25,7 @@ Spark-first shape:
   combine in the sum — the classic reason PageRank fits
   shuffle-reduce engines.
 
-Pairs with `sources/warc.py` + `textclean.html_links` (page → hrefs)
-and `urls.url_registered_domain` (page graph → domain graph). The
+Pairs with `urls.url_registered_domain` (page graph → domain graph). The
 reference engine has no graph surface; this belongs to the
 training-data extension family (SURVEY.md §2.13).
 """

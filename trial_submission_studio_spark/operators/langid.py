@@ -166,8 +166,8 @@ def classify_language_rowlocal(
     """Adds ``out_col`` (and ``<out_col>_score``) per ROW — the
     streaming-safe twin of :func:`classify_language`: no explode, no
     per-doc aggregation, so it composes into stateless Structured
-    Streaming pipelines (`streaming/corpus.py`) and any other place a
-    join-back by id is unavailable.
+    Streaming pipelines and any other place a join-back by id is
+    unavailable.
 
     Semantics match :func:`classify_language` for ASCII-normalizable
     text: same padded-lowercase normalization, same mixed 1..n gram

@@ -52,9 +52,9 @@ def kept_lines(
 ) -> Column:
     """Array-of-surviving-lines EXPRESSION (trimmed, blank lines
     dropped, C4 rules applied) — the projection-only form that
-    :func:`line_quality_filter` aggregates and that the streaming
-    twin (`streaming/corpus.py`) rebuilds text from without a join
-    (two branches of one stream cannot re-join statelessly)."""
+    :func:`line_quality_filter` aggregates and that a streaming
+    pipeline can rebuild text from without a join (two branches of
+    one stream cannot re-join statelessly)."""
     lines = F.filter(
         F.transform(
             F.split(F.coalesce(_c(text_col).cast("string"), F.lit("")), "\n"),
@@ -88,9 +88,7 @@ def line_quality_filter(
 
     Blocklist matching is case-insensitive substring (C4 matches its
     badword list the same way). Rules are pure expressions, so the
-    operator composes with
-    :func:`~trial_submission_studio_spark.operators.textclean.scrub_pii`
-    and the textstats family in a single pass.
+    operator composes with the textstats family in a single pass.
     """
     if min_words < 0:
         raise ValueError("min_words must be >= 0")

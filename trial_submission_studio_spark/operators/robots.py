@@ -3,9 +3,8 @@ governance for WARC-scale corpora.
 
 A training-data pipeline that ingests crawl data needs to answer
 "was this fetch allowed, and would a refetch be allowed today?" per
-URL. This module parses robots.txt payloads (one per origin host,
-e.g. straight out of the WARC source in `sources/warc.py`) into a
-RULES TABLE, then evaluates the RFC's longest-match semantics as a
+URL. This module parses robots.txt payloads (one per origin host)
+into a RULES TABLE, then evaluates the RFC's longest-match semantics as a
 plain equi-join — no UDF in the match path:
 
 - group selection: the group whose user-agent token is the longest

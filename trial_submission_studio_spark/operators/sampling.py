@@ -365,8 +365,8 @@ def shuffle_deterministic(df: DataFrame, key_col: str, seed: int = 0) -> DataFra
     Scale shape: one range-partitioned global sort (sampled range
     boundaries keep partitions balanced because the hash is uniform —
     no skew by construction). When only shard-LOCAL order matters,
-    prefer ``write_corpus_shards(..., shuffle_seed=...)`` which gets
-    the same property via sortWithinPartitions at zero extra shuffle.
+    ``sortWithinPartitions`` on the same hash gets the property at
+    zero extra shuffle.
     """
     return df.orderBy(
         F.xxhash64(F.col(key_col), F.lit(int(seed))).asc(), F.col(key_col).asc()

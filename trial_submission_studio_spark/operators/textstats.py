@@ -268,8 +268,7 @@ def quality_score(c: Column | str) -> Column:
 
 def _make_compression_ratio_udf(level: int):
     """Arrow-batched zlib compression ratio (closure factory — the
-    worker cannot import this package; see textclean's NFC udf for
-    the pattern)."""
+    worker cannot import this package)."""
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
 

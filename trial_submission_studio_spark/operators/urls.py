@@ -9,8 +9,7 @@ first gate over a 100 TB crawl scan.
 
 Reference parity note: the reference engine
 (rubentalstra/Trial-Submission-Studio) has no web layer; this module
-belongs to the training-data extension surface (SURVEY.md §2.13),
-pairing with `sources/warc.py`.
+belongs to the training-data extension surface (SURVEY.md §2.13).
 """
 
 from __future__ import annotations

@@ -37,7 +37,7 @@ Everything here is built-in Spark machinery configured the way a
 - **Compression layout = parallelism.** ``.jsonl`` splits by block
   (many tasks per file); ``.jsonl.gz`` is one task per file — fine
   when the corpus ships as many ~100 MB-1 GB members (the
-  CommonCrawl story, see `sources/warc.py`), pathological as one
+  CommonCrawl story), pathological as one
   10 TB member. :func:`write_jsonl` defaults to gzip with an
   explicit shard count so what this engine emits is always
   re-ingestable in parallel.

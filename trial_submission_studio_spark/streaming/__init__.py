@@ -1,10 +1,1 @@
-from trial_submission_studio_spark.streaming.asof import (  # noqa: F401
-    streaming_asof_join,
-)
-from trial_submission_studio_spark.streaming.events import (  # noqa: F401
-    tumbling_window_counts,
-    stream_events,
-)
-from trial_submission_studio_spark.streaming.ingest import (  # noqa: F401
-    start_dedup_ingest,
-)
+"""Structured Streaming ingest, windowed aggregation and as-of joins."""
