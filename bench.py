@@ -314,26 +314,11 @@ def main() -> None:
     EXTRA_QUERIES = (
         "paragraph_dedup_docs",
         "semantic_dedup_gate",
-        "source_quota_cap",
         "contamination_ngram_overlap",
         "quality_line_filter",
-        "corpus_mix_weighted",
         "substring_removal_docs",
-        # trainable stages (bench-only callables, not contract slots);
-        # train and score split so the iterative L-BFGS fit isn't read
-        # as a per-query data-plane cost (train populates the model
-        # memo the score key then reuses)
-        "bpe_train_encode",
-        "quality_model_train",
-        "quality_model_score",
         # mergeable-sketch governance (HLL/Theta/KLL, contract gate)
         "sketch_distinct_gates",
-        # iterative link-graph authority (bench-only callable)
-        "pagerank_domains",
-        # round-8 additions (bench-only callables)
-        "bloom_dedup_bench",
-        "bm25_retrieval_bench",
-        "dsir_select_bench",
         # round-9 additions
         "pii_redaction_gates",
         "lm_bigram_scores",
@@ -341,7 +326,6 @@ def main() -> None:
         "phrase_mining_gates",
         "crosssource_overlap_gates",
         "unigram_encode_docs",
-        "hits_bench",
         # round-10 second-half additions: the extended family gates
         # (k-anonymity rides pii_redaction_gates; record linkage rides
         # dedup_group_resolution; funnel+retention ride
@@ -352,32 +336,11 @@ def main() -> None:
         "events_stream_gates",
         "incremental_dedup_docs",
         "v_domain_check_gates",
-        # zone-map data skipping (io/zonemap.py): pruned vs full scan
-        # of the same ts-clustered versioned snapshot — the pair's
-        # delta is the measured manifest-level skipping win. Snapshot
-        # builds are memoized per sf_dir; the build lands in the
-        # first of the 3 timed runs and the median drops it.
-        "zonemap_scan_full",
-        "zonemap_scan_pruned",
         # round-13: the delete pair (copy-on-write vs merge-on-read
         # deletion vectors — same scattered 500-key erasure, the
         # delta is the measured write-amplification win)
         "table_delete_cow",
         "table_delete_dv",
-        # retention TTL: whole-file drops by zone-map proof
-        "table_retention_bench",
-        # round-14: directory-grain retention on a Hive-partitioned
-        # snapshot (zero footer stats, zero files scanned) and the
-        # WAP branch lifecycle (fork -> branch dv-delete -> publish)
-        "table_retention_partitioned_bench",
-        "table_branch_publish_bench",
-        # round-15: O(delta) commit metadata on a many-file segmented
-        # manifest store (the 100 TB metadata-plane claim, measured)
-        "table_manifest_segment_bench",
-        # round-16: O(delta) version DIFFING on the same store — the
-        # change feed's per-trigger planning cost; asserts the
-        # shared-segment skip engages (segments_loaded < total)
-        "table_version_diff_bench",
     )
     # LLM-pipeline extras that ALSO run in the 10× scale sweep — these
     # carry the 100 TB design claims, so their curvature is measured,
@@ -388,16 +351,11 @@ def main() -> None:
         "substring_removal_docs",
         "contamination_ngram_overlap",
         "lm_bigram_scores",
-        "bloom_dedup_bench",
-        "bm25_retrieval_bench",
-        "dsir_select_bench",
-        "pagerank_domains",
         # round-10 additions (r9 verdict task #7)
         "pii_redaction_gates",
         "phrase_mining_gates",
         "crosssource_overlap_gates",
         "unigram_encode_docs",
-        "hits_bench",
         # round-10 second-half: extended family gates (see
         # EXTRA_QUERIES note). dedup_group_resolution is deliberately
         # NOT swept: its record-linkage block keys are fixed
@@ -409,32 +367,11 @@ def main() -> None:
         "events_stream_gates",
         "incremental_dedup_docs",
         "v_domain_check_gates",
-        # round-12 (r11 verdict task 5): table format. Expected
-        # curvature: pruned scan ~flat (fixed one-day window; replicas
-        # extend the time axis) vs full scan ~10x
-        "zonemap_scan_full",
-        "zonemap_scan_pruned",
         # round-13: expected curvature — cow erasure ~10x (rewrites
         # every touched file; file count grows with data), dv erasure
-        # ~flat (O(k) sidecar regardless of table size), retention
-        # ~flat (cost tracks the expired day's files, not table size
-        # — the sf1 replicas extend the time axis so a day stays a
-        # constant slice)
+        # ~flat (O(k) sidecar regardless of table size)
         "table_delete_cow",
         "table_delete_dv",
-        "table_retention_bench",
-        # round-14: expected curvature — partitioned retention ~flat
-        # (directory-grain metadata; a day is a constant slice),
-        # branch publish ~flat (fork is one manifest, the dv delta is
-        # O(k), the landing is one commit)
-        "table_retention_partitioned_bench",
-        "table_branch_publish_bench",
-        # round-15: expected curvature — ~flat commit latency/bytes
-        # on a 10x-file table (segments reused; one delta segment)
-        "table_manifest_segment_bench",
-        # round-16: expected curvature — ~flat diff latency at 10x
-        # files (only unshared segments load)
-        "table_version_diff_bench",
     )
     # any extra that crashes is recorded here, so a metric can never
     # SILENTLY vanish from the artifact (the r16 review caught the
@@ -593,23 +530,6 @@ def main() -> None:
             " partitions, noop sink, 1 warmup + median-of-5",
         },
         "value_over_control": round(total / control_median, 1),
-        # per-query explanations for spreads that persistently exceed
-        # 2x max/min (r15 verdict task 4): these are measured
-        # properties of the workload shape, not regressions — each is
-        # dominated by a first-run cold effect its own median
-        # discards, and the min column is the steady-state number
-        "spread_notes": {
-            "zonemap_scan_full": "deliberately-cold full scan (the"
-            " control arm of the pruned/full pair); run 1 pays page-"
-            "cache population for every file, later runs are warm —"
-            " compare MEDIANS of the pair for the skipping win",
-            "table_retention_partitioned_bench": "directory-grain"
-            " drops: each run expires a DIFFERENT day partition, so"
-            " run-to-run variance tracks that day's file count +"
-            " dentry-cache state, not code",
-            "table_retention_bench": "same shape at file grain —"
-            " per-run workload is a different expired day",
-        },
         "sf": sf_val,
         # r12: repeats raised after the r11 A/A test proved best-of-2
         # resolves worse than the effects it measures (±30% swings on

@@ -54,9 +54,6 @@ SLOW_TESTS = frozenset(
         ("test_bm25.py", "test_compact_bm25_index_folds_increments"),
         ("test_bm25.py", "test_concurrent_reader_isolated_from_append"),
         ("test_bm25.py", "test_vacuum_reclaims_crashed_append_orphans"),
-        ("test_bpe.py", "test_bpe_encode_lossless_over_random_unicode"),
-        ("test_bpe.py", "test_bpe_encode_partition_invariant_and_counts"),
-        ("test_bpe.py", "test_bpe_token_ids_and_packing_composition"),
         ("test_bucketed_table.py", "test_catalog_bridge_delivers_exchange_free_join"),
         ("test_bucketed_table.py", "test_compaction_preserves_bucket_layout"),
         ("test_bucketed_table.py", "test_merge_preserves_layout_and_prunes_planning"),
@@ -76,10 +73,6 @@ SLOW_TESTS = frozenset(
         ("test_datasource.py", "test_writer_create_append_overwrite"),
         ("test_deletion_vectors.py", "test_merge_folds_dv_of_rewritten_files_and_carries_the_rest"),
         ("test_deletion_vectors.py", "test_repeated_dv_deletes_never_double_list"),
-        ("test_graph.py", "test_crawl_graph_composition"),
-        ("test_graph.py", "test_hits_tol_early_exit_converges"),
-        ("test_graph.py", "test_pagerank_convergence_early_exit"),
-        ("test_graph.py", "test_pagerank_tol_check_every_amortizes_probe"),
         ("test_lifecycle_integration.py", "test_merge_optimize_prune_cycle"),
         ("test_lifecycle_r13.py", "test_constrained_dv_maintenance_clone"),
         ("test_linkage.py", "test_property_similarity_bounds_and_identity"),
@@ -100,8 +93,6 @@ SLOW_TESTS = frozenset(
         ("test_review_r16.py", "test_evolved_column_stays_nullable_and_is_null_works"),
         ("test_shallow_clone.py", "test_clone_is_zero_copy_and_localizes_cow"),
         ("test_shallow_clone.py", "test_clone_of_bucketed_table_keeps_pruning"),
-        ("test_sources_streaming.py", "test_ingest_state_compaction_bounds_files_preserves_replay"),
-        ("test_sources_streaming.py", "test_ingest_state_compaction_near_mode"),
         ("test_table_model.py", "test_random_commit_sequences_match_dict_model"),
         ("test_table_schema.py", "test_check_constraints_enforced_at_commit"),
         ("test_temporal.py", "test_asof_join_sliced_equivalence"),

@@ -1,165 +1,11 @@
-"""BPE trainer/encoder: parity with a naive reference implementation,
-partition invariance, NULL semantics, detokenize contract."""
-
-from collections import Counter
-
-import pytest
+"""Shared pre-tokenizer: Java/Python regex parity and the word
+histogram the unigram tokenizer trains from."""
 
 from trial_submission_studio_spark.operators.bpe import (
-    END_OF_WORD,
     _PRETOKEN_RE,
-    bpe_token_count,
-    bpe_tokens,
-    bpe_vocab,
-    detokenize_bpe,
     pretokenize,
-    train_bpe,
     word_histogram,
 )
-
-import pyspark.sql.functions as F
-
-CORPUS = [
-    "the lower the newer the lowest",
-    "low lower lowest, newer newest!",
-    "a new low for the new lower bound",
-    "widely lower and widely newer bounds",
-    "the newest new lowest low",
-]
-
-
-def naive_train(texts, num_merges, lowercase=False):
-    """Recount-everything-per-iteration reference trainer with the
-    same (count desc, pair asc) tie-break."""
-    wc = Counter()
-    for t in texts:
-        for w in _PRETOKEN_RE.findall(t):
-            wc[w.lower() if lowercase else w] += 1
-    return naive_train_from_counts(wc, num_merges)
-
-
-def naive_train_from_counts(wc, num_merges):
-    words = {w: (list(w) + [END_OF_WORD], c) for w, c in wc.items()}
-    merges = []
-    for _ in range(num_merges):
-        pairs = Counter()
-        for syms, c in words.values():
-            for p in zip(syms, syms[1:]):
-                pairs[p] += c
-        if not pairs:
-            break
-        best = min(pairs.items(), key=lambda kv: (-kv[1], kv[0]))[0]
-        merges.append(best)
-        a, b = best
-        for w, (syms, c) in words.items():
-            new, j = [], 0
-            while j < len(syms):
-                if j < len(syms) - 1 and syms[j] == a and syms[j + 1] == b:
-                    new.append(a + b)
-                    j += 2
-                else:
-                    new.append(syms[j])
-                    j += 1
-            words[w] = (new, c)
-    return merges
-
-
-def _df(spark, texts=CORPUS):
-    return spark.createDataFrame([(i, t) for i, t in enumerate(texts)], "doc_id long, text string")
-
-
-def test_train_bpe_matches_naive_reference(spark):
-    df = _df(spark)
-    merges, stats = train_bpe(df, "text", num_merges=40)
-    assert merges == naive_train(CORPUS, 40)
-    assert stats["num_merges"] == len(merges) <= 40
-    assert stats["coverage"] == 1.0
-    assert stats["kept_words"] == stats["distinct_words"]
-
-
-def test_train_bpe_partition_invariant(spark):
-    df = _df(spark)
-    m1, _ = train_bpe(df.repartition(1), "text", num_merges=25)
-    m7, _ = train_bpe(df.repartition(7), "text", num_merges=25)
-    assert m1 == m7
-
-
-def test_bpe_tokens_reproduce_training_segmentation(spark):
-    """Greedy min-rank encoding must equal applying the merge list in
-    order — the property that makes train-time and encode-time
-    segmentations identical."""
-    df = _df(spark)
-    merges, _ = train_bpe(df, "text", num_merges=30)
-    got = {
-        r["text"]: r["toks"]
-        for r in df.select("text", bpe_tokens("text", merges).alias("toks")).collect()
-    }
-    for text in CORPUS:
-        expect = []
-        for w in _PRETOKEN_RE.findall(text):
-            syms = list(w) + [END_OF_WORD]
-            for a, b in merges:
-                new, j = [], 0
-                while j < len(syms):
-                    if j < len(syms) - 1 and syms[j] == a and syms[j + 1] == b:
-                        new.append(a + b)
-                        j += 2
-                    else:
-                        new.append(syms[j])
-                        j += 1
-                syms = new
-            expect.extend(syms)
-        assert got[text] == expect, text
-
-
-def test_bpe_encode_partition_invariant_and_counts(spark):
-    df = _df(spark)
-    merges, _ = train_bpe(df, "text", num_merges=30)
-    counts = lambda d: sorted(
-        tuple(r)
-        for r in d.select(
-            "doc_id", bpe_token_count("text", merges).alias("n")
-        ).collect()
-    )
-    c1, c7 = counts(df.repartition(1)), counts(df.repartition(7))
-    assert c1 == c7
-    assert all(n > 0 for _, n in c1)
-    # merges compress: learned tokenizer emits fewer tokens than chars
-    chars = {r["doc_id"]: r["nc"] for r in df.select(
-        "doc_id", F.length("text").alias("nc")).collect()}
-    assert all(n < chars[d] for d, n in c1)
-
-
-def test_bpe_null_and_blank_semantics(spark):
-    df = spark.createDataFrame(
-        [(1, None), (2, ""), (3, "   "), (4, "low")], "doc_id long, text string"
-    )
-    merges, _ = train_bpe(_df(spark), "text", num_merges=10)
-    out = {
-        r["doc_id"]: (r["toks"], r["n"])
-        for r in df.select(
-            "doc_id",
-            bpe_tokens("text", merges).alias("toks"),
-            bpe_token_count("text", merges).alias("n"),
-        ).collect()
-    }
-    assert out[1] == (None, None)
-    assert out[2] == ([], 0)
-    assert out[3] == ([], 0)
-    assert out[4][1] >= 1
-
-
-def test_detokenize_is_space_joined_pretokens(spark):
-    df = _df(spark)
-    merges, _ = train_bpe(df, "text", num_merges=30)
-    got = {
-        r["text"]: r["rt"]
-        for r in df.select(
-            "text", detokenize_bpe(bpe_tokens("text", merges)).alias("rt")
-        ).collect()
-    }
-    for text in CORPUS:
-        assert got[text] == " ".join(_PRETOKEN_RE.findall(text))
 
 
 def test_pretokenize_matches_python_regex_incl_nbsp(spark):
@@ -173,26 +19,6 @@ def test_pretokenize_matches_python_regex_incl_nbsp(spark):
         assert got[t] == _PRETOKEN_RE.findall(t), t
 
 
-def test_train_bpe_max_words_truncation_coverage(spark):
-    df = _df(spark)
-    merges, stats = train_bpe(df, "text", num_merges=10, max_words=5)
-    assert stats["kept_words"] == 5
-    assert 0.0 < stats["coverage"] < 1.0
-    assert len(merges) == 10
-    # truncated training still yields a usable encoder
-    n = df.select(bpe_token_count("text", merges).alias("n")).collect()
-    assert all(r["n"] > 0 for r in n)
-
-
-def test_bpe_vocab_deterministic_ids(spark):
-    merges, _ = train_bpe(_df(spark), "text", num_merges=20)
-    v1, v2 = bpe_vocab(merges), bpe_vocab(merges)
-    assert v1 == v2
-    assert len(set(v1.values())) == len(v1)
-    for a, b in merges:
-        assert a + b in v1
-
-
 def test_word_histogram_counts(spark):
     df = spark.createDataFrame([("low low Low",), ("low!",)], "text string")
     rows = {r["word"]: r["count"] for r in word_histogram(df, "text").collect()}
@@ -202,146 +28,3 @@ def test_word_histogram_counts(spark):
         for r in word_histogram(df, "text", lowercase=True).collect()
     }
     assert lowered == {"low": 4, "!": 1}
-
-
-# --- property tests (hypothesis) ----------------------------------------
-
-
-def test_learn_merges_matches_naive_on_random_histograms():
-    """Pure driver-side property: the incremental-pair-count trainer
-    equals the recount-per-iteration reference on arbitrary word
-    histograms (the incremental bookkeeping is the bug surface)."""
-    from hypothesis import given, settings, strategies as st
-
-    from trial_submission_studio_spark.operators.bpe import _learn_merges
-
-    entries = st.lists(
-        st.tuples(
-            st.text(alphabet="abcde", min_size=1, max_size=7),
-            st.integers(1, 9),
-        ),
-        min_size=1,
-        max_size=12,
-        unique_by=lambda t: t[0],
-    )
-
-    @settings(max_examples=60, deadline=None)
-    @given(entries, st.integers(0, 25))
-    def run(wc, n):
-        assert _learn_merges(list(wc), n) == naive_train_from_counts(dict(wc), n)
-
-    run()
-
-
-def test_bpe_encode_lossless_over_random_unicode(spark):
-    """Token streams are lossless re-segmentations: stripping the
-    end-of-word sentinel and concatenating reproduces exactly the
-    pre-token characters, for arbitrary unicode input."""
-    from hypothesis import given, settings, strategies as st
-
-    merges, _ = train_bpe(_df(spark), "text", num_merges=25)
-
-    texts = st.lists(
-        st.text(
-            alphabet=st.characters(
-                codec="utf-8", exclude_categories=("Cs",)
-            ),
-            max_size=60,
-        ),
-        min_size=1,
-        max_size=12,
-    )
-
-    @settings(max_examples=8, deadline=None)
-    @given(texts)
-    def run(vals):
-        df = spark.createDataFrame(
-            [(i, v) for i, v in enumerate(vals)], "doc_id long, text string"
-        )
-        got = {
-            r["doc_id"]: r["toks"]
-            for r in df.select(
-                "doc_id", bpe_tokens("text", merges).alias("toks")
-            ).collect()
-        }
-        for i, v in enumerate(vals):
-            toks = got[i]
-            joined = "".join(t.replace(END_OF_WORD, "") for t in toks)
-            assert joined == "".join(_PRETOKEN_RE.findall(v)), (v, toks)
-            # every word's tokens end with exactly one sentinel token run
-            assert sum(t.endswith(END_OF_WORD) or t == END_OF_WORD for t in toks) == len(
-                _PRETOKEN_RE.findall(v)
-            )
-
-    run()
-
-
-def test_bpe_token_ids_and_packing_composition(spark):
-    from trial_submission_studio_spark.operators.bpe import bpe_token_ids
-    from trial_submission_studio_spark.operators.sampling import pack_sequences
-
-    df = _df(spark)
-    merges, stats = train_bpe(df, "text", num_merges=30)
-    vocab = bpe_vocab(merges, alphabet=stats["alphabet"])
-    inv = {i: t for t, i in vocab.items()}
-    with_ids = df.select(
-        "doc_id",
-        bpe_tokens("text", merges).alias("toks"),
-        bpe_token_ids("text", merges, vocab=vocab).alias("ids"),
-    )
-    for r in with_ids.collect():
-        # ids decode back to the exact token stream (vocab covers the
-        # training corpus's alphabet, so no UNKs here)
-        assert [inv[i] for i in r["ids"]] == r["toks"]
-    # unknown characters map to unk_id
-    oov = spark.createDataFrame([(1, "низ")], "doc_id long, text string")
-    ids = oov.select(bpe_token_ids("text", merges, vocab=vocab, unk_id=-7).alias("i")).collect()[0]["i"]
-    # each non-ASCII char is its own pretoken: (unk, </w>) x 3
-    assert ids == [-7, vocab[END_OF_WORD]] * 3
-    # NULL semantics
-    nul = spark.createDataFrame([(1, None)], "doc_id long, text string")
-    assert nul.select(bpe_token_ids("text", merges).alias("i")).collect()[0]["i"] is None
-    # full path: text -> ids -> packed training sequences
-    counted = df.select(
-        "doc_id", F.size(bpe_token_ids("text", merges, vocab=vocab)).cast("long").alias("n_tok")
-    )
-    packs = pack_sequences(counted, "doc_id", "n_tok", budget=16, buckets=2)
-    rows = packs.collect()
-    assert {r["doc_id"] for r in rows} == set(range(len(CORPUS)))
-    by_pack = {}
-    for r in rows:
-        by_pack.setdefault(r["pack_id"], 0)
-        by_pack[r["pack_id"]] += 1
-    totals = {r["pack_id"]: r["pack_tokens"] for r in rows}
-    per_doc = {r["doc_id"]: r["n_tok"] for r in counted.collect()}
-    # pack totals are exact sums of member docs
-    acc = {}
-    for r in rows:
-        acc[r["pack_id"]] = acc.get(r["pack_id"], 0) + per_doc[r["doc_id"]]
-    assert acc == totals
-
-
-def test_bpe_save_load_roundtrip(spark, tmp_path):
-    from trial_submission_studio_spark.operators.bpe import (
-        bpe_tokens,
-        load_bpe,
-        save_bpe,
-        train_bpe,
-    )
-
-    merges, stats = train_bpe(_df(spark), "text", num_merges=20)
-    p = str(tmp_path / "tok" / "bpe.json")
-    save_bpe(p, merges, stats)
-    m2, s2 = load_bpe(p)
-    assert m2 == merges and s2["alphabet"] == stats["alphabet"]
-    df = _df(spark).limit(3)
-    a = df.select(bpe_tokens("text", merges).alias("t")).collect()
-    b = df.select(bpe_tokens("text", m2).alias("t")).collect()
-    assert [r.t for r in a] == [r.t for r in b]
-
-    import pytest as _pytest
-
-    bad = str(tmp_path / "bad.json")
-    open(bad, "w").write('{"format": "other"}')
-    with _pytest.raises(ValueError, match="not a saved BPE tokenizer"):
-        load_bpe(bad)

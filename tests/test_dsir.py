@@ -1,6 +1,5 @@
-"""DSIR importance-resampling tests: feature counts vs a Python
-reference, log-weight math vs numpy, target-enrichment behavior,
-and partition-independent determinism."""
+"""DSIR importance-weight tests: feature counts vs a Python
+reference, log-weight math vs numpy, and the plan shape."""
 
 from __future__ import annotations
 
@@ -11,7 +10,6 @@ from pyspark.sql import functions as F
 
 from trial_submission_studio_spark.operators.dsir import (
     dsir_log_weights,
-    dsir_select,
     fit_bucket_distribution,
     hashed_ngram_counts,
 )
@@ -82,53 +80,6 @@ def test_log_weights_match_numpy(spark):
     assert set(w) == set(expect)
     for d in expect:
         assert w[d] == pytest.approx(expect[d], rel=1e-12)
-
-
-def test_selection_enriches_target_like_docs(spark):
-    # raw: 50 science-ish docs (vocab A) + 50 spam-ish (vocab B);
-    # target speaks vocab A → selection should be mostly vocab A
-    sci = [(i, "quantum theory of measurement and relativity") for i in range(50)]
-    spam = [(50 + i, "buy cheap pills now click here winner") for i in range(50)]
-    raw = _df(spark, sci + spam)
-    target = _df(
-        spark,
-        [(1000 + i, "physics theory relativity quantum mechanics") for i in range(10)],
-    )
-    picked = dsir_select(raw, target, "doc_id", "text", k=30, buckets=1024)
-    ids = [r["doc_id"] for r in picked.collect()]
-    assert len(ids) == 30
-    sci_share = sum(1 for i in ids if i < 50) / 30
-    assert sci_share > 0.8
-
-
-def test_deterministic_and_partition_independent(spark):
-    rows = [(i, f"word{i % 7} tail{i % 3}") for i in range(60)]
-    target = _df(spark, [(900, "word1 tail1")])
-    a = dsir_select(
-        _df(spark, rows).repartition(1), target, "doc_id", "text", k=10, buckets=B
-    )
-    b = dsir_select(
-        _df(spark, rows).repartition(13), target, "doc_id", "text", k=10, buckets=B
-    )
-    assert sorted(r["doc_id"] for r in a.collect()) == sorted(
-        r["doc_id"] for r in b.collect()
-    )
-    with pytest.raises(ValueError):
-        dsir_select(_df(spark, rows), target, "doc_id", "text", k=0)
-
-
-def test_temperature_flattens_selection(spark):
-    """High temperature → near-uniform sampling: the vocab-A share
-    drops toward the population share."""
-    sci = [(i, "quantum theory relativity") for i in range(50)]
-    spam = [(50 + i, "buy pills now") for i in range(50)]
-    raw = _df(spark, sci + spam)
-    target = _df(spark, [(1000, "quantum relativity theory physics")])
-    hot = dsir_select(
-        raw, target, "doc_id", "text", k=30, buckets=1024, temperature=1e6
-    )
-    share = sum(1 for r in hot.collect() if r["doc_id"] < 50) / 30
-    assert 0.2 < share < 0.8  # near the 0.5 population share
 
 
 def test_custom_bucket_expr_swaps_feature_hash(spark):

@@ -75,8 +75,12 @@ def test_no_cartesian_products_in_data_plane_queries(spark):
 
 
 def test_quota_cap_scan_prunes_columns(spark):
+    from trial_submission_studio_spark.operators.sampling import cap_per_key
+
     m = _entry()
-    plan = _plan(m.source_quota_cap(spark, SF))
+    docs = m._t(spark, SF, "documents").select("doc_id", "source")
+    prio = (F.col("doc_id") * F.lit(2654435761)) % F.lit(1000000007)
+    plan = _plan(cap_per_key(docs, "source", 40, "doc_id", priority=prio))
     scans = [ln for ln in plan.splitlines() if "FileScan" in ln]
     assert scans and all("text" not in ln for ln in scans), (
         "quota cap reads only (doc_id, source); the text column must "
@@ -163,52 +167,6 @@ def test_minhash_shuffle_carries_signatures_not_shingles(spark):
     plan = _plan(minhash_signatures(docs, "doc_id", "text"))
     before_exchange = plan.split("Exchange", 1)[0]
     assert "partial_min" in plan or "HashAggregate" in before_exchange
-
-
-def test_url_ops_plan_shapes(spark):
-    """URL governance plan guards: canonicalization is pure codegen
-    (zero exchanges), dedup shuffles only hashed keys + ids (never
-    a cartesian), blocklist matching broadcasts."""
-    from trial_submission_studio_spark.operators.urls import (
-        domain_blocklist_filter,
-        normalize_url,
-        url_dedup,
-    )
-
-    df = spark.createDataFrame(
-        [(i, f"https://d{i % 5}.com/p?utm_source=x") for i in range(20)],
-        "doc_id long, url string",
-    )
-    # row-local: no shuffle
-    plan = _plan(df.select(normalize_url("url").alias("u")))
-    assert "Exchange" not in plan
-    # dedup: shuffles exist but no cartesian / nested-loop join
-    plan = _plan(url_dedup(df, "doc_id", "url"))
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-    # blocklist: broadcast anti join, never a sort-merge join
-    plan = _plan(domain_blocklist_filter(df, "url", ["d1.com"]))
-    assert "BroadcastHashJoin" in plan and "LeftAnti" in plan
-    assert "SortMergeJoin" not in plan
-
-
-def test_quality_model_scoring_is_shuffle_free(spark):
-    """Learned-filter scoring is a stateless per-row map — the plan
-    over a trained model must add ZERO exchanges on top of the scan."""
-    from trial_submission_studio_spark.operators.qualitymodel import (
-        score_quality_model,
-        train_quality_model,
-    )
-
-    labeled = spark.createDataFrame(
-        [(i, "good words here to score", 1.0) for i in range(8)]
-        + [(10 + i, "@#$ @#$ @#$", 0.0) for i in range(8)],
-        "doc_id long, text string, label double",
-    )
-    model = train_quality_model(labeled, "text", num_features=256, max_iter=5)
-    docs = spark.createDataFrame([(1, "some doc")], "doc_id long, text string")
-    plan = _plan(score_quality_model(docs, model, "text"))
-    assert "Exchange" not in plan
 
 
 def test_runtime_bloom_filter_join_eligibility(spark):

@@ -4,7 +4,6 @@ applyInPandas, one shuffle)."""
 import numpy as np
 import pytest
 
-from trial_submission_studio_spark.operators.chunking import chunk_documents
 from trial_submission_studio_spark.operators.embeddings import pool_embeddings
 from trial_submission_studio_spark.sources.local import values_df
 
@@ -54,17 +53,20 @@ def test_mixed_dims_raise(spark):
 
 
 def test_chunk_encode_pool_composition(spark):
-    """chunk_documents → (deterministic fake encoder) → pool: the
-    full long-document embedding path; pooled dim and provenance
-    survive, and n_pooled equals the chunk count."""
+    """chunks → (deterministic fake encoder) → pool: the long-document
+    embedding path; pooled dim and provenance survive, and n_pooled
+    equals the chunk count."""
     from pyspark.sql import functions as F
 
-    docs = values_df(
+    chunks = values_df(
         spark,
-        [(i, " ".join(f"w{i}_{j}" for j in range(37))) for i in range(5)],
-        "doc_id bigint, text string",
+        [
+            (i, c, i + 1, f"w{i}_{c} w{i}_{c}x", 2)
+            for i in range(5)
+            for c in range(i + 1)
+        ],
+        "doc_id bigint, chunk_id int, n_chunks int, chunk string, n_tokens bigint",
     )
-    chunks = chunk_documents(docs, "doc_id", "text", chunk_tokens=10, overlap_tokens=2)
     encoded = chunks.withColumn(
         "vec",
         F.array(

@@ -2,15 +2,17 @@
 hypothesis property tests."""
 
 import codecs
-import os
 
 from hypothesis import given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from trial_submission_studio_spark.functions.duration import normalize_duration_str
-from trial_submission_studio_spark.sources import read_source_csv
-from trial_submission_studio_spark.sources.csv_reader import detect_encoding, list_csv_files
+from trial_submission_studio_spark.sources.csv_reader import (
+    detect_encoding,
+    list_csv_files,
+    read_source_csv,
+)
 from trial_submission_studio_spark.sources.items_metadata import detect_roles, load_items_metadata
 from trial_submission_studio_spark.sources.local import values_df
 from trial_submission_studio_spark.streaming.events import tumbling_window_counts
@@ -264,123 +266,6 @@ def test_streaming_session_window_matches_batch(spark, tmp_path):
     assert got == expected
 
 
-def test_streaming_asof_matches_batch(spark, tmp_path):
-    """Streaming as-of join (state-store last-value-per-key) emits the
-    same matches as the batch asof_join operator, including a
-    cross-micro-batch match where the state row carries a right-side
-    observation from an earlier batch."""
-    from trial_submission_studio_spark.operators.temporal import asof_join
-    from trial_submission_studio_spark.streaming.asof import streaming_asof_join
-
-    def frame(rows, payload):
-        return values_df(
-            spark, rows, f"user_id bigint, ts_s string, {payload}"
-        ).select(
-            "user_id", F.col("ts_s").cast("timestamp").alias("ts"),
-            *[p.split()[0] for p in payload.split(", ")],
-        )
-
-    r1 = frame([(1, "2024-01-01 00:05:00", 10.0), (2, "2024-01-01 00:10:00", 20.0)], "quote double")
-    l1 = frame([(1, "2024-01-01 00:07:00", 100), (2, "2024-01-01 00:09:00", 200)], "trade_id bigint")
-    r2 = frame([(1, "2024-01-01 00:30:00", 11.0)], "quote double")
-    l2 = frame([(1, "2024-01-01 00:35:00", 300), (2, "2024-01-01 00:40:00", 400)], "trade_id bigint")
-
-    ldir, rdir = str(tmp_path / "trades"), str(tmp_path / "quotes")
-    l1.write.parquet(ldir)
-    r1.write.parquet(rdir)
-
-    lstream = spark.readStream.schema("user_id bigint, ts timestamp, trade_id bigint").parquet(ldir)
-    rstream = spark.readStream.schema("user_id bigint, ts timestamp, quote double").parquet(rdir)
-    joined = streaming_asof_join(
-        lstream, rstream, ["user_id"], value_cols=["quote"], suffix="_right"
-    )
-    q = joined.writeStream.outputMode("append").format("memory").queryName("asof_out").start()
-    try:
-        q.processAllAvailable()
-        # phase 2, respecting the documented per-key in-order arrival:
-        # the new quote lands (and is folded into state) before the
-        # trades that should see it — so BOTH phase-2 trades match
-        # purely out of the state store (u1: 00:30 quote from this
-        # phase, u2: 00:10 quote carried since phase 1)
-        r2.write.mode("append").parquet(rdir)
-        q.processAllAvailable()
-        l2.write.mode("append").parquet(ldir)
-        q.processAllAvailable()
-        got = {
-            r["trade_id"]: (r["quote_right"], str(r["ts_right"]))
-            for r in spark.sql("SELECT * FROM asof_out").collect()
-        }
-    finally:
-        q.stop()
-
-    expected_df = asof_join(
-        l1.unionByName(l2), r1.unionByName(r2), ["user_id"],
-        value_cols=["quote"],
-    )
-    expected = {
-        r["trade_id"]: (r["quote_right"], str(r["ts_right"]))
-        for r in expected_df.collect()
-    }
-    assert len(got) == 4
-    assert got == expected
-    assert got[200] == (None, "None")          # no quote yet at 00:09
-    assert got[400] == (20.0, "2024-01-01 00:10:00")  # via state store
-
-
-def test_streaming_asof_tolerance_and_strict_match_batch(spark, tmp_path):
-    """The streaming as-of's tolerance/strict knobs agree with the
-    batch operator: an exact-timestamp quote is invisible under
-    strict, and a match older than the tolerance window is NULLed."""
-    from trial_submission_studio_spark.operators.temporal import asof_join
-    from trial_submission_studio_spark.streaming.asof import streaming_asof_join
-
-    def frame(rows, payload):
-        return values_df(
-            spark, rows, f"user_id bigint, ts_s string, {payload}"
-        ).select(
-            "user_id", F.col("ts_s").cast("timestamp").alias("ts"),
-            payload.split()[0],
-        )
-
-    right = frame(
-        [(1, "2024-01-01 00:00:00", 10.0), (1, "2024-01-01 01:00:00", 11.0)],
-        "quote double",
-    )
-    left = frame(
-        [(1, "2024-01-01 01:00:00", 100),   # exact ts: strict hides 11.0
-         (1, "2024-01-01 02:30:00", 200)],  # 90m after 11.0: tol=3600 NULLs
-        "trade_id bigint",
-    )
-    ldir, rdir = str(tmp_path / "l"), str(tmp_path / "r")
-    left.write.parquet(ldir)
-    right.write.parquet(rdir)
-    ls = spark.readStream.schema("user_id bigint, ts timestamp, trade_id bigint").parquet(ldir)
-    rs = spark.readStream.schema("user_id bigint, ts timestamp, quote double").parquet(rdir)
-
-    for kwargs in ({"tolerance_seconds": 3600}, {"strict": True}):
-        joined = streaming_asof_join(
-            ls, rs, ["user_id"], value_cols=["quote"], suffix="_right", **kwargs
-        )
-        name = "asof_ts_" + ("tol" if "tolerance_seconds" in kwargs else "strict")
-        q = joined.writeStream.outputMode("append").format("memory").queryName(name).start()
-        try:
-            q.processAllAvailable()
-            got = {
-                r["trade_id"]: r["quote_right"]
-                for r in spark.sql(f"SELECT * FROM {name}").collect()
-            }
-        finally:
-            q.stop()
-        want = {
-            r["trade_id"]: r["quote_right"]
-            for r in asof_join(
-                left, right, ["user_id"], value_cols=["quote"], **kwargs
-            ).collect()
-        }
-        assert got == want, (kwargs, got, want)
-    assert want[100] == 10.0  # strict: exact 01:00 quote hidden
-
-
 def test_streaming_watermark_drops_late_data(spark, tmp_path):
     """Append-mode + watermark: an event older than the watermark must
     be DROPPED from its already-finalized window (true late-data
@@ -475,21 +360,18 @@ def test_streaming_stateless_corpus_filters_match_batch(spark, tmp_path):
 
 
 def test_streaming_crawl_stages_match_batch(spark, tmp_path):
-    """The crawl-governance stages (URL normalization key, domain
-    blocklist) are stateless, so the SAME plan runs on a stream of
-    fetched pages — batch ≡ bounded stream row-for-row."""
-    from trial_submission_studio_spark.operators.urls import (
-        domain_blocklist_filter,
-        normalize_url,
-    )
+    """The page-governance stages (PII filter, PII redaction) are
+    stateless, so the SAME plan runs on a stream of fetched pages —
+    batch ≡ bounded stream row-for-row."""
+    from trial_submission_studio_spark.operators.pii import pii_filter, redact_pii
 
     batch = spark.createDataFrame(
         [
-            (1, "https://www.good.org/a?utm_source=t",
-             "<html><body><p>Fine page body here.</p></body></html>"),
-            (2, "https://spam.bad.com/x",
-             "<html><body><p>spam spam</p></body></html>"),
-            (3, "https://good.org/a",  # same canonical URL as doc 1
+            (1, "https://good.org/a",
+             "<html><body><p>Mail jane@example.org today.</p></body></html>"),
+            (2, "https://bad.com/x",
+             "<html><body><p>a@b.com c@d.com e@f.com</p></body></html>"),
+            (3, "https://good.org/b",
              "<html><body><p>Fine page body here.</p></body></html>"),
         ],
         "doc_id long, url string, html string",
@@ -498,15 +380,13 @@ def test_streaming_crawl_stages_match_batch(spark, tmp_path):
     batch.write.parquet(src)
 
     def stage(df):
-        kept = domain_blocklist_filter(df, "url", ["bad.com"])
-        return kept.select(
-            "doc_id",
-            normalize_url("url").alias("canonical_url"),
-        )
+        kept = pii_filter(df, "html", max_total=1)
+        return kept.select("doc_id", redact_pii("html").alias("html"))
 
     expected = sorted(tuple(r) for r in stage(batch).collect())
     assert [e[0] for e in expected] == [1, 3]
-    assert expected[0][1] == expected[1][1] == "https://good.org/a"
+    assert "jane@example.org" not in expected[0][1]
+    assert "[EMAIL]" in expected[0][1]
 
     stream = spark.readStream.schema("doc_id long, url string, html string").parquet(src)
     q = (
@@ -524,209 +404,6 @@ def test_streaming_crawl_stages_match_batch(spark, tmp_path):
     finally:
         q.stop()
     assert got == expected
-
-
-def test_streaming_dedup_ingest_across_restarts(spark, tmp_path):
-    """Continuous corpus ingest (streaming/ingest.py): micro-batches
-    dedup against the PERSISTED fingerprint table, so a document
-    admitted in a batch from a previous query RUN is still rejected
-    after a restart — beyond any watermark/state-store scope. Also
-    pins intra-batch min-id survivorship through the streaming path."""
-    src = str(tmp_path / "src")
-    corpus = str(tmp_path / "corpus")
-    state = str(tmp_path / "state")
-    ckpt = str(tmp_path / "ckpt")
-
-    from trial_submission_studio_spark.streaming.ingest import start_dedup_ingest
-
-    schema = "doc_id bigint, text string"
-    # run 1: docs 1-3, with 2/3 identical (min-id survivor -> 2)
-    values_df(
-        spark,
-        [(1, "alpha text"), (2, "same body"), (3, "same body")],
-        schema,
-    ).coalesce(1).write.mode("append").parquet(src)
-    q = start_dedup_ingest(
-        spark.readStream.schema(schema).parquet(src),
-        "doc_id", "text", corpus, state, ckpt,
-    )
-    q.awaitTermination(120)
-
-    got1 = {r["doc_id"] for r in spark.read.parquet(corpus).collect()}
-    assert got1 == {1, 2}
-
-    # run 2 (restart, same checkpoint): doc 4 repeats run 1's text,
-    # doc 5 is novel
-    values_df(
-        spark, [(4, "alpha text"), (5, "brand new")], schema
-    ).coalesce(1).write.mode("append").parquet(src)
-    q = start_dedup_ingest(
-        spark.readStream.schema(schema).parquet(src),
-        "doc_id", "text", corpus, state, ckpt,
-    )
-    q.awaitTermination(120)
-
-    rows = spark.read.parquet(corpus).collect()
-    assert {r["doc_id"] for r in rows} == {1, 2, 5}
-    # the fingerprint state table covers exactly the admitted docs
-    assert spark.read.parquet(state).select("fp").distinct().count() == 3
-
-
-def test_streaming_dedup_ingest_replay_idempotent(spark, tmp_path):
-    """Failure-recovery replay fence: foreachBatch re-runs batch N
-    while batch N's OWN state delta is already persisted. Without the
-    batch-id exclusion in the seen-state read, every replayed doc
-    self-matches, `novel` goes empty, and the fenced overwrite wipes
-    the corpus batch dir — permanent loss. A replay (simulated with a
-    fresh checkpoint over the same source files, so the same rows
-    re-process under batch_id=0) must recompute the SAME novel set in
-    both exact and near modes."""
-    from trial_submission_studio_spark.streaming.ingest import start_dedup_ingest
-
-    schema = "doc_id bigint, text string"
-    base = (
-        "the quick brown fox jumps over the lazy dog while seventy "
-        "watchful geese parade across the frozen harbor at dawn"
-    )
-    for mode in ("exact", "near"):
-        src = str(tmp_path / mode / "src")
-        corpus = str(tmp_path / mode / "corpus")
-        state = str(tmp_path / mode / "state")
-        values_df(
-            spark, [(1, base), (2, "other body entirely")], schema
-        ).coalesce(1).write.mode("append").parquet(src)
-
-        def run(ckpt):
-            q = start_dedup_ingest(
-                spark.readStream.schema(schema).parquet(src),
-                "doc_id", "text", corpus, state,
-                str(tmp_path / mode / ckpt), mode=mode,
-                publish_versions=True,
-            )
-            q.awaitTermination(120)
-
-        run("ckpt1")
-        assert {r.doc_id for r in spark.read.parquet(corpus).collect()} == {1, 2}
-        # replay: same source, fresh checkpoint -> batch_id=0 re-runs
-        # against state that already holds batch_id=0's delta
-        run("ckpt2")
-        assert {r.doc_id for r in spark.read.parquet(corpus).collect()} == {1, 2}
-        # the published snapshot still resolves (no dangling file refs)
-        from trial_submission_studio_spark.io import versioned as V
-
-        snap = V.read_version(spark, corpus)
-        assert {r.doc_id for r in snap.collect()} == {1, 2}
-
-
-def test_streaming_near_dup_ingest_across_restarts(spark, tmp_path):
-    """mode='near': the streaming ingest rejects NEAR-duplicates of
-    documents admitted in any previous run — LSH band-bucket state +
-    signature verification persisted across restarts, text never kept
-    in state. Dissimilar documents still pass."""
-    from trial_submission_studio_spark.streaming.ingest import start_dedup_ingest
-
-    src = str(tmp_path / "src")
-    corpus = str(tmp_path / "corpus")
-    state = str(tmp_path / "state")
-    ckpt = str(tmp_path / "ckpt")
-    schema = "doc_id bigint, text string"
-
-    base = (
-        "the quick brown fox jumps over the lazy dog while seventy "
-        "watchful geese parade across the frozen harbor at dawn"
-    )
-    near = base.replace("frozen", "sunlit")  # high-Jaccard variant
-    far = (
-        "completely unrelated content about distributed query engines "
-        "optimizing shuffle placement under adaptive execution plans"
-    )
-
-    def run(rows):
-        values_df(spark, rows, schema).coalesce(1).write.mode("append").parquet(src)
-        q = start_dedup_ingest(
-            spark.readStream.schema(schema).parquet(src),
-            "doc_id", "text", corpus, state, ckpt, mode="near",
-        )
-        q.awaitTermination(120)
-        q.stop()
-        q.awaitTermination()
-
-    run([(1, base)])
-    assert {r.doc_id for r in spark.read.parquet(corpus).collect()} == {1}
-
-    # restart: near-dup of run 1 rejected, dissimilar admitted
-    run([(2, near), (3, far)])
-    assert {r.doc_id for r in spark.read.parquet(corpus).collect()} == {1, 3}
-    # state carries band buckets + signatures, never text
-    bcols = set(spark.read.parquet(state + "/buckets").columns)
-    assert {"band", "bucket", "doc_id"} <= bcols and "text" not in bcols
-    scols = set(spark.read.parquet(state + "/sigs").columns)
-    assert {"doc_id", "sig"} <= scols and "text" not in scols
-
-
-def test_streaming_dedup_ingest_bloom_pruned(spark, tmp_path):
-    """Exact-mode ingest with the Bloom sidecar: same admit/reject
-    decisions as plain exact mode across a restart, per-batch filter
-    files appear under state/_bloom, and the underscore dir stays
-    invisible to the partition-discovered fp read."""
-    src = str(tmp_path / "src")
-    corpus = str(tmp_path / "corpus")
-    state = str(tmp_path / "state")
-    ckpt = str(tmp_path / "ckpt")
-
-    from trial_submission_studio_spark.streaming.ingest import start_dedup_ingest
-
-    schema = "doc_id bigint, text string"
-    opts = {"capacity": 1000, "fpp": 0.01}
-    values_df(
-        spark,
-        [(1, "alpha text"), (2, "same body"), (3, "same body")],
-        schema,
-    ).coalesce(1).write.mode("append").parquet(src)
-    q = start_dedup_ingest(
-        spark.readStream.schema(schema).parquet(src),
-        "doc_id", "text", corpus, state, ckpt, bloom=opts,
-    )
-    q.awaitTermination(120)
-    assert {r["doc_id"] for r in spark.read.parquet(corpus).collect()} == {1, 2}
-
-    values_df(
-        spark, [(4, "alpha text"), (5, "brand new")], schema
-    ).coalesce(1).write.mode("append").parquet(src)
-    q = start_dedup_ingest(
-        spark.readStream.schema(schema).parquet(src),
-        "doc_id", "text", corpus, state, ckpt, bloom=opts,
-    )
-    q.awaitTermination(120)
-
-    assert {r["doc_id"] for r in spark.read.parquet(corpus).collect()} == {1, 2, 5}
-    # fp state read is unpolluted by the sidecar dir and matches admits
-    assert spark.read.parquet(state).select("fp").distinct().count() == 3
-    import os
-
-    sidecars = sorted(os.listdir(os.path.join(state, "_bloom")))
-    assert any(s.startswith("batch_") and s.endswith(".bits") for s in sidecars)
-    # the merged sidecars contain every admitted fp (no false negatives)
-    from trial_submission_studio_spark.operators.bloom import (
-        bloom_maybe_seen,
-        load_bloom,
-        merge_blooms,
-    )
-
-    bfs = [
-        load_bloom(os.path.join(state, "_bloom", s[: -len(".json")]))
-        for s in sidecars
-        if s.endswith(".json")
-    ]
-    merged = merge_blooms(bfs)
-    misses = (
-        bloom_maybe_seen(
-            spark.read.parquet(state).select("fp"), "fp", merged
-        )
-        .where("NOT maybe_seen")
-        .count()
-    )
-    assert misses == 0
 
 
 def test_incremental_exact_dedup_bloom_equivalence(spark):
@@ -754,186 +431,4 @@ def test_incremental_exact_dedup_bloom_equivalence(spark):
     )
     assert sorted(r["doc_id"] for r in plain.collect()) == sorted(
         r["doc_id"] for r in pruned.collect()
-    )
-
-
-def test_streaming_near_dup_threshold_autocalibration(spark, tmp_path):
-    """minhash={'threshold': t} auto-picks (bands, rows_per_band)
-    via calibrate_lsh and still rejects a near-duplicate across a
-    restartable ingest run."""
-    src = str(tmp_path / "src")
-    corpus = str(tmp_path / "corpus")
-    state = str(tmp_path / "state")
-    ckpt = str(tmp_path / "ckpt")
-
-    from trial_submission_studio_spark.streaming.ingest import start_dedup_ingest
-
-    schema = "doc_id bigint, text string"
-    base = "the quick brown fox jumps over the lazy dog again and again"
-    values_df(spark, [(1, base)], schema).coalesce(1).write.mode(
-        "append"
-    ).parquet(src)
-    q = start_dedup_ingest(
-        spark.readStream.schema(schema).parquet(src),
-        "doc_id", "text", corpus, state, ckpt,
-        mode="near", minhash={"threshold": 0.7},
-    )
-    q.awaitTermination(120)
-    near = base.replace("lazy", "sleepy")
-    values_df(
-        spark, [(2, near), (3, "completely different content entirely")], schema
-    ).coalesce(1).write.mode("append").parquet(src)
-    q = start_dedup_ingest(
-        spark.readStream.schema(schema).parquet(src),
-        "doc_id", "text", corpus, state, ckpt,
-        mode="near", minhash={"threshold": 0.7},
-    )
-    q.awaitTermination(120)
-    got = {r["doc_id"] for r in spark.read.parquet(corpus).collect()}
-    assert got == {1, 3}  # near-dup 2 rejected, novel 3 admitted
-
-
-def test_ingest_state_compaction_bounds_files_preserves_replay(spark, tmp_path):
-    """compact_ingest_state folds fence-dead batch partitions into a
-    negative compaction epoch: the state-dir partition count stays
-    bounded (<= epoch + keep_latest) across N batches, dedup against
-    compacted state still rejects previously admitted texts, and a
-    REAL failure replay (latest commit marker removed, same
-    checkpoint, same batch id) stays idempotent because the newest
-    batch's delta is never folded."""
-    import shutil
-
-    from trial_submission_studio_spark.streaming.ingest import (
-        _batch_dirs,
-        compact_ingest_state,
-        start_dedup_ingest,
-    )
-
-    schema = "doc_id bigint, text string"
-    src = str(tmp_path / "src")
-    corpus = str(tmp_path / "corpus")
-    state = str(tmp_path / "state")
-    ckpt = str(tmp_path / "ckpt")
-
-    def run():
-        q = start_dedup_ingest(
-            spark.readStream.schema(schema).option(
-                "maxFilesPerTrigger", "1"
-            ).parquet(src),
-            "doc_id", "text", corpus, state, ckpt,
-            bloom={"capacity": 1000, "fpp": 0.01},
-        )
-        q.awaitTermination(120)
-        q.stop()
-        q.awaitTermination()
-
-    batches = [
-        [(1, "alpha body"), (2, "beta body")],
-        [(11, "alpha body"), (12, "gamma body")],   # alpha repeats
-        [(21, "beta body"), (22, "delta body")],    # beta repeats
-        [(31, "gamma body"), (32, "epsilon body")], # gamma repeats
-    ]
-    for rows in batches:
-        values_df(spark, rows, schema).coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-        run()
-    admitted = {1, 2, 12, 22, 32}
-    assert {r.doc_id for r in spark.read.parquet(corpus).collect()} == admitted
-    assert len(_batch_dirs(state)) == 4
-
-    folded = compact_ingest_state(spark, state, mode="exact")
-    assert folded["fp"] == 3 and folded["bloom"] == 3
-    dirs = _batch_dirs(state)
-    assert set(dirs) == {-1, 3}  # epoch + protected latest
-    # state content unchanged: same distinct fingerprints
-    assert spark.read.parquet(state).select("fp").distinct().count() == 5
-
-    # ingest after compaction: old text still rejected, novel admitted
-    values_df(
-        spark, [(41, "alpha body"), (42, "zeta body")], schema
-    ).coalesce(1).write.mode("append").parquet(src)
-    run()
-    admitted |= {42}
-    assert {r.doc_id for r in spark.read.parquet(corpus).collect()} == admitted
-
-    # second compaction folds the previous epoch too: bounded forever
-    compact_ingest_state(spark, state, mode="exact")
-    assert set(_batch_dirs(state)) == {-2, 4}
-
-    # REAL replay: drop the newest commit marker; restart re-executes
-    # batch 4 under its ORIGINAL id against state holding its delta
-    os.remove(os.path.join(ckpt, "commits", "4"))
-    crc = os.path.join(ckpt, "commits", ".4.crc")
-    if os.path.exists(crc):  # hadoop checksum sidecar blocks re-commit
-        os.remove(crc)
-    run()
-    assert {r.doc_id for r in spark.read.parquet(corpus).collect()} == admitted
-    assert spark.read.parquet(state).select("fp").distinct().count() == 6
-
-    # keep_latest guard
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="keep_latest"):
-        compact_ingest_state(spark, state, keep_latest=0)
-
-
-def test_ingest_state_compaction_near_mode(spark, tmp_path):
-    """Near-dup (MinHash LSH) state: buckets and sigs tables both
-    fold; near-duplicates of documents admitted BEFORE compaction are
-    still rejected after it."""
-    from trial_submission_studio_spark.streaming.ingest import (
-        _batch_dirs,
-        compact_ingest_state,
-        start_dedup_ingest,
-    )
-
-    schema = "doc_id bigint, text string"
-    src = str(tmp_path / "src")
-    corpus = str(tmp_path / "corpus")
-    state = str(tmp_path / "state")
-    ckpt = str(tmp_path / "ckpt")
-    base = (
-        "the quick brown fox jumps over the lazy dog while seventy "
-        "watchful geese parade across the frozen harbor at dawn"
-    )
-
-    def run():
-        q = start_dedup_ingest(
-            spark.readStream.schema(schema).option(
-                "maxFilesPerTrigger", "1"
-            ).parquet(src),
-            "doc_id", "text", corpus, state, ckpt, mode="near",
-        )
-        q.awaitTermination(120)
-        q.stop()
-        q.awaitTermination()
-
-    batches = [
-        [(1, base), (2, "an entirely different second document body here")],
-        [(11, "short unrelated note about harbor lights")],
-        [(21, "yet another novel body mentioning geese migration data")],
-    ]
-    for rows in batches:
-        values_df(spark, rows, schema).coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-        run()
-    before = {r.doc_id for r in spark.read.parquet(corpus).collect()}
-    assert before == {1, 2, 11, 21}
-
-    folded = compact_ingest_state(spark, state, mode="near")
-    assert folded == {"buckets": 2, "sigs": 2}
-    assert set(_batch_dirs(os.path.join(state, "buckets"))) == {-1, 2}
-    assert set(_batch_dirs(os.path.join(state, "sigs"))) == {-1, 2}
-
-    # a near-duplicate of batch 0's base doc (one word changed) must
-    # still be rejected against the COMPACTED state
-    near = base.replace("frozen", "icy")
-    values_df(
-        spark, [(31, near), (32, "completely fresh closing document")], schema
-    ).coalesce(1).write.mode("append").parquet(src)
-    run()
-    assert {r.doc_id for r in spark.read.parquet(corpus).collect()} == (
-        before | {32}
     )

@@ -102,49 +102,6 @@ def test_publish_guards(spark, tmp_path):
         read_manifest(str(tmp_path / "nowhere"))
 
 
-def test_streaming_ingest_publishes_snapshots(spark, tmp_path):
-    """publish_versions=True: each accepted micro-batch atomically
-    publishes a snapshot manifest under corpus_dir/_versions, so a
-    training job reads a stable explicit file list while ingest keeps
-    appending — and can time-travel to any earlier batch boundary."""
-    from trial_submission_studio_spark.sources.local import values_df
-    from trial_submission_studio_spark.streaming.ingest import start_dedup_ingest
-
-    src = str(tmp_path / "src")
-    corpus = str(tmp_path / "corpus")
-    state = str(tmp_path / "state")
-    ckpt = str(tmp_path / "ckpt")
-    schema = "doc_id bigint, text string"
-
-    values_df(spark, [(1, "alpha"), (2, "beta")], schema).coalesce(1).write.mode(
-        "append"
-    ).parquet(src)
-    q = start_dedup_ingest(
-        spark.readStream.schema(schema).parquet(src),
-        "doc_id", "text", corpus, state, ckpt, publish_versions=True,
-    )
-    q.awaitTermination(120)
-    v1 = current_version(corpus)
-    assert v1 is not None
-    assert {r.doc_id for r in read_version(spark, corpus).collect()} == {1, 2}
-
-    # second run: one duplicate (rejected), one novel
-    values_df(spark, [(3, "alpha"), (4, "gamma")], schema).coalesce(1).write.mode(
-        "append"
-    ).parquet(src)
-    q = start_dedup_ingest(
-        spark.readStream.schema(schema).parquet(src),
-        "doc_id", "text", corpus, state, ckpt, publish_versions=True,
-    )
-    q.awaitTermination(120)
-    assert current_version(corpus) > v1
-    assert {r.doc_id for r in read_version(spark, corpus).collect()} == {1, 2, 4}
-    # time travel back to the first batch boundary
-    assert {r.doc_id for r in read_version(spark, corpus, version=v1).collect()} == {1, 2}
-    # discovery-based read still works and ignores _versions
-    assert {r.doc_id for r in spark.read.parquet(corpus).collect()} == {1, 2, 4}
-
-
 def test_diff_versions(spark, tmp_path):
     from trial_submission_studio_spark.io.versioned import diff_versions
 
@@ -165,67 +122,78 @@ def test_diff_versions(spark, tmp_path):
 
 
 def test_jsonl_landing_to_versioned_corpus_end_to_end(spark, tmp_path):
-    """The round-7 ingest story composes: JSONL landing directory →
-    streaming pinned-schema parse (quarantine dropped) → cross-run
-    exact dedup → per-batch atomic snapshot → chunk → pooled doc
-    vectors. Every stage is a round-7 component."""
+    """The landing-to-corpus story composes: JSONL landing files →
+    pinned-schema parse (malformed lines dropped) → exact dedup against
+    the current snapshot → atomic snapshot publish → pooled doc
+    vectors, with time travel back to the first landing."""
     import json
 
     from pyspark.sql import functions as F
 
-    from trial_submission_studio_spark.operators.chunking import chunk_documents
+    from trial_submission_studio_spark.operators.dedup import incremental_exact_dedup
     from trial_submission_studio_spark.operators.embeddings import pool_embeddings
-    from trial_submission_studio_spark.sources.jsonl import read_jsonl_stream, split_quarantine
-    from trial_submission_studio_spark.streaming.ingest import start_dedup_ingest
 
     landing = str(tmp_path / "landing")
     corpus = str(tmp_path / "corpus")
-    state = str(tmp_path / "state")
-    ckpt = str(tmp_path / "ckpt")
     os.makedirs(landing)
+    os.makedirs(corpus)
 
     def land(name, rows, bad=0):
-        with open(os.path.join(landing, name), "w", encoding="utf-8") as f:
+        path = os.path.join(landing, name)
+        with open(path, "w", encoding="utf-8") as f:
             for r in rows:
                 f.write(json.dumps(r) + "\n")
             for _ in range(bad):
                 f.write("{torn line\n")
+        return path
 
-    land("a.jsonl", [
+    def run(path):
+        batch = (
+            spark.read.schema("doc_id long, text string")
+            .option("mode", "DROPMALFORMED")
+            .json(path)
+        )
+        base = current_version(corpus)
+        seen = None
+        if base is not None:
+            seen = read_version(spark, corpus).select(
+                F.md5(F.col("text")).alias("fp")
+            )
+        novel, _ = incremental_exact_dedup(
+            batch, seen, "doc_id", "text", normalized=False
+        )
+        d = new_data_dir(corpus)
+        novel.select("doc_id", "text").write.parquet(d, mode="append")
+        publish_version(corpus, d, base_version=base)
+
+    run(land("a.jsonl", [
         {"doc_id": 1, "text": "the quick brown fox jumps over the lazy dog"},
         {"doc_id": 2, "text": "pack my box with five dozen liquor jugs"},
-    ], bad=1)
-
-    def run():
-        stream = read_jsonl_stream(spark, landing, "doc_id long, text string")
-        good, _bad = split_quarantine(stream)
-        q = start_dedup_ingest(
-            good, "doc_id", "text", corpus, state, ckpt, publish_versions=True
-        )
-        q.awaitTermination(120)
-
-    run()
+    ], bad=1))
     v1 = current_version(corpus)
     assert {r.doc_id for r in read_version(spark, corpus).collect()} == {1, 2}
 
     # second landing file: one exact duplicate, one novel
-    land("b.jsonl", [
+    run(land("b.jsonl", [
         {"doc_id": 3, "text": "the quick brown fox jumps over the lazy dog"},
         {"doc_id": 4, "text": "sphinx of black quartz judge my vow"},
-    ])
-    run()
+    ]))
     snapshot = read_version(spark, corpus)
     assert {r.doc_id for r in snapshot.collect()} == {1, 2, 4}
     assert {r.doc_id for r in read_version(spark, corpus, version=v1).collect()} == {1, 2}
 
-    chunks = chunk_documents(snapshot, "doc_id", "text", chunk_tokens=4, overlap_tokens=1)
-    encoded = chunks.withColumn(
-        "vec", F.array((F.xxhash64("chunk") % 997).cast("double"))
+    # one fake vector per word, pooled back to one vector per document
+    words = snapshot.select(
+        "doc_id", F.explode(F.split("text", " ")).alias("word")
     )
-    pooled = pool_embeddings(encoded, "doc_id", "vec", weight_col="n_tokens")
+    encoded = words.withColumn(
+        "vec", F.array((F.xxhash64("word") % 997).cast("double"))
+    )
+    pooled = pool_embeddings(encoded, "doc_id", "vec")
     rows = {r.doc_id: r for r in pooled.collect()}
     assert set(rows) == {1, 2, 4}
-    assert all(r.n_pooled >= 2 and len(r.vec) == 1 for r in rows.values())
+    assert rows[1].n_pooled == 9 and rows[4].n_pooled == 7
+    assert all(len(r.vec) == 1 for r in rows.values())
 
 
 def test_compact_version_preserves_rows_and_history(spark, tmp_path):

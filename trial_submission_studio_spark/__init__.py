@@ -16,7 +16,7 @@ SDTM submission packages), rebuilt Spark-first:
 Layers (mirrors the reference's crate split — SURVEY.md §7):
 
 - :mod:`~trial_submission_studio_spark.sources`   — ingest (CSV incl.
-  double-header, parquet table catalog)     (≙ tss-ingest)
+  double-header, Items.csv metadata)         (≙ tss-ingest)
 - :mod:`~trial_submission_studio_spark.standards` — controlled
   terminology / codelist registries          (≙ tss-standards)
 - :mod:`~trial_submission_studio_spark.functions` — scalar transform
@@ -25,7 +25,7 @@ Layers (mirrors the reference's crate split — SURVEY.md §7):
   profiling, validation, reshape, dedup, similarity, text analysis
                                               (≙ tss-submit + extensions)
 - :mod:`~trial_submission_studio_spark.streaming` — Structured
-  Streaming ingest/aggregation (extension; reference is batch-only)
+  Streaming windowed aggregation (extension; reference is batch-only)
 """
 
 __version__ = "0.1.0"

@@ -1,4 +1,1 @@
-from trial_submission_studio_spark.io.xpt import write_xpt  # noqa: F401
-from trial_submission_studio_spark.io.dataset_xml import write_dataset_xml  # noqa: F401
-from trial_submission_studio_spark.io.define_xml import write_define_xml  # noqa: F401
-from trial_submission_studio_spark.io.project import save_project, load_project, file_sha256  # noqa: F401
+"""Writers and the versioned table format: XPT, Dataset-XML, Define-XML, project files."""

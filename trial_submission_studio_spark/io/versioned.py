@@ -631,8 +631,7 @@ def publish_files(
 ) -> dict:
     """Atomically publish a new version from an EXPLICIT root-relative
     file list (the primitive under :func:`publish_version`; used
-    directly by callers that compose the list themselves, e.g. the
-    streaming ingest replacing one batch prefix on replay).
+    directly by callers that compose the list themselves).
 
     ``stats`` is an optional per-file column-statistics mapping
     (rel-path -> zone-map entry, from `io/zonemap.py`) stored in the

@@ -1,56 +1,25 @@
-"""Byte-pair-encoding tokenizer: distributed training + encoding.
+"""Pre-tokenizer shared by the subword tokenizers.
 
-Upgrades the engine's token accounting from the regex proxy
-(:func:`.textstats.bpe_ish_token_count`) to a real learned subword
-tokenizer (Sennrich et al. 2016, "Neural Machine Translation of Rare
-Words with Subword Units"; the greedy min-rank encoder is the GPT-2
-``bpe()`` formulation). Reference parity note: the reference engine
-(rubentalstra/Trial-Submission-Studio) has no tokenizer — this is
-part of the LLM-training-data extension surface, like
-`operators/lm.py` and `operators/langid.py`.
+The regex pre-tokenizer (letter runs | digit runs | one other
+non-space char) and the corpus word histogram built on it. The
+unigram-LM tokenizer (`operators/unigram.py`) trains from
+:func:`word_histogram` and segments each pre-token that
+``_PRETOKEN_RE`` finds, so the Java regex (distributed histogram) and
+the Python regex (Arrow-batched encoder) must agree byte-for-byte.
 
-Scale shape (the part that must survive 100 TB):
-
-- The ONLY corpus-sized stage is the word histogram — one
-  regexp-extract + explode + groupBy(word).count(), map-side combined,
-  shuffling 8-byte-hashed short strings. Everything downstream runs on
-  the aggregated (word, count) table, which is vocabulary-sized
-  (Heaps' law: ~10⁶ distinct words for web-scale corpora), NOT
-  corpus-sized.
-- Merge learning iterates ``num_merges`` times; running it as Spark
-  jobs would mean thousands of tiny shuffles over a megabyte-scale
-  table. Instead the histogram is truncated to the ``max_words`` most
-  frequent words (TakeOrdered — no full sort) and the merge loop runs
-  driver-side on that table with incremental pair-count maintenance —
-  the same design as single-node BPE trainers, which also train from
-  a word-frequency dict, except our dict is produced by a distributed
-  aggregation. Zipf makes the truncation principled: the dropped tail
-  carries a vanishing share of pair mass (`coverage` in the returned
-  stats quantifies exactly what was kept).
-- Encoding broadcasts the merge ranks (a dict of ≤ num_merges string
-  pairs, a few MB at GPT-2 scale) and runs as an Arrow-batched
-  pandas_udf with a per-batch distinct-word memo — Zipf again: a
-  batch of web text hits the memo for the overwhelming majority of
-  words. This is a designated Python op (real tokenizers are native
-  libraries; there is no JVM expression for ordered merge
-  application), same status as the duration grammar.
-
-Determinism: the histogram is an exact count (associative), the
-truncation and the merge loop tie-break on (count desc, token asc),
-and greedy encoding is a pure function of (word, ranks) — so trained
-merges and encoded output are bit-identical across partitionings,
-retries, and cluster sizes.
+Scale shape: the word histogram is the one corpus-sized stage of
+tokenizer training — one regexp-extract + explode +
+groupBy(word).count(), map-side combined, shuffling short strings.
+Everything downstream runs on the aggregated (word, count) table,
+which is vocabulary-sized, not corpus-sized.
 """
 
 from __future__ import annotations
 
 import re
-from collections import defaultdict
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 
 #: Pre-tokenizer: letter runs | digit runs | single other non-space
 #: char. Same token classes as textstats.bpe_ish_token_count, with the
@@ -62,11 +31,6 @@ from pyspark.sql.functions import pandas_udf
 _WS = " \\t\\n\\x0B\\f\\r"
 PRETOKEN_PATTERN = f"[A-Za-z]+|[0-9]+|[^A-Za-z0-9{_WS}]"
 _PRETOKEN_RE = re.compile(PRETOKEN_PATTERN)
-
-#: End-of-word sentinel appended as a distinct symbol (Sennrich
-#: formulation) so merges can learn word-final units ("ing</w>") and
-#: detokenization knows where words end.
-END_OF_WORD = "</w>"
 
 
 def pretokenize(c: Column | str) -> Column:
@@ -80,7 +44,7 @@ def pretokenize(c: Column | str) -> Column:
 
 def word_histogram(df: DataFrame, text_col: str, lowercase: bool = False) -> DataFrame:
     """(word, count) over the corpus — the one corpus-sized stage of
-    BPE training. groupBy on short strings, map-side combined."""
+    tokenizer training. groupBy on short strings, map-side combined."""
     toks = pretokenize(text_col)
     if lowercase:
         toks = F.transform(toks, lambda t: F.lower(t))
@@ -89,347 +53,3 @@ def word_histogram(df: DataFrame, text_col: str, lowercase: bool = False) -> Dat
         .groupBy("word")
         .agg(F.count(F.lit(1)).cast("long").alias("count"))
     )
-
-
-def _learn_merges(
-    word_counts: list[tuple[str, int]], num_merges: int
-) -> list[tuple[str, str]]:
-    """Driver-side merge loop over the (bounded) word histogram with
-    incremental pair-count maintenance: each merge touches only the
-    words that contain the merged pair (inverted index), so the loop
-    is O(num_merges · affected-words), not O(num_merges · vocab)."""
-    words: list[list[str]] = [list(w) + [END_OF_WORD] for w, _ in word_counts]
-    freqs = [int(c) for _, c in word_counts]
-    pair_counts: dict[tuple[str, str], int] = defaultdict(int)
-    pair_words: dict[tuple[str, str], set[int]] = defaultdict(set)
-    for i, (syms, f) in enumerate(zip(words, freqs)):
-        for p in zip(syms, syms[1:]):
-            pair_counts[p] += f
-            pair_words[p].add(i)
-    merges: list[tuple[str, str]] = []
-    for _ in range(num_merges):
-        if not pair_counts:
-            break
-        # deterministic: highest count, then lexicographically smallest
-        best = min(pair_counts.items(), key=lambda kv: (-kv[1], kv[0]))[0]
-        if pair_counts[best] <= 0:
-            break
-        merges.append(best)
-        a, b = best
-        joined = a + b
-        for i in sorted(pair_words.get(best, ())):
-            old = words[i]
-            f = freqs[i]
-            new: list[str] = []
-            j = 0
-            while j < len(old):
-                if j < len(old) - 1 and old[j] == a and old[j + 1] == b:
-                    new.append(joined)
-                    j += 2
-                else:
-                    new.append(old[j])
-                    j += 1
-            for p in zip(old, old[1:]):
-                pair_counts[p] -= f
-                if pair_counts[p] <= 0:
-                    pair_counts.pop(p, None)
-                    pair_words.pop(p, None)
-                else:
-                    # may be re-added below if the pair survives in `new`
-                    pair_words[p].discard(i)
-            for p in zip(new, new[1:]):
-                pair_counts[p] += f
-                pair_words[p].add(i)
-            words[i] = new
-    return merges
-
-
-def train_bpe(
-    df: DataFrame,
-    text_col: str,
-    num_merges: int = 2000,
-    max_words: int = 1_000_000,
-    lowercase: bool = False,
-) -> tuple[list[tuple[str, str]], dict]:
-    """Learn ``num_merges`` BPE merges from a corpus.
-
-    Returns (merges, stats) where merges is the ordered merge list and
-    stats reports histogram size and the pair-mass coverage of the
-    ``max_words`` truncation (1.0 = nothing dropped). Persist the
-    merges (they are plain string pairs) and reuse across encode runs
-    — training reads the corpus once.
-    """
-    hist = word_histogram(df, text_col, lowercase=lowercase)
-    totals = hist.agg(
-        F.count(F.lit(1)).alias("n_words"),
-        F.sum("count").alias("total_count"),
-    ).collect()[0]
-    # TakeOrdered, not a global sort; (count desc, word asc) makes the
-    # truncation deterministic under count ties
-    top = hist.orderBy(F.col("count").desc(), F.col("word").asc()).limit(
-        int(max_words)
-    ).collect()
-    word_counts = [(r["word"], r["count"]) for r in top]
-    kept = sum(c for _, c in word_counts)
-    total = int(totals["total_count"] or 0)
-    merges = _learn_merges(word_counts, num_merges)
-    stats = {
-        "distinct_words": int(totals["n_words"] or 0),
-        "kept_words": len(word_counts),
-        "coverage": (kept / total) if total else 1.0,
-        "num_merges": len(merges),
-        # the base alphabet of the kept histogram — feed to bpe_vocab
-        # so ids cover every character the encoder can emit standalone
-        "alphabet": sorted({ch for w, _ in word_counts for ch in w}),
-    }
-    return merges, stats
-
-
-def bpe_tokens(
-    text_col: Column | str,
-    merges: list[tuple[str, str]],
-    lowercase: bool = False,
-) -> Column:
-    """Column of BPE tokens (array<string>) for a text column.
-
-    Arrow-batched pandas_udf with a per-batch distinct-word memo; the
-    merge ranks ride the serialized closure (≤ num_merges short string
-    pairs — broadcast-sized). NULL text → NULL, blank → empty array.
-    Encoding is greedy min-rank merge application (GPT-2 ``bpe()``),
-    which reproduces the training-time segmentation because training
-    applied merges in rank order.
-    """
-    # Factory pattern (see the verify recipe): the udf must capture
-    # ONLY closure-local state — a module-level _encode_word/_PRETOKEN_RE
-    # reference would pickle by module name and fail on workers whose
-    # cwd can't import the package.
-    ranks = {tuple(p): i for i, p in enumerate(merges)}
-    pretoken_pattern = PRETOKEN_PATTERN
-    end_of_word = END_OF_WORD
-    lower = bool(lowercase)
-
-    @pandas_udf("array<string>")
-    def encode(s: pd.Series) -> pd.Series:
-        import re as _re
-
-        word_re = _re.compile(pretoken_pattern)
-        cache: dict[str, list[str]] = {}
-
-        def encode_word(word):
-            hit = cache.get(word)
-            if hit is not None:
-                return hit
-            syms = list(word) + [end_of_word]
-            while len(syms) > 1:
-                best = None
-                best_rank = None
-                for p in zip(syms, syms[1:]):
-                    r = ranks.get(p)
-                    if r is not None and (best_rank is None or r < best_rank):
-                        best, best_rank = p, r
-                if best is None:
-                    break
-                a, b = best
-                joined = a + b
-                new = []
-                j = 0
-                while j < len(syms):
-                    if j < len(syms) - 1 and syms[j] == a and syms[j + 1] == b:
-                        new.append(joined)
-                        j += 2
-                    else:
-                        new.append(syms[j])
-                        j += 1
-                syms = new
-            cache[word] = syms
-            return syms
-
-        def one(text):
-            if text is None:
-                return None
-            out: list[str] = []
-            for w in word_re.findall(text):
-                if lower:
-                    w = w.lower()
-                out.extend(encode_word(w))
-            return out
-
-        return s.map(one)
-
-    return encode(F.col(text_col) if isinstance(text_col, str) else text_col)
-
-
-def bpe_token_count(
-    text_col: Column | str,
-    merges: list[tuple[str, str]],
-    lowercase: bool = False,
-) -> Column:
-    """Learned-tokenizer token count (the accounting number a training
-    pipeline actually bills by); NULL text → NULL."""
-    return F.size(bpe_tokens(text_col, merges, lowercase=lowercase)).cast("long")
-
-
-def bpe_vocab(
-    merges: list[tuple[str, str]],
-    alphabet: list[str] | None = None,
-) -> dict[str, int]:
-    """Deterministic token→id map: the base alphabet plus END_OF_WORD
-    (sorted), then merge products in merge order. Pass the training
-    ``stats["alphabet"]`` from :func:`train_bpe` as ``alphabet`` so
-    ids cover every character the encoder can emit standalone — merge
-    operands alone miss characters that never participated in a merge
-    (they would otherwise encode as UNK)."""
-    base: set[str] = {END_OF_WORD}
-    if alphabet:
-        base.update(alphabet)
-    for a, b in merges:
-        for part in (a, b):
-            if part != END_OF_WORD and part not in base:
-                # merge operands are either single chars or earlier
-                # merge products; single chars form the base alphabet
-                if len(part) == 1:
-                    base.add(part)
-    vocab = {t: i for i, t in enumerate(sorted(base))}
-    for a, b in merges:
-        joined = a + b
-        if joined not in vocab:
-            vocab[joined] = len(vocab)
-    return vocab
-
-
-def detokenize_bpe(tokens_col: Column | str) -> Column:
-    """Inverse of :func:`bpe_tokens` up to whitespace normalization:
-    concatenate tokens and turn each END_OF_WORD into a single space
-    (the pre-tokenizer discards original whitespace runs, so exact
-    byte-level round-trip is out of scope — counts and segmentation
-    are the contract)."""
-    c = F.col(tokens_col) if isinstance(tokens_col, str) else tokens_col
-    return F.trim(
-        F.regexp_replace(F.array_join(c, ""), re.escape(END_OF_WORD), " ")
-    )
-
-
-def bpe_token_ids(
-    text_col: Column | str,
-    merges: list[tuple[str, str]],
-    vocab: dict[str, int] | None = None,
-    unk_id: int = 0,
-    lowercase: bool = False,
-) -> Column:
-    """Column of token IDS (array<int>) — the tensor-ready form a
-    training loader consumes; compose with
-    :func:`.sampling.pack_sequences` (via ``F.size``) for the full
-    text → ids → packed-batches path.
-
-    ``vocab`` defaults to :func:`bpe_vocab(merges) <bpe_vocab>`;
-    symbols outside it (characters never seen in training) map to
-    ``unk_id``. Same Arrow-batched kernel shape as
-    :func:`bpe_tokens`, with the word memo caching id lists directly.
-    """
-    ranks = {tuple(p): i for i, p in enumerate(merges)}
-    vocab_map = dict(vocab) if vocab is not None else bpe_vocab(merges)
-    pretoken_pattern = PRETOKEN_PATTERN
-    end_of_word = END_OF_WORD
-    lower = bool(lowercase)
-    unk = int(unk_id)
-
-    @pandas_udf("array<int>")
-    def encode_ids(s: pd.Series) -> pd.Series:
-        import re as _re
-
-        word_re = _re.compile(pretoken_pattern)
-        cache: dict[str, list[int]] = {}
-
-        def word_ids(word):
-            hit = cache.get(word)
-            if hit is not None:
-                return hit
-            syms = list(word) + [end_of_word]
-            while len(syms) > 1:
-                best = None
-                best_rank = None
-                for p in zip(syms, syms[1:]):
-                    r = ranks.get(p)
-                    if r is not None and (best_rank is None or r < best_rank):
-                        best, best_rank = p, r
-                if best is None:
-                    break
-                a, b = best
-                joined = a + b
-                new = []
-                j = 0
-                while j < len(syms):
-                    if j < len(syms) - 1 and syms[j] == a and syms[j + 1] == b:
-                        new.append(joined)
-                        j += 2
-                    else:
-                        new.append(syms[j])
-                        j += 1
-                syms = new
-            ids = [vocab_map.get(t, unk) for t in syms]
-            cache[word] = ids
-            return ids
-
-        def one(text):
-            if text is None:
-                return None
-            out: list[int] = []
-            for w in word_re.findall(text):
-                if lower:
-                    w = w.lower()
-                out.extend(word_ids(w))
-            return out
-
-        return s.map(one)
-
-    return encode_ids(F.col(text_col) if isinstance(text_col, str) else text_col)
-
-
-def save_bpe(path: str, merges: list[tuple[str, str]], stats: dict) -> None:
-    """Persist a trained tokenizer (ordered merges + the stats dict
-    incl. the base alphabet) as one JSON file, atomically
-    (write-then-rename — a reader never sees a torn tokenizer, the
-    same commit discipline as `io/versioned.py`).
-
-    Pinning the tokenizer file IS the reproducibility contract of a
-    corpus: token counts, packed batches, and id streams are only
-    comparable across runs that loaded the same file.
-    """
-    import json as _json
-    import os as _os
-    import tempfile as _tempfile
-
-    payload = _json.dumps(
-        {
-            "format": "trial_submission_studio_spark/bpe",
-            "version": 1,
-            "merges": [[a, b] for a, b in merges],
-            "stats": stats,
-        },
-        ensure_ascii=False,
-    )
-    d = _os.path.dirname(_os.path.abspath(path))
-    _os.makedirs(d, exist_ok=True)
-    fd, tmp = _tempfile.mkstemp(dir=d, suffix=".tmp")
-    try:
-        with _os.fdopen(fd, "w", encoding="utf-8") as f:
-            f.write(payload)
-        _os.rename(tmp, path)
-    except BaseException:
-        if _os.path.exists(tmp):
-            _os.remove(tmp)
-        raise
-
-
-def load_bpe(path: str) -> tuple[list[tuple[str, str]], dict]:
-    """Load a tokenizer saved by :func:`save_bpe`; returns the same
-    ``(merges, stats)`` shape ``train_bpe`` produces, ready for
-    ``bpe_tokens`` / ``bpe_vocab(alphabet=stats["alphabet"])`` /
-    ``bpe_token_ids``."""
-    import json as _json
-
-    with open(path, encoding="utf-8") as f:
-        doc = _json.load(f)
-    if doc.get("format") != "trial_submission_studio_spark/bpe":
-        raise ValueError(f"{path} is not a saved BPE tokenizer")
-    return [tuple(m) for m in doc["merges"]], doc["stats"]

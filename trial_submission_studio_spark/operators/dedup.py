@@ -733,7 +733,7 @@ def incremental_minhash_dedup(
 
     ``deltas=True`` returns the NOVEL rows' bucket/signature tables
     instead of the seen∪novel unions — the batch-id-fenced append
-    pattern (`streaming/ingest.py`) writes each increment's delta
+    pattern writes each increment's delta
     under its own directory and rereads the union by partition
     discovery, so replaying a failed batch rewrites one directory
     instead of duplicating state.

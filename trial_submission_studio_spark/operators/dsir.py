@@ -1,12 +1,11 @@
-"""DSIR — Data Selection via Importance Resampling (Xie et al.,
-2023) as DataFrame algebra.
+"""DSIR importance weights — the weighting half of Data Selection via
+Importance Resampling (Xie et al., 2023) as DataFrame algebra.
 
-The modern pretraining-data curation recipe: given a small TARGET
-corpus (the distribution you want — e.g. Wikipedia+books) and a huge
-RAW corpus (web crawl), weight every raw document by how much more
-likely its hashed-n-gram bag is under the target distribution than
-under the raw distribution, then resample without replacement with
-probability ∝ exp(weight) via the Gumbel top-k trick.
+Given a small TARGET corpus (the distribution you want — e.g.
+Wikipedia+books) and a huge RAW corpus (web crawl), weight every raw
+document by how much more likely its hashed-n-gram bag is under the
+target distribution than under the raw distribution. Resampling on
+those weights is left to the caller.
 
 Pipeline shape (every stage a standard Spark shape):
 
@@ -20,20 +19,12 @@ Pipeline shape (every stage a standard Spark shape):
 3. ``dsir_log_weights``: one broadcast equi-join of the per-doc
    bucket counts against the log-ratio table + map-side-combined
    per-doc sum — ONE shuffle over data keyed by doc id.
-4. ``dsir_select``: deterministic Gumbel perturbation
-   g = −ln(−ln(u)) with u derived from ``xxhash64(id, salt)`` —
-   partition-independent, replayable — and a global top-k. For
-   corpus-scale k prefer the threshold form (keep rows whose
-   perturbed weight clears a quantile) over a full sort; this
-   implementation uses an exact TakeOrdered-style limit, which
-   Spark executes as per-partition top-k + driver merge of k heads.
 
 Reference parity note: the reference engine
 (rubentalstra/Trial-Submission-Studio) has no data-selection
 surface; this extends the sampling/quality family (SURVEY.md §2.13)
 beside the bigram-LM perplexity filter (`lm.py` — CCNet's recipe;
-DSIR is its importance-sampling successor) and the trainable quality
-classifier (`qualitymodel.py`).
+DSIR is its importance-sampling successor).
 """
 
 from __future__ import annotations
@@ -47,7 +38,6 @@ __all__ = [
     "hashed_ngram_counts",
     "fit_bucket_distribution",
     "dsir_log_weights",
-    "dsir_select",
 ]
 
 
@@ -170,33 +160,3 @@ def dsir_log_weights(
         .groupBy(id_col)
         .agg(F.sum(F.col("n") * F.col("log_ratio")).alias("log_weight"))
     )
-
-
-def dsir_select(
-    raw: DataFrame,
-    target: DataFrame,
-    id_col: str,
-    text_col: str,
-    k: int,
-    buckets: int = 10_000,
-    smoothing: float = 1.0,
-    salt: int = 0,
-    temperature: float = 1.0,
-) -> DataFrame:
-    """Select ``k`` raw documents by Gumbel top-k over the DSIR log
-    weights — sampling WITHOUT replacement with probability
-    ∝ exp(log_weight / temperature), deterministic in (id, salt).
-    Returns the selected raw rows + ``log_weight``."""
-    if k <= 0:
-        raise ValueError("k must be positive")
-    w = dsir_log_weights(raw, target, id_col, text_col, buckets, smoothing)
-    # u in (0,1) from the id hash; g = -ln(-ln u) is standard Gumbel
-    m = 1 << 30
-    u = (F.pmod(F.xxhash64(F.col(id_col), F.lit(salt)), F.lit(m)) + 0.5) / m
-    key = F.col("log_weight") / temperature - F.log(-F.log(u))
-    picked = (
-        w.select(id_col, "log_weight", key.alias("__gumbel"))
-        .orderBy(F.desc("__gumbel"))
-        .limit(k)
-    )
-    return raw.join(picked.drop("__gumbel"), id_col)

@@ -25,9 +25,7 @@ per host, not URLs × URLs). Broadcast the rules table when it fits
 
 Reference parity note: the reference engine
 (rubentalstra/Trial-Submission-Studio) has no crawl surface; this
-extends the URL/WARC governance family (SURVEY.md §2.13) beside
-`operators/urls.py` (canonicalize/eTLD+1/blocklist) and
-`operators/graph.py` (PageRank).
+extends the crawl-governance family (SURVEY.md §2.13).
 """
 
 from __future__ import annotations

@@ -769,8 +769,8 @@ def pq_topk(
 def save_index(path: str, kind: str, data) -> None:
     """Persist an ANN index artifact (``kind`` ∈ ``ivf_centroids`` |
     ``pq_codebooks``) as one format-tagged JSON file, atomically
-    (write-then-rename — same commit discipline as the tokenizer's
-    `bpe.save_bpe` and `io/versioned.py`). Codes persisted by
+    (write-then-rename — same commit discipline as
+    `io/versioned.py`). Codes persisted by
     :func:`pq_encode` are only comparable under the codebooks that
     produced them, so the artifact file IS the index's identity —
     retraining without re-encoding corrupts every stored code.

@@ -68,8 +68,8 @@ def encoding_stats(
       embedding rows);
     - ``n_docs`` / ``n_tokens`` / ``n_chars`` — the raw masses.
 
-    ``tokens_col`` is any array column — `bpe.bpe_encode` pieces,
-    `bpe.bpe_encode_ids` / `unigram.unigram_encode_ids` ids, or the
+    ``tokens_col`` is any array column — `unigram.unigram_encode`
+    pieces, `unigram.unigram_encode_ids` ids, or the
     lexical :func:`words` output — so the same report compares
     tokenizers by swapping the encode stage only. Grouped by
     ``strata_col`` when given (per-language fertility is where

@@ -3,13 +3,13 @@ EM training + Viterbi encoding.
 
 The second of the two dominant subword algorithms (Kudo 2018,
 "Subword Regularization"; the tokenizer behind T5/ALBERT/XLNet and
-SentencePiece's default), complementing `operators/bpe.py`
-(Sennrich BPE). Where BPE greedily merges pairs, the unigram model
-starts from a LARGE seed piece inventory and alternates EM fitting
-with pruning until the target vocabulary remains; encoding is the
-Viterbi-best segmentation under the fitted piece log-probabilities.
+SentencePiece's default). Where BPE (Sennrich 2016) greedily merges
+pairs, the unigram model starts from a LARGE seed piece inventory
+and alternates EM fitting with pruning until the target vocabulary
+remains; encoding is the Viterbi-best segmentation under the fitted
+piece log-probabilities.
 
-Scale shape (same discipline as bpe.py — the module this mirrors):
+Scale shape:
 
 - The ONLY corpus-sized stage is the shared word histogram
   (`bpe.word_histogram`: one codegen explode + groupBy, map-side
@@ -24,10 +24,10 @@ Scale shape (same discipline as bpe.py — the module this mirrors):
 - Pruning is model-sized: the alternative-segmentation loss of each
   piece is a driver loop over the piece inventory (each an O(len²)
   Viterbi on a ≤16-char string), the same "driver handles the
-  megabyte-scale table" design as bpe._learn_merges.
+  megabyte-scale table" design as single-node tokenizer trainers.
 - Encoding broadcasts the final model and memoizes per distinct word
   in each Arrow batch (Zipf: the memo absorbs almost all rows) —
-  a designated Python op, same status as BPE encode.
+  a designated Python op (no JVM expression does Viterbi).
 
 Determinism: expected counts are order-independent sums of pure
 per-word functions (float64 accumulation in a fixed per-word order;
@@ -38,7 +38,7 @@ first piece, then lexicographic — so trained vocab and encodings are
 reproducible across partitionings and cluster sizes.
 
 Pieces never cross pre-token (word) boundaries — the word-level
-convention of bpe.py, which keeps the corpus-sized stage a plain
+convention of the shared pre-tokenizer (`operators/bpe.py`), which keeps the corpus-sized stage a plain
 histogram. (SentencePiece's ▁-joined cross-space pieces are a
 documented deviation; within-word inventories are what its
 `--split_by_whitespace=true` default produces anyway.)
@@ -280,8 +280,8 @@ def train_unigram_lm(
     Rounds of (``em_iters`` × distributed E-step + renormalize) then
     prune to ``max(vocab_size, current · shrink_factor)`` repeat
     until the inventory fits ``vocab_size``. ``max_words`` bounds
-    the histogram like bpe.train_bpe (Zipf truncation, coverage
-    reported in stats)."""
+    the histogram to its most frequent words (Zipf truncation,
+    coverage reported in stats)."""
     if vocab_size < 10:
         raise ValueError("vocab_size must be >= 10")
     if not 0.0 < shrink_factor < 1.0:
@@ -339,8 +339,7 @@ def train_unigram_lm(
 
 def unigram_vocab_df(spark, model: dict) -> DataFrame:
     """(piece_id, piece, logprob) table — ids assigned by (logprob
-    desc, piece asc), deterministic; persist beside the corpus like
-    bpe_vocab."""
+    desc, piece asc), deterministic; persist beside the corpus."""
     items = sorted(model["logp"].items(), key=lambda t: (-t[1], t[0]))
     return spark.createDataFrame(
         [(i, p, lp) for i, (p, lp) in enumerate(items)],
@@ -366,8 +365,7 @@ def unigram_encode_ids(
     """Append ``out_col`` (array<long>): Viterbi pieces mapped
     through :func:`unigram_ids`; pieces outside the vocabulary (the
     UNK single-char fallback on unseen bytes) emit ``unk_id``. Same
-    Arrow-batched memoized kernel shape as :func:`unigram_encode`
-    and `bpe.bpe_encode_ids`."""
+    Arrow-batched memoized kernel shape as :func:`unigram_encode`."""
     logp = dict(model["logp"])
     ml = int(model["max_piece_len"])
     lower = bool(model.get("lowercase", False))

@@ -46,8 +46,12 @@ def get_spark(
       per warm run of the 2-domain test study, 117 per warm perfbench
       ``study_small`` op on local[1]. With 2000 entries both compile
       0. The conf is static (read once, when the session starts).
+
+    ``SPARK_GRAFT_CPUS`` sets the local core count; it defaults to the
+    CPUs this process may run on, so an unset variable never starts
+    more task threads than the host gives it.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
     if master is None:
         master = f"local[{cpus}]"
     if shuffle_partitions is None:
@@ -82,12 +86,8 @@ def get_spark(
         # WITH BYTES, not with slots: a 7 MB CSV is ~8 tasks at any
         # core count, a 500 MB CSV still reaches full width. The
         # bytes-per-core term, not this floor, governs real
-        # deployments (any file > cores MB). Env-parameterized for
-        # cluster tuning.
-        .config(
-            "spark.sql.files.openCostInBytes",
-            os.environ.get("SPARK_GRAFT_OPEN_COST", str(1 << 20)),
-        )
+        # deployments (any file > cores MB).
+        .config("spark.sql.files.openCostInBytes", "1m")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.codegen.cache.maxEntries", "2000")
         .config("spark.sql.session.timeZone", "UTC")

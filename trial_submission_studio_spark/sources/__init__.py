@@ -1,8 +1,1 @@
-from trial_submission_studio_spark.sources.tables import TABLE_NAMES, load_table, load_tables  # noqa: F401
-from trial_submission_studio_spark.sources.csv_reader import read_source_csv  # noqa: F401
-from trial_submission_studio_spark.sources.jsonl import (  # noqa: F401
-    read_jsonl,
-    read_jsonl_stream,
-    split_quarantine,
-    write_jsonl,
-)
+"""Ingest: EDC CSV reading, items metadata and small literal frames."""

@@ -25,7 +25,7 @@ Reference semantics reproduced (SURVEY.md §2.1 S1–S4):
 
 Scale note: CSV is the *compatibility* ingest path (the reference caps
 it at 500 MB per file); the engine's native at-scale source is
-parquet via :mod:`~trial_submission_studio_spark.sources.tables`.
+parquet.
 """
 
 from __future__ import annotations

@@ -1,1 +1,1 @@
-"""Structured Streaming ingest, windowed aggregation and as-of joins."""
+"""Structured Streaming windowed aggregation."""
